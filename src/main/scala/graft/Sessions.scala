@@ -20,33 +20,7 @@ object Sessions {
       .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      // Coalesce small shuffle reads to the ADVISORY SIZE instead of
-      // preserving parallelism (guide §2.2 "fewer, larger reduce
-      // partitions" / §9): with the default parallelism-first rule a
-      // KB-sized shuffle still fans out one task per core, and the
-      // per-task constant cost dominates every small stage — the r17
-      // scaling record measured 207/250 queries FASTER at 8 cores
-      // than 32 for exactly this reason. Size-based coalescing is
-      // also the documented recommendation for busy production
-      // clusters, and it is scale-ADAPTIVE by construction: partitions
-      // grow back automatically once post-shuffle bytes approach the
-      // 64 MB advisory target (the 100 TB case), so nothing here is
-      // tuned to the local core count. Env-overridable for A/B runs.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_AQE_PARALLELISM_FIRST", "true"))
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      // Streaming state store provider, env-overridable for A/B runs
-      // (guide §5): RocksDB
-      // (org.apache.spark.sql.execution.streaming.state.
-      // RocksDBStateStoreProvider) was measured against the default
-      // HDFS-backed provider on the 5 heaviest stateful streams at
-      // sf0.1 — see OPTIMIZATION_r18.md for the numbers and the
-      // decision; the state here is dimension-bounded (≤600 k keys),
-      // where the in-memory map wins, while a deployment with
-      // state >> heap sets the RocksDB provider via this knob.
-      .config("spark.sql.streaming.stateStore.providerClass",
-        sys.env.getOrElse("SPARK_GRAFT_STATE_PROVIDER",
-          "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"))
       .config("spark.sql.autoBroadcastJoinThreshold", (64 * 1024 * 1024).toString)
       // HotSpot refuses to JIT methods over 8000 bytecodes
       // (-XX:DontCompileHugeMethods), so a whole-stage-codegen method
@@ -58,6 +32,28 @@ object Sessions {
       // round-7 propagation_table stage break solved one instance by
       // hand; this is the general guard.
       .config("spark.sql.codegen.hugeMethodLimit", "8000")
+      // Compile each generated class once per JVM. Spark's codegen
+      // cache holds 100 classes by default, and it keys each entry by
+      // the thread's class loader as well as the source; a bench pass
+      // cycles through more classes than that in a fixed order, so the
+      // LRU missed almost every time (a warm corpus_curation pass
+      // recompiled 165 classes, a gm_flatfile pass 71, one warm pass
+      // over all 250 queries at sf0.001 5,494). One registry pass
+      // compiles 3,181 distinct classes and the families' warmCaches
+      // 311 more; about 177 change from run to run, and an LRU of 4096
+      // evicts those first. Each cached class holds about 32 KB of
+      // old-generation heap (739 -> 850 MB with the whole registry
+      // resident).
+      .config("spark.sql.codegen.cache.maxEntries", "4096")
+      // Every writeStream.start() clones the session, and with artifact
+      // isolation on each clone gets a fresh class loader — so each
+      // bounded stream run recompiled all of its classes however large
+      // the cache (16 per streaming_db_upsert run, 5 per
+      // streaming_corpus_filter run). graft never adds artifacts to a
+      // session, so there is nothing to isolate.
+      // Both settings are static: the first session in a JVM fixes
+      // them, and a later builder's values are ignored.
+      .config("spark.sql.artifact.isolation.enabled", "false")
       .config("spark.sql.session.timeZone", "UTC")
       // The ingest width boost (Tables.rd) adds a round-robin exchange
       // on under-split scans; by default Spark locally sorts every row

@@ -1060,6 +1060,7 @@ object GeoOps {
       val inX = udf((id: Long) => xB.value.contains(id))
       val wave2 = flagged(pairs.filter(inX(col("evid"))))
         .queryExecution.toRdd.map(_.copy()).collect()
+      xB.destroy()
       ingest(wave2, trackX = false)
       lap("wave2", wave2.length)
     }

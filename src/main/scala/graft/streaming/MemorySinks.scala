@@ -3,6 +3,7 @@ package graft.streaming
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.graftbridge.StateStoreBridge
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Per-run result naming with garbage collection for the streaming
@@ -74,7 +75,12 @@ object MemorySinks {
     * Every call site here consumes the frame before re-invoking, and
     * the same operator must not run concurrently on one prefix (the
     * per-prefix live map would interleave); a service wanting
-    * overlapping runs keeps its own naming + release discipline. */
+    * overlapping runs keeps its own naming + release discipline.
+    *
+    * The finished run's state-store providers are unloaded before
+    * returning: its state is already committed to the checkpoint, and
+    * left loaded it would sit in the heap until the maintenance task's
+    * idle sweep. */
   def runAvailableNow(s: SparkSession, stream: DataFrame, prefix: String,
                       seq: AtomicInteger,
                       mode: String = "append"): (StreamingQuery, DataFrame) = {
@@ -98,6 +104,7 @@ object MemorySinks {
       .outputMode(mode).trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
+    StateStoreBridge.unload(q)
     val out = batches.synchronized {
       if (batches.isEmpty)
         s.createDataFrame(s.sparkContext.emptyRDD[Row], stream.schema)

@@ -4,7 +4,8 @@ import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.graftbridge.StateStoreBridge
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 
 /** Streaming keep-latest upsert — the CDC / materialized-latest-view
   * twin of [[graft.operators.MergeOps.dbUpsert]]: versioned updates
@@ -84,10 +85,10 @@ object StreamingUpsert {
     * offset log with every key's latest version rehydrated — replayed
     * input re-emits NOTHING (the monotone guard sees equal versions),
     * which is the idempotence a CDC changelog needs (pinned by the
-    * restart spec). */
+    * restart spec). Returns the finished query handle. */
   def runFileSink(s: SparkSession, srcGlob: String, sinkDir: String,
                   ckptDir: String,
-                  schema: org.apache.spark.sql.types.StructType): Unit = {
+                  schema: org.apache.spark.sql.types.StructType): StreamingQuery = {
     val q = upsertStream(s, srcGlob, schema).writeStream
       .format("parquet")
       .option("path", sinkDir)
@@ -95,6 +96,8 @@ object StreamingUpsert {
       .outputMode("append").trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
+    StateStoreBridge.unload(q)
+    q
   }
 
   def run(s: SparkSession, dir: String): DataFrame = {

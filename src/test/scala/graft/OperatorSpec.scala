@@ -2770,6 +2770,59 @@ class OperatorSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(got.size == got.map(_._1).size, "duplicate keys in the changelog")
   }
 
+  /** Each generated class compiles once per JVM (Sessions.builder's
+    * codegen cache size and shared class loader): a rerun of the batch
+    * upsert, and of its stream twin — whose every start() clones the
+    * session — must find all of its classes in Spark's codegen cache. */
+  test("a rerun of db_upsert or streaming_db_upsert compiles no new classes") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    def compiles(name: String): Long = {
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      SparkEntry.queries(name)(spark, Sf).queryExecution.toRdd.count()
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    }
+    for (name <- Seq("db_upsert", "streaming_db_upsert")) {
+      compiles(name)
+      val again = compiles(name)
+      assert(again == 0, s"the second $name run compiled $again classes")
+    }
+  }
+
+  /** A finished bounded stream leaves no state-store provider loaded:
+    * the providers are unloaded when the run ends, not by the
+    * maintenance task's idle sweep a minute later. */
+  test("finished bounded streams unload their state-store providers") {
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.graftbridge.StateStoreBridge
+    import org.apache.spark.sql.streaming.Trigger
+    val base = java.nio.file.Files.createTempDirectory("graft_unload").toString
+    val li = spark.read.parquet(s"$Sf/lineitem.parquet")
+    li.write.parquet(s"$base/src/part1.parquet")
+    def counts = spark.readStream.schema(li.schema).parquet(s"$base/src/*.parquet")
+      .groupBy(col("l_suppkey")).count()
+    // without the unload the providers stay loaded after termination
+    val plain = counts.writeStream.format("noop").outputMode("complete")
+      .option("checkpointLocation", s"$base/ckpt_plain")
+      .trigger(Trigger.AvailableNow()).start()
+    plain.awaitTermination()
+    val plainIds = StateStoreBridge.providerIds(plain)
+    assert(plainIds.nonEmpty && plainIds.forall(StateStoreBridge.isLoaded))
+    StateStoreBridge.unload(plain)
+    assert(!plainIds.exists(StateStoreBridge.isLoaded))
+    val runs = Seq(
+      graft.streaming.MemorySinks.runAvailableNow(spark, counts, "unload_spec",
+        new java.util.concurrent.atomic.AtomicInteger(0), "complete")._1,
+      graft.streaming.StreamingUpsert.runFileSink(spark, s"$base/src/*.parquet",
+        s"$base/sink", s"$base/ckpt_upsert", li.schema))
+    for (q <- runs) {
+      val ids = StateStoreBridge.providerIds(q)
+      assert(ids.nonEmpty, s"${q.name}: no stateful operator found in the last plan")
+      assert(!ids.exists(StateStoreBridge.isLoaded),
+        s"${q.name}: ${ids.count(StateStoreBridge.isLoaded)} providers still loaded")
+    }
+    graft.streaming.MemorySinks.clearAll()
+  }
+
   test("im_melt round-trips the pivot losslessly on defined cells") {
     import org.apache.spark.sql.functions._
     val melted = MergeOps.imMelt(spark, Sf).collect()
