@@ -250,10 +250,7 @@ object Bench {
     // was unexplainable because attribution depended on run order).
     val setupT0 = System.nanoTime()
     try {
-      graft.operators.TextOps.warmCaches(spark, sfDir)
-      graft.operators.AnnOps.warmCaches(spark, sfDir)
-      graft.operators.GeoOps.warmCaches(spark, sfDir)
-      graft.operators.MixOps.warmCaches(spark, sfDir)
+      graft.operators.Caches.warmAll(spark, sfDir)
     } catch { case e: Throwable =>
       System.err.println(s"SETUP FAILURE: ${e.getClass.getSimpleName}: ${e.getMessage}")
     }

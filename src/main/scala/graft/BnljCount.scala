@@ -5,10 +5,7 @@ object BnljCount {
     val dir = if (args.length > 0) args(0) else "/root/testdata/sf0.01"
     val spark = Sessions.local()
     spark.sparkContext.setLogLevel("ERROR")
-    graft.operators.TextOps.warmCaches(spark, dir)
-    graft.operators.AnnOps.warmCaches(spark, dir)
-    graft.operators.GeoOps.warmCaches(spark, dir)
-    graft.operators.MixOps.warmCaches(spark, dir)
+    graft.operators.Caches.warmAll(spark, dir)
     for (name <- SparkEntry.queries.keys.toSeq.sorted if !name.startsWith("streaming_")) {
       val plan = SparkEntry.queries(name)(spark, dir).queryExecution.executedPlan.toString
       val n = "BroadcastNestedLoopJoin".r.findAllIn(plan).length

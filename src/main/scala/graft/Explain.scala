@@ -12,10 +12,7 @@ object Explain {
     // plan text is deterministic (the plan-audit/spec convention): a
     // cold cache's first consumer prints the cache's BUILD inside its
     // own plan
-    graft.operators.TextOps.warmCaches(spark, dir)
-    graft.operators.AnnOps.warmCaches(spark, dir)
-    graft.operators.GeoOps.warmCaches(spark, dir)
-    graft.operators.MixOps.warmCaches(spark, dir)
+    graft.operators.Caches.warmAll(spark, dir)
     val sel = if (name == "all") SparkEntry.queries else SparkEntry.queries.filter(_._1 == name)
     sel.toSeq.sortBy(_._1).foreach { case (k, fn) =>
       println(s"==== $k ====")

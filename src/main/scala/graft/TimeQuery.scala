@@ -24,10 +24,7 @@ object TimeQuery {
       fn(spark, sfDir).queryExecution.toRdd.count()
       (System.nanoTime() - t0) / 1e9
     }
-    graft.operators.TextOps.warmCaches(spark, sfDir)
-    graft.operators.AnnOps.warmCaches(spark, sfDir)
-    graft.operators.GeoOps.warmCaches(spark, sfDir)
-    graft.operators.MixOps.warmCaches(spark, sfDir)
+    graft.operators.Caches.warmAll(spark, sfDir)
     for (n <- names) {
       val fn = SparkEntry.queries(n)
       var prev = time(fn); var cur = prev; var i = 1

@@ -88,8 +88,7 @@ object AnnOps {
     * brute cross) at every reference, inflating the audited
     * BNLJ plan-text counts with copies of a build that runs once. */
   private def bruteTopkCached(s: SparkSession, d: String): DataFrame =
-    bruteTopkCache.computeIfAbsent(d, _ =>
-      annCosineTopk(s, d).localCheckpoint(true))
+    bruteTopkCache.get(d)(annCosineTopk(s, d).localCheckpoint(true))
 
   /** The brute-force ground-truth top-K, persisted once per data dir
     * (r17 optimization round — the walkCache rule applied to the eval
@@ -98,9 +97,8 @@ object AnnOps {
     * `ivf_probe_sweep` and `graph_walk_sweep` each re-paid the full
     * corpus×queries cross + rank window per call (0.6-1.2 s each at
     * sf0.1). A production eval harness persists its ground-truth
-    * pairs for exactly this reason. Released by [[clearKnnCache]]. */
-  private val bruteTopkCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+    * pairs for exactly this reason. Released by [[Caches.clearAll]]. */
+  private val bruteTopkCache = new Caches.PerDir[DataFrame]("AnnOps.bruteTopk", Seq(_))
 
   /** Sign-bit bucket id from `n` hyperplane projections starting at
     * global plane index `off`; the plane is a foldable literal array,
@@ -276,14 +274,13 @@ object AnnOps {
     * materialization (charged to the bench's named setup), four
     * narrow columns. Parameterized nCells ≠ [[NCells]] calls (the
     * tuning specs) still assign fresh. Released by
-    * [[clearKnnCache]]. */
+    * [[Caches.clearAll]]. */
   private[operators] def assignedCells(s: SparkSession, d: String): DataFrame =
-    cellAssignCache.computeIfAbsent(d, _ =>
+    cellAssignCache.get(d)(
       assignCells(vectors(s, d), centroidTable(s, NCells))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 
-  private val cellAssignCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+  private val cellAssignCache = new Caches.PerDir[DataFrame]("AnnOps.cellAssign", Seq(_))
 
   /** IVF ANN: vectors partition into centroid cells; each query scans
     * only its nProbe closest cells — the coarse-quantizer analogue of
@@ -364,7 +361,7 @@ object AnnOps {
     * whose every bucket was capped (or that collide with nothing)
     * simply have no rows — a kNN graph over LSH is sparse by design. */
   def annKnnGraph(s: SparkSession, d: String): DataFrame =
-    knnCache.computeIfAbsent(d, _ => buildKnnGraph(s, d)
+    knnCache.get(d)(buildKnnGraph(s, d)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 
   /** The kNN edge list, persisted once per data dir: the graph build
@@ -376,43 +373,13 @@ object AnnOps {
     * disease, same cure: one materialization of a ≤ KnnK·N-row
     * projection feeds them all (a production pipeline persists its
     * kNN index as a TABLE for exactly this reason). Lifetime mirrors
-    * the signature cache; [[clearKnnCache]] between corpus versions. */
-  private val knnCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
-  def clearKnnCache(): Unit = {
-    knnCache.values.forEach(df => { df.unpersist(); () })
-    knnCache.clear()
-    // labels derive from the graph — drop them together
-    clusterCache.values.forEach(df => { df.unpersist(); () })
-    clusterCache.clear()
-    // the NN-descent-refined edge table and the persisted walk
-    // results derive from the graph too
-    refineCache.values.forEach(df => { df.unpersist(); () })
-    refineCache.clear()
-    walkCache.values.forEach(df => { df.unpersist(); () })
-    walkCache.clear()
-    // the coarse-quantizer assignment table (the persisted inverted
-    // file) is per-corpus state like the rest
-    cellAssignCache.values.forEach(df => { df.unpersist(); () })
-    cellAssignCache.clear()
-    // the brute-force ground-truth table is per-corpus eval state
-    // (checkpointed, so release via the LogicalRDD handle)
-    bruteTopkCache.values.forEach(Caches.releaseCheckpointed(_))
-    bruteTopkCache.clear()
-    // the PQ-encoded corpus is a per-corpus index artifact like the
-    // inverted file
-    pqReconCache.values.forEach(Caches.releaseCheckpointed(_))
-    pqReconCache.clear()
-    // GraphOps' canonical edge table derives from the graph too
-    GraphOps.clearEdgeCache()
-  }
+    * the signature cache; [[Caches.clearAll]] between corpus versions. */
+  private val knnCache = new Caches.PerDir[DataFrame]("AnnOps.knn", Seq(_))
 
   /** Cluster labels for the default tail threshold, cached per dir:
     * `diversity_sample` re-runs the whole propagation otherwise. The
     * spec's forced-path variants (explicit tailMax) bypass this. */
-  private val clusterCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+  private val clusterCache = new Caches.PerDir[DataFrame]("AnnOps.cluster", Seq(_))
 
   /** Warm the shared ANN index tables (kNN edges + cluster labels +
     * the refined edge table + the two persisted walk results + the
@@ -495,10 +462,10 @@ object AnnOps {
     * corpus-quadratic; each round's scored set is pinned with a lazy
     * localCheckpoint so the unrolled loop never re-derives earlier
     * rounds (the kmeans_fit rule). Cached per dir like the graph
-    * itself ([[clearKnnCache]]); `ann_recall_report`'s 7th variant
+    * itself ([[Caches.clearAll]]); `ann_recall_report`'s 7th variant
     * walks THIS graph. */
   def knnRefine(s: SparkSession, d: String): DataFrame =
-    refineCache.computeIfAbsent(d, _ => buildKnnRefine(s, d)
+    refineCache.get(d)(buildKnnRefine(s, d)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 
   /** Refined serving-graph degree, 4·[[KnnK]] = 16 — the HNSW M-class
@@ -527,8 +494,7 @@ object AnnOps {
   private[operators] def descentKAt(r: Int): Int =
     math.min(RefineK, KnnK << r)
 
-  private val refineCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+  private val refineCache = new Caches.PerDir[DataFrame]("AnnOps.refine", Seq(_))
 
   private def buildKnnRefine(s: SparkSession, d: String): DataFrame = {
     val v = vectors(s, d)
@@ -604,7 +570,7 @@ object AnnOps {
     * call through r15 (6.19 s vs the ~4.5 s builder-measured cost)
     * while the other index legs rode cached tables. K·|Q| rows. */
   def annGraphSearch(s: SparkSession, d: String): DataFrame =
-    topKCut(walkCache.computeIfAbsent(d + "|base", _ =>
+    topKCut(walkCache.get(d + "|base")(
       walkVisitedOver(s, d, annKnnGraph(s, d).select(col("src"), col("dst")),
         GraphSeeds, GraphBeam, WalkRounds)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)))
@@ -621,7 +587,7 @@ object AnnOps {
     * the one paid walk: the cached frame is ≤ |Q|·(seeds +
     * rounds·beam·K) rows, and the cut is a window over it. */
   private[operators] def refinedWalkVisited(s: SparkSession, d: String): DataFrame =
-    walkCache.computeIfAbsent(d + "|refined", _ =>
+    walkCache.get(d + "|refined")(
       walkVisitedOver(s, d, knnRefine(s, d).select(col("src"), col("dst")),
         GraphSeeds, GraphBeam, WalkRounds)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
@@ -632,8 +598,7 @@ object AnnOps {
       .select("q_id", "vec_id", "rnk", "cosine")
 
   /** Per-(dir, graph-variant) persisted walk VISITED sets. */
-  private val walkCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+  private val walkCache = new Caches.PerDir[DataFrame]("AnnOps.walk", Seq(_))
 
   /** Parameterized walk ([[annGraphSearch]] = the gate-pinned
     * constants): seeds/beam/rounds are the serving-time recall/cost
@@ -1117,7 +1082,7 @@ object AnnOps {
     * broadcast codebook, per-(vec, subspace) partial-agg max_by, one
     * per-vec sorted-collect; zero-norm reconstructions dropped). */
   private def pqRecon(s: SparkSession, d: String): DataFrame =
-    pqReconCache.computeIfAbsent(d, _ => {
+    pqReconCache.get(d) {
       val e = Tables.embeddings(s, d)
         .select(col("vec_id"), col("embedding").cast("array<double>").as("emb"))
       val assigned = e.crossJoin(broadcast(pqCodebook(s)))
@@ -1133,7 +1098,7 @@ object AnnOps {
         .withColumn("rnrm", sqrt(vecDot("recon", "recon")))
         .filter(col("rnrm") > 0)
         .localCheckpoint(true) // the bruteTopkCache plan-text rule
-    })
+    }
 
   /** The PQ-encoded corpus (vec_id, reconstruction, norm), persisted
     * once per data dir (r17 optimization round): the encode pass —
@@ -1141,9 +1106,8 @@ object AnnOps {
     * is the INDEX BUILD of the PQ family, and `ann_pq_topk` and
     * `ann_ivf_pq_topk` each re-ran it per call (~0.6-1.2 s each at
     * sf0.1). A production PQ/IVF-PQ deployment stores exactly this
-    * table (the FAISS index file). Released by [[clearKnnCache]]. */
-  private val pqReconCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+    * table (the FAISS index file). Released by [[Caches.clearAll]]. */
+  private val pqReconCache = new Caches.PerDir[DataFrame]("AnnOps.pqRecon", Seq(_))
 
   def annPqTopk(s: SparkSession, d: String): DataFrame = {
     pqRecon(s, d)
@@ -1421,7 +1385,7 @@ object AnnOps {
     * near-dup chain. The DuckDB twin is a recursive-CTE transitive
     * closure over the same kNN-graph SQL, symmetrized the same way. */
   def semanticClusters(s: SparkSession, d: String): DataFrame =
-    clusterCache.computeIfAbsent(d, _ =>
+    clusterCache.get(d)(
       semanticClusters(s, d, SemEdgeTailMax)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 

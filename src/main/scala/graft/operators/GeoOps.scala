@@ -633,24 +633,8 @@ object GeoOps {
     * rows, scanned many times per labeling run (dependency build,
     * per-round claim joins, the chunked tail's fused lookups, final
     * claim resolution) — and identical across runs on the same dir.
-    * Released by [[clearAbwdPairCache]]. */
-  private val abwdPairCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
-  def clearAbwdPairCache(): Unit = {
-    // the cached entries are eager local checkpoints: Dataset.unpersist
-    // does not reach their RDD-level blocks, so release them through
-    // the LogicalRDD handle — otherwise per-dir entries hold executor
-    // storage until the ContextCleaner happens to GC them
-    def release(df: DataFrame): Unit =
-      df.queryExecution.analyzed match {
-        case lr: org.apache.spark.sql.execution.LogicalRDD =>
-          lr.rdd.unpersist(false); ()
-        case _ => ()
-      }
-    abwdPairCache.values.forEach(release(_))
-    abwdPairCache.clear()
-  }
+    * Released by [[Caches.clearAll]]. */
+  private val abwdPairCache = new Caches.PerDir[DataFrame]("GeoOps.abwdPair", Seq(_))
 
   /** Materialize the per-dir ABWD pair table — the bench's named
     * SETUP step (the TextOps/AnnOps warmCaches pattern): the build is
@@ -666,7 +650,7 @@ object GeoOps {
   }
 
   private def abwdPairsCached(s: SparkSession, d: String): DataFrame =
-    abwdPairCache.computeIfAbsent(d, _ =>
+    abwdPairCache.get(d)(
       abwdPairs(s, d).select("evid", "mag", "m_evid", "m_mag").localCheckpoint(true))
 
   def aftershockClusters(s: SparkSession, d: String): DataFrame =

@@ -28,7 +28,7 @@ object GraphOps {
     * The kNN rank cut is per-direction, so an edge can survive in one
     * direction only — `least/greatest` + distinct canonicalizes. */
   private def canonEdges(s: SparkSession, d: String): DataFrame =
-    edgeCache.computeIfAbsent(d, _ =>
+    edgeCache.get(d)(
       AnnOps.annKnnGraph(s, d).filter(col("cosine") >= AnnOps.SemClusterCosT)
         .select(least(col("src"), col("dst")).as("u"),
           greatest(col("src"), col("dst")).as("v"))
@@ -42,20 +42,7 @@ object GraphOps {
     * evaluated twice). The edge list is O(N·K) rows — orders of
     * magnitude smaller than the corpus, exactly what a production
     * graph job persists as its edge table. */
-  private val edgeCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
-  /** Release the per-dir edge tables — called by
-    * [[AnnOps.clearKnnCache]] (the edges derive from the kNN graph,
-    * so the two caches drop together on a corpus refresh). */
-  private[operators] def clearEdgeCache(): Unit = {
-    edgeCache.values.forEach(df => { df.unpersist(); () })
-    edgeCache.clear()
-    // the dst-clustered symmetrized view derives from the same edges
-    // (checkpointed — LogicalRDD release)
-    symEdgeCache.values.forEach(Caches.releaseCheckpointed(_))
-    symEdgeCache.clear()
-  }
+  private val edgeCache = new Caches.PerDir[DataFrame]("GraphOps.edge", Seq(_))
 
   /** Symmetrized directed edges (both directions) — PageRank's view,
     * persisted per dir HASH-PARTITIONED ON dst (r17 optimization
@@ -70,7 +57,7 @@ object GraphOps {
     * would lose), and the contribution shuffle by dst is the one this
     * layout pre-pays once at build. */
   private def symEdges(s: SparkSession, d: String): DataFrame =
-    symEdgeCache.computeIfAbsent(d, _ => {
+    symEdgeCache.get(d) {
       val e = canonEdges(s, d)
       e.select(col("u").as("src"), col("v").as("dst"))
         .union(e.select(col("v").as("src"), col("u").as("dst")))
@@ -79,10 +66,9 @@ object GraphOps {
         // the dst hash-partitioning on the LogicalRDD, so downstream
         // per-iteration aggregates see their distribution satisfied
         .localCheckpoint(true)
-    })
+    }
 
-  private val symEdgeCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+  private val symEdgeCache = new Caches.PerDir[DataFrame]("GraphOps.symEdge", Seq(_))
 
   /** Per-vertex TRIANGLE counts on the thresholded kNN graph. The
     * classic distributed formulation: with canonical a<b<c ordering
@@ -163,6 +149,9 @@ object GraphOps {
     pagerankFull(s, d, PrFullIters)
 
   def pagerankFull(s: SparkSession, d: String, iters: Int): DataFrame = {
+    // the loop's last checkpoint is the result: with no round there is
+    // none, and the result would read the released ids table
+    require(iters >= 1, s"pagerankFull needs iters >= 1, got $iters")
     // ids joins back into EVERY iteration — materialize the one-column
     // projection once per call instead of re-scanning the corpus 8×
     val ids = Tables.embeddings(s, d).select(col("vec_id"))
@@ -189,7 +178,7 @@ object GraphOps {
     // inputs are never re-read. Without this every call parked extra
     // persisted blocks until the ContextCleaner happened to GC them
     // (r17 advice item).
-    (Seq(ids, deg) ++ scratch.dropRight(1)).foreach(Caches.releaseCheckpointed)
+    (Seq(ids, deg) ++ scratch.dropRight(1)).foreach(Caches.release)
     r
   }
 

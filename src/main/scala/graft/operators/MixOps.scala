@@ -32,12 +32,11 @@ object MixOps {
     * sample tokenizes the corpus twice (the [[TextOps]] sigCache
     * disease; same cure). Four narrow columns. Lifetime mirrors the
     * signature cache: session-long for the gate/bench; a long-lived
-    * service calls [[clearTokenCache]] between corpus versions. */
-  private val tokCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+    * service calls [[Caches.clearAll]] between corpus versions. */
+  private val tokCache = new Caches.PerDir[DataFrame]("MixOps.tok", Seq(_))
 
   private[operators] def docTokens(s: SparkSession, d: String): DataFrame =
-    tokCache.computeIfAbsent(d, _ =>
+    tokCache.get(d)(
       TextOps.docs(s, d)
         .select(col("doc_id"), col("source"), col("lang"),
           size(col("tk")).cast("long").as("n_tokens"))
@@ -49,11 +48,6 @@ object MixOps {
   def warmCaches(s: SparkSession, d: String): Unit = {
     docTokens(s, d).queryExecution.toRdd.count()
     ()
-  }
-
-  def clearTokenCache(): Unit = {
-    tokCache.values.forEach(df => { df.unpersist(); () })
-    tokCache.clear()
   }
 
   /** Per-source token-budget allocation — the data-mixing step of a

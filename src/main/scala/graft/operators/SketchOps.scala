@@ -304,21 +304,11 @@ object SketchOps {
     * otherwise re-derives the events scan + register aggregation four
     * times (per-type estimates, the type dimension, and both arms of
     * the pair union); the table is ≤ HllM rows per type — constant
-    * memory at any corpus size. */
-  private val hllRegCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
-  /** Release the per-dir HLL register tables (the sigCache pattern's
-    * release path — [[graft.operators.TextOps.clearSignatureCache]]
-    * is the sibling): call between corpus versions of the SAME dir or
-    * the session serves stale registers and the persisted tables leak. */
-  def clearHllRegCache(): Unit = {
-    hllRegCache.values.forEach(df => { df.unpersist(); () })
-    hllRegCache.clear()
-  }
+    * memory at any corpus size. Released by [[Caches.clearAll]]. */
+  private val hllRegCache = new Caches.PerDir[DataFrame]("SketchOps.hllReg", Seq(_))
 
   private def hllRegs(s: SparkSession, d: String): DataFrame =
-    hllRegCache.computeIfAbsent(d, _ =>
+    hllRegCache.get(d)(
       Tables.events(s, d)
         .select(col("event_type"),
           Portable.h60(concat(lit("hll:"), col("user_id").cast("string"))).as("h"))

@@ -54,13 +54,12 @@ object TextOps {
     * smaller than the raw corpus. Lifetime: the entry (one per data
     * dir) stays cached for the session — intentional for the gate and
     * bench runs, which hit the whole dedup family; a long-lived
-    * service would call [[clearSignatureCache]] (or persist to a real
+    * service would call [[Caches.clearAll]] (or persist to a real
     * signature TABLE) between corpus versions. */
-  private val sigCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+  private val sigCache = new Caches.PerDir[DataFrame]("TextOps.sig", Seq(_))
 
   private def hashed(s: SparkSession, d: String): DataFrame =
-    sigCache.computeIfAbsent(d, _ =>
+    sigCache.get(d)(
       docs(s, d)
         .withColumn("sh", Portable.shingles(col("tk"), ShingleN))
         .select(col("doc_id"),
@@ -77,12 +76,11 @@ object TextOps {
     * one materialization (charged to the bench's named setup) feeds
     * them all. Three narrow columns, O(corpus tokens) rows — the
     * persisted hash store a production ExactSubstr pipeline keeps
-    * anyway. Released by [[clearSignatureCache]]. */
-  private val posCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+    * anyway. Released by [[Caches.clearAll]]. */
+  private val posCache = new Caches.PerDir[DataFrame]("TextOps.pos", Seq(_))
 
   private[graft] def positioned(s: SparkSession, d: String): DataFrame =
-    posCache.computeIfAbsent(d, _ =>
+    posCache.get(d)(
       docs(s, d)
         .select(col("doc_id"),
           posexplode(Portable.shingles(col("tk"), ShingleN)).as(Seq("pos", "sh")))
@@ -571,12 +569,11 @@ object TextOps {
     * one narrow (doc_id, cluster_id) row per doc, shared by
     * `dup_clusters`, `dup_cluster_sizes` and `dedup_keep_best` — each
     * otherwise re-runs the verified-pair join + union-find tail.
-    * Released by [[clearSignatureCache]]; warmed by [[warmCaches]]. */
-  private val dupLabelCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+    * Released by [[Caches.clearAll]]; warmed by [[warmCaches]]. */
+  private val dupLabelCache = new Caches.PerDir[DataFrame]("TextOps.dupLabel", Seq(_))
 
   def dupClusters(s: SparkSession, d: String): DataFrame =
-    dupLabelCache.computeIfAbsent(d, _ =>
+    dupLabelCache.get(d)(
       dupClusters(s, d, DupEdgeTailMax)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 
@@ -822,24 +819,6 @@ object TextOps {
     ()
   }
 
-  def clearSignatureCache(): Unit = {
-    sigCache.values.forEach(df => { df.unpersist(); () })
-    sigCache.clear()
-    segCache.values.forEach(df => { df.unpersist(); () })
-    segCache.clear()
-    dupLabelCache.values.forEach(df => { df.unpersist(); () })
-    dupLabelCache.clear()
-    posCache.values.forEach(df => { df.unpersist(); () })
-    posCache.clear()
-    // tokenizer fit tables are lazy localCheckpoints (RDD blocks
-    // reclaimed by the ContextCleaner once the maps drop the
-    // references) — BOTH fits, or a corpus swap would serve a stale
-    // vocabulary and a restarted session would hand out DataFrames
-    // bound to the stopped SparkContext
-    bpeFitCache.clear()
-    uniFitCache.clear()
-  }
-
   /** Per-(source, lang) corpus report — the monitoring surface a
     * training-data pipeline publishes per ingest batch: document and
     * token volumes, exact mean lengths (integer-sum ratios), and the
@@ -879,12 +858,11 @@ object TextOps {
     * same disease the minhash family had before [[hashed]]; same
     * cure). The cached projection is 3 narrow columns. Lifetime
     * mirrors [[sigCache]]: session-long for the gate/bench, released
-    * by [[clearSignatureCache]]. */
-  private val segCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+    * by [[Caches.clearAll]]. */
+  private val segCache = new Caches.PerDir[DataFrame]("TextOps.seg", Seq(_))
 
   private def segmentRows(s: SparkSession, d: String): DataFrame =
-    segCache.computeIfAbsent(d, _ => {
+    segCache.get(d) {
       val nSeg = floor((size(col("tk")) + lit(SegWords - 1)).cast("double") / lit(SegWords)).cast("int")
       val segCol = transform(sequence(lit(0), nSeg - 1),
         i => concat_ws(" ", slice(col("tk"), i * SegWords + 1, lit(SegWords))))
@@ -892,7 +870,7 @@ object TextOps {
         .select(col("doc_id"), Portable.h60(col("seg")).as("segh"),
           size(split(col("seg"), " ")).as("wc"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    })
+   }
 
   def dedupSegments(s: SparkSession, d: String): DataFrame = {
     val segRows = segmentRows(s, d)
@@ -1514,13 +1492,13 @@ object TextOps {
   /** Fit result cached per data dir (the sigCache pattern):
     * `bpe_train` and `bpe_apply` share one loop execution instead of
     * each paying the argmax collects + rewrite checkpoints; both
-    * tables are vocab-sized. Released by [[clearSignatureCache]]. */
+    * tables are vocab-sized. Released by [[Caches.clearAll]]. */
   private val bpeFitCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (DataFrame, DataFrame)]()
+    new Caches.PerDir[(DataFrame, DataFrame)]("TextOps.bpeFit", f => Seq(f._1, f._2))
 
   /** Shared fit loop: returns (merge-table DF, final vocab table). */
   private def bpeFitRounds(s: SparkSession, d: String): (DataFrame, DataFrame) =
-    bpeFitCache.computeIfAbsent(d, _ => bpeFitRoundsUncached(s, d))
+    bpeFitCache.get(d)(bpeFitRoundsUncached(s, d))
 
   private def bpeFitRoundsUncached(s: SparkSession, d: String): (DataFrame, DataFrame) = {
     import s.implicits._
@@ -1748,10 +1726,10 @@ object TextOps {
     * word table). Model state (the vocab + counts) is KB-sized at any
     * corpus scale — the [[bpeFitRounds]] contract. */
   private val uniFitCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (Seq[(String, Long)], DataFrame)]()
+    new Caches.PerDir[(Seq[(String, Long)], DataFrame)]("TextOps.uniFit", f => Seq(f._2))
 
   private[operators] def uniFit(s: SparkSession, d: String): (Seq[(String, Long)], DataFrame) =
-    uniFitCache.computeIfAbsent(d, _ => uniFitUncached(s, d, UniSeedK, UniVocabK))
+    uniFitCache.get(d)(uniFitUncached(s, d, UniSeedK, UniVocabK))
 
   /** Parameterized fit (the gate pins [[UniSeedK]]/[[UniVocabK]]; a
     * production run derives the sizes via [[uniVocabFor]]): bypasses

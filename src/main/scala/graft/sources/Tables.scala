@@ -25,15 +25,15 @@ object Tables {
     * case: thousands of splits >> cores) keeps its natural
     * partitioning and pays nothing. */
   private def rd(s: SparkSession, dir: String, name: String): DataFrame =
-    tableCache.computeIfAbsent(
+    tableCache.get(
       // applicationId + startTime is a STABLE unique context key —
       // identityHashCode (r17) could be reused after a stopped
       // context was GC'd, serving a DataFrame bound to a dead context
-      s"${s.sparkContext.applicationId}@${s.sparkContext.startTime}|$dir/$name", _ => {
+      s"${s.sparkContext.applicationId}@${s.sparkContext.startTime}|$dir/$name") {
         val df = s.read.parquet(s"$dir/$name.parquet")
         val width = s.sparkContext.defaultParallelism
         if (df.rdd.getNumPartitions < width) df.repartition(width) else df
-      })
+      }
 
   /** Constructed-reader cache per (SparkContext, dir, table) — a
     * METADATA cache, not a data cache (r17 optimization round): every
@@ -47,11 +47,8 @@ object Tables {
     * every action still scans the parquet files. Keyed by the
     * SparkContext identity so a restarted context never serves plans
     * bound to a stopped one. Cleared by
-    * [[graft.operators.Caches.clearAll]]. */
-  private val tableCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
-  def clearTableCache(): Unit = tableCache.clear()
+    * [[graft.operators.Caches.clearAll]]; holds no blocks to release. */
+  private val tableCache = new graft.operators.Caches.PerDir[DataFrame]("Tables.table", _ => Nil)
 
   def region(s: SparkSession, dir: String): DataFrame     = rd(s, dir, "region")
   def nation(s: SparkSession, dir: String): DataFrame     = rd(s, dir, "nation")

@@ -6,6 +6,8 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.graftbridge.StateStoreBridge
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
+import graft.operators.Caches
+
 /** Per-run result naming with garbage collection for the streaming
   * family's bounded (AvailableNow) runs.
   *
@@ -35,26 +37,9 @@ object MemorySinks {
   }
 
   /** Previous run's checkpointed batch frames per prefix — released
-    * when the next run starts (Dataset.unpersist does not reach a
-    * local checkpoint's RDD blocks, so release goes through the
-    * LogicalRDD handle — the abwdPairCache rule). */
-  private val live =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[DataFrame]]()
-
-  /** Release every retained run's checkpointed batches — wired into
-    * [[graft.operators.Caches.clearAll]] like the per-dir operator
-    * caches (the cache-wiring spec counts this holder too). */
-  def clearAll(): Unit = {
-    live.values.forEach(_.foreach(release))
-    live.clear()
-  }
-
-  private def release(df: DataFrame): Unit =
-    df.queryExecution.analyzed match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(false); ()
-      case _ => ()
-    }
+    * when the next run starts, and by
+    * [[graft.operators.Caches.clearAll]] like the per-dir caches. */
+  private val live = new Caches.PerDir[Seq[DataFrame]]("MemorySinks.live", identity)
 
   /** Run a bounded stream to completion under `Trigger.AvailableNow`,
     * materializing every batch's rows as persisted DISTRIBUTED blocks
@@ -86,7 +71,7 @@ object MemorySinks {
                       mode: String = "append"): (StreamingQuery, DataFrame) = {
     val n = seq.incrementAndGet()
     val name = s"${prefix}_$n"
-    if (n > 1) Option(live.remove(prefix)).foreach(_.foreach(release))
+    live.drop(prefix)
     val batches = scala.collection.mutable.ArrayBuffer[DataFrame]()
     val q = stream.writeStream
       .foreachBatch { (b: DataFrame, _: Long) =>
@@ -95,7 +80,7 @@ object MemorySinks {
           // complete mode re-emits the FULL result table per batch —
           // the memory sink REPLACES its rows, so keep the last batch
           // only (append mode accumulates, matching the sink exactly)
-          if (mode == "complete") { batches.foreach(release); batches.clear() }
+          if (mode == "complete") { batches.foreach(Caches.release); batches.clear() }
           batches += p
         }
         ()

@@ -66,18 +66,15 @@ object StreamingMarkovScore {
     * |types|² transition table is a batch-fit ARTIFACT — production
     * fits once and serves it to every scoring run, but through r16
     * each run() re-ran the fit query + collect (~0.5 s of a 1.9 s
-    * query at sf0.1). Cleared by
-    * [[graft.operators.Caches.clearAll]] via [[clearModelCache]]. */
+    * query at sf0.1). Cleared by [[graft.operators.Caches.clearAll]]. */
   private val modelCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Map[(String, String), Long]]()
-
-  def clearModelCache(): Unit = modelCache.clear()
+    new graft.operators.Caches.PerDir[Map[(String, String), Long]]("StreamingMarkovScore.model", _ => Nil)
 
   def run(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     // the batch-fit model artifact (|types|² rows — driver-collected
     // and closed over, the broadcast-a-fitted-model serving shape)
-    val model = modelCache.computeIfAbsent(dir, _ =>
+    val model = modelCache.get(dir)(
       EventOps.markovTransitions(s, dir).collect()
         .map(r => (r.getString(0), r.getString(1)) -> r.getLong(3)).toMap)
     val schema = StreamingSessionize.eventsSchema(s, dir)

@@ -62,14 +62,9 @@ object StreamingSpanDedup {
     * incoming slice IS the store a production pipeline maintains
     * between ingests — through r16 each run() re-ran the distinct over
     * the positioned table. Released by
-    * [[graft.operators.Caches.clearAll]] via [[clearIndexCache]]. */
+    * [[graft.operators.Caches.clearAll]]. */
   private val indexCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
-  def clearIndexCache(): Unit = {
-    indexCache.values.forEach(graft.operators.Caches.releaseCheckpointed(_))
-    indexCache.clear()
-  }
+    new graft.operators.Caches.PerDir[DataFrame]("StreamingSpanDedup.index", Seq(_))
 
   def run(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
@@ -84,7 +79,7 @@ object StreamingSpanDedup {
     // index convention) — derived from the span family's per-dir
     // cached positioned table and ITSELF persisted per dir (the
     // distinct is the store's build, paid once per corpus version)
-    val idx = indexCache.computeIfAbsent(dir, _ =>
+    val idx = indexCache.get(dir)(
       TextOps.positioned(s, dir)
         .filter(col("doc_id") % TextOps.IncMod =!= 0)
         .select(col("h")).distinct()

@@ -766,10 +766,7 @@ class OperatorSpec extends AnyFunSuite with BeforeAndAfterAll {
     // depend on which spec ran first (observed r17: ±1 on the IVF
     // family between isolation and full-suite runs). Warm = the state
     // the bench and every real session run in.
-    operators.TextOps.warmCaches(spark, Sf)
-    operators.AnnOps.warmCaches(spark, Sf)
-    operators.GeoOps.warmCaches(spark, Sf)
-    operators.MixOps.warmCaches(spark, Sf)
+    Caches.warmAll(spark, Sf)
     val batchQueries = SparkEntry.queries.keys.filterNot(_.startsWith("streaming_"))
     for (name <- batchQueries) {
       val df = SparkEntry.queries(name)(spark, Sf)
@@ -893,25 +890,90 @@ class OperatorSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("every per-dir session cache is wired into Caches.clearAll") {
-    // greps the operator sources for per-dir cache declarations and
-    // compares against the count declared NEXT TO the release switch:
-    // adding a cache without bumping Caches.WiredCaches fails here,
-    // and bumping it means looking at clearAll — the friction that
-    // prevents the stale-cache-after-corpus-swap defect from shipping
-    // a third time
+    // a String-keyed map declared outside Caches.scala is a per-dir
+    // cache that clearAll cannot see (the stale-cache-after-corpus-swap
+    // defect shipped twice while caches were wired by hand); declared
+    // as a Caches.PerDir, a cache is registered — and released — by
+    // construction, so no count has to be kept in step
     import scala.jdk.CollectionConverters._
     val srcRoot = java.nio.file.Paths.get("src/main/scala/graft")
-    val declared = java.nio.file.Files.walk(srcRoot).iterator().asScala
-      .filter(_.toString.endsWith(".scala"))
-      .map(p => new String(java.nio.file.Files.readAllBytes(p), "UTF-8"))
-      // any qualification of the class name counts — an imported or
-      // partially-qualified ConcurrentHashMap must not dodge the gate
-      .map(s => "new (java\\.util\\.concurrent\\.)?(concurrent\\.)?ConcurrentHashMap\\[String".r
-        .findAllIn(s).length)
-      .sum
-    assert(declared == Caches.WiredCaches,
-      s"$declared per-dir caches declared in source but Caches.WiredCaches says " +
-        s"${Caches.WiredCaches} — wire the new cache into Caches.clearAll and bump the constant")
+    val declaring = java.nio.file.Files.walk(srcRoot).iterator().asScala
+      .filter(p => p.toString.endsWith(".scala") && p.getFileName.toString != "Caches.scala")
+      .filter { p =>
+        val s = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
+        // any qualification of the class name counts — an imported or
+        // partially-qualified ConcurrentHashMap must not dodge the gate
+        "new (java\\.util\\.concurrent\\.)?(concurrent\\.)?ConcurrentHashMap\\[String".r
+          .findFirstIn(s).nonEmpty
+      }
+      .map(srcRoot.relativize(_).toString).toSeq.sorted
+    assert(declaring.isEmpty,
+      s"per-dir caches declared outside the registry in ${declaring.mkString(", ")} — " +
+        "declare them as Caches.PerDir so Caches.clearAll releases them")
+  }
+
+  test("Caches.clearAll empties every registered family and releases every block it held") {
+    val sc = spark.sparkContext
+    // the persistent-RDD map holds its RDDs weakly: an unreferenced
+    // checkpoint leaves it only after a GC, so poll until the set
+    // stops changing
+    def settled(): Set[Int] = {
+      var last = Set.empty[Int]; var same = 0; var polls = 0
+      while (same < 5 && polls < 100) {
+        System.gc()
+        Thread.sleep(100)
+        val ids = sc.getPersistentRDDs.keySet.toSet
+        if (ids == last) same += 1 else { same = 0; last = ids }
+        polls += 1
+      }
+      last
+    }
+    // the named RDDs still persisted (RDD.toString names the call site
+    // that persisted it); the persistent-RDD map copy is dropped on
+    // return, so it pins nothing for a later settle
+    def persisted(ids: Iterable[Int]): Seq[String] = {
+      val live = sc.getPersistentRDDs
+      ids.toSeq.sorted.flatMap(live.get).map(_.toString.take(200))
+    }
+    // a query can return while AQE still winds down a stage it no
+    // longer needs; releasing under that job fails its tasks, so let
+    // the scheduler go idle before each release
+    def idle(): Unit = {
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (sc.statusTracker.getActiveJobIds.nonEmpty && System.nanoTime() < deadline)
+        Thread.sleep(50)
+    }
+    idle()
+    Caches.clearAll()
+    val baseline = settled()
+    // the declared index builds, plus one consumer of every family
+    // warmAll does not build
+    Caches.warmAll(spark, Sf)
+    for (q <- Seq("hll_intersect", "pagerank_full", "ann_pq_topk", "ann_recall_report",
+                  "bpe_apply", "unigram_lm_train", "streaming_span_dedup",
+                  "streaming_markov_score", "aftershock_clusters"))
+      SparkEntry.queries(q)(spark, Sf).queryExecution.toRdd.count()
+    val families = Caches.registered
+    val unfilled = families.filter(_.isEmpty).map(_.name)
+    assert(unfilled.isEmpty,
+      s"no consumer here fills ${unfilled.mkString(", ")} — add one, or the release below is untested")
+    idle()
+    // a checkpointed entry's blocks would also go once the GC collects
+    // its frame, so the settled check below cannot see a skipped
+    // checkpoint release: clearAll must have unpersisted them itself
+    // (ids only: a held RDD keeps its lineage's checkpoints alive)
+    val checkpoints = families.flatMap(_.frames).map(_.queryExecution.analyzed)
+      .collect { case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd.id }
+    assert(checkpoints.nonEmpty)
+    Caches.clearAll()
+    val kept = persisted(checkpoints)
+    assert(kept.isEmpty, s"clearAll left checkpoint blocks persisted: ${kept.mkString("; ")}")
+    val left = families.filterNot(_.isEmpty).map(_.name)
+    assert(left.isEmpty, s"clearAll left entries in ${left.mkString(", ")}")
+    val after = settled()
+    val leaked = persisted(after -- baseline)
+    assert(after == baseline,
+      s"${leaked.size} RDDs still persisted after clearAll: ${leaked.mkString("; ")}")
   }
 
   test("exchange reuse actually fires for the largest reuse-dependent plans") {
@@ -2820,7 +2882,7 @@ class OperatorSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(!ids.exists(StateStoreBridge.isLoaded),
         s"${q.name}: ${ids.count(StateStoreBridge.isLoaded)} providers still loaded")
     }
-    graft.streaming.MemorySinks.clearAll()
+    Caches.clearAll()
   }
 
   test("im_melt round-trips the pivot losslessly on defined cells") {
@@ -5440,6 +5502,12 @@ class OperatorSpec extends AnyFunSuite with BeforeAndAfterAll {
     val loop8 = GraphOps.pagerankFull(spark, Sf).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(loop8 != loop2, "8 iterations changed nothing — loop is vacuous")
+  }
+
+  test("pagerank_full rejects iters < 1") {
+    // with no round there is no final checkpoint to return, and the
+    // result would read the ids table the solve has already released
+    intercept[IllegalArgumentException](GraphOps.pagerankFull(spark, Sf, iters = 0))
   }
 
   test("rank/quantile operators run no data-sized single-partition window") {
