@@ -1,8 +1,7 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicLong
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
+import org.json4s._
+import org.json4s.jackson.JsonMethods
 
 /** Benchmark main: a named SETUP step materializes the session-cached
   * signature/segment tables (so their one-off build cost is charged to
@@ -54,43 +53,53 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
   *      floor-known queries exceeds 1.2× the floor total — a uniform
   *      co-tenant window that trips no per-query bar still flags the
   *      RUN (the r16 committed-record failure mode);
-  *   3. one compact `medians` line: values-only array in ascending
-  *      query-name order (the SAME sorted order as CORRECTNESS entries
-  *      / SparkEntry.queries.keys.sorted) plus `setup_sec` — carries
-  *      every per-query number in ~1 kB;
-  *   4. the `total` headline LAST (driver parses the final line).
-  * Total ≲1.5 kB — everything fits inside the tail; the previous
-  * named `queries_part` chunks (~3.6 kB at 174 queries) overflowed it
-  * and lost 150/174 named entries in round 11. The full named
-  * per-query detail (all three runs, not just medians) now goes to
+  *   3. the `total` headline LAST (driver parses the final line): it
+  *      carries every corrected median as a values-only `sec` array in
+  *      ascending query-name order (the SAME sorted order as
+  *      CORRECTNESS entries / SparkEntry.queries.keys.sorted), plus
+  *      `setup_sec` and the failed names, within the tail
+  *      ([[headline]]).
+  * Named per-query entries do not fit: the `queries_part` chunks
+  * (~3.6 kB at 174 queries) overflowed the tail and lost 150/174 named
+  * entries in round 11. The full named per-query detail (all three
+  * runs, not just medians) goes to
   * `/root/repo/dev/bench_detail_last.json`, which outlives the tail. */
 object Bench {
 
-  /** Accumulates task metrics across completed stages. Listener events
-    * are posted asynchronously; reads are taken after a short drain
-    * sleep, which is fine for whole-run diagnostic totals. */
-  private final class StageAgg extends SparkListener {
-    val spillDisk = new AtomicLong
-    val spillMem = new AtomicLong
-    val shuffle = new AtomicLong
-    val execMs = new AtomicLong
-    override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-      val m = sc.stageInfo.taskMetrics
-      if (m != null) {
-        spillDisk.addAndGet(m.diskBytesSpilled)
-        spillMem.addAndGet(m.memoryBytesSpilled)
-        shuffle.addAndGet(m.shuffleWriteMetrics.bytesWritten + m.shuffleReadMetrics.totalBytesRead)
-        execMs.addAndGet(m.executorRunTime)
-      }
-    }
-    def snapshot: Seq[Long] = Seq(spillDisk.get, spillMem.get, shuffle.get, execMs.get)
-  }
-
-  private final case class Diag(
-      first: Double, runs: Seq[Double], var last: Double, metrics: Seq[Long])
-
   private def fmt(x: Double): String =
     String.format(java.util.Locale.ROOT, "%.2f", Double.box(x))
+
+  /** The stage-metric fields that close every diag and regress line. */
+  private def metricFields(m: Probe.Stage): String =
+    s""""spill_disk_mb":${m.spillDiskBytes / 1048576},"spill_mem_mb":${m.spillMemBytes / 1048576},""" +
+    s""""shuffle_mb":${m.shuffleBytes / 1048576},"exec_core_s":${m.runMs / 1000}"""
+
+  /** The driver's stdout tail in bytes: the headline, newline included,
+    * must fit in it whole. */
+  private[graft] val TailBytes = 2000
+
+  /** The `total` headline from the corrected medians in ascending
+    * query-name order (`None` = failed). Over [[TailBytes]] the failed
+    * names become a `failed_count` first, then the `sec` array and its
+    * `order` go; `value`, `setup_sec`, `n`, `sf` and `"queries":{}`
+    * always stay, so the driver's parse never loses the headline.
+    * "queries":{} is kept for format compat (additions-only rule). */
+  private[graft] def headline(
+      medians: Seq[(String, Option[Double])], setupSec: Double, sfDir: String): String = {
+    val failed = medians.collect { case (n, None) => n }
+    val sec = medians.map(_._2.fold("null")(fmt)).mkString("[", ",", "]")
+    def line(withSec: Boolean, failedJson: String): String =
+      s"""{"metric":"total","value":${fmt(medians.flatMap(_._2).sum)},"unit":"sec","queries":{},""" +
+      (if (withSec) """"order":"name_asc",""" else "") +
+      s""""n":${medians.size},"setup_sec":${fmt(setupSec)},""" +
+      (if (withSec) s""""sec":$sec,""" else "") +
+      s"""$failedJson,"sf":"$sfDir"}"""
+    val names = s""""failed":${failed.map("\"" + _ + "\"").mkString("[", ",", "]")}"""
+    val count = s""""failed_count":${failed.size}"""
+    Seq(line(withSec = true, names), line(withSec = true, count))
+      .find(_.getBytes("UTF-8").length < TailBytes)
+      .getOrElse(line(withSec = false, count))
+  }
 
   /** The corrected-median rule for quiet-tailed queries: the median
     * (lower-middle) of all six timings, in-suite runs ∪ tail re-runs.
@@ -129,24 +138,30 @@ object Bench {
 
   private val BaselineFile = "/root/repo/dev/bench_baseline.json"
 
+  /** The record the last bench wrote, beside [[BaselineFile]]. */
+  private val DetailFile =
+    java.nio.file.Paths.get(BaselineFile).resolveSibling("bench_detail_last.json").toString
+
+  private val num: PartialFunction[JValue, Double] = {
+    case JDouble(x) => x
+    case JInt(x) => x.toDouble
+  }
+
+  /** `path` parsed; None when it is absent or unparseable. */
+  private def readJson(path: String): Option[JValue] =
+    try Some(JsonMethods.parse(java.nio.file.Files.readString(java.nio.file.Paths.get(path))))
+    catch { case _: Throwable => None }
+
   /** Rolling per-query corrected-median history from
     * `dev/bench_baseline.json`, KEYED BY SF DIR — a dev sf0.001 run
     * must never poison the sf0.1 floor downward (every sf0.1 query
     * would flag) nor vice versa. Empty when absent/unparseable. */
   private def baselineHistory(sfDir: String): Map[String, Seq[Double]] =
-    try {
-      val txt = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(BaselineFile)), "UTF-8")
-      import org.json4s._
-      import org.json4s.jackson.JsonMethods
-      JsonMethods.parse(txt) \ sfDir match {
-        case JObject(fields) => fields.collect {
-          case (n, JArray(vs)) =>
-            n -> vs.collect { case JDouble(x) => x; case JInt(x) => x.toDouble }
-        }.toMap
-        case _ => Map.empty[String, Seq[Double]]
-      }
-    } catch { case _: Throwable => Map.empty }
+    readJson(BaselineFile).map(_ \ sfDir) match {
+      case Some(JObject(fields)) =>
+        fields.collect { case (n, JArray(vs)) => n -> vs.collect(num) }.toMap
+      case _ => Map.empty
+    }
 
   /** Append this run's corrected medians to the per-sf rolling history
     * (last [[BaselineKeep]] kept), preserving other sf dirs' entries. */
@@ -154,20 +169,12 @@ object Bench {
       sfDir: String, hist: Map[String, Seq[Double]],
       medians: Seq[(String, Option[Double])]): Unit =
     try {
-      val others: Seq[(String, String)] = try {
-        val txt = new String(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get(BaselineFile)), "UTF-8")
-        import org.json4s._
-        import org.json4s.jackson.JsonMethods
-        JsonMethods.parse(txt) match {
-          case JObject(fields) => fields.collect {
-            case (sf, v) if sf != sfDir =>
-              sf -> org.json4s.jackson.JsonMethods.compact(
-                org.json4s.jackson.JsonMethods.render(v))
-          }
-          case _ => Nil
+      val others: Seq[(String, String)] = readJson(BaselineFile) match {
+        case Some(JObject(fields)) => fields.collect {
+          case (sf, v) if sf != sfDir => sf -> JsonMethods.compact(JsonMethods.render(v))
         }
-      } catch { case _: Throwable => Nil }
+        case _ => Nil
+      }
       val updated = medians.collect { case (n, Some(m)) =>
         s""""$n":[${(hist.getOrElse(n, Nil) :+ m).takeRight(BaselineKeep).map(fmt).mkString(",")}]"""
       }.mkString("{", ",", "}")
@@ -183,55 +190,38 @@ object Bench {
     * record the last driver/dev bench wrote) — one leg of
     * [[floorBaseline]]. Empty map when absent/unparseable. */
   private def previousMedians(): Map[String, Double] =
-    try {
-      val txt = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get("/root/repo/dev/bench_detail_last.json")), "UTF-8")
-      import org.json4s._
-      import org.json4s.jackson.JsonMethods
-      val parsed = JsonMethods.parse(txt)
+    readJson(DetailFile).fold(Map.empty[String, Double]) { parsed =>
       // prefer the corrected medians (quiet-tail adjudicated) — a
       // contention-poisoned raw run must not become next round's
       // regression baseline; fall back to raw-run medians for detail
       // files written before the "medians" field existed
       val fromMedians = parsed \ "medians" match {
-        case JObject(fields) => fields.collect {
-          case (n, JDouble(x)) => n -> x
-          case (n, JInt(x)) => n -> x.toDouble
-        }.toMap
+        case JObject(fields) => fields.collect { case (n, v) if num.isDefinedAt(v) => n -> num(v) }.toMap
         case _ => Map.empty[String, Double]
       }
       val fromRuns = parsed \ "runs" match {
         case JObject(fields) => fields.collect {
-          case (n, JArray(vs)) if vs.nonEmpty =>
-            val ds = vs.collect { case JDouble(x) => x; case JInt(x) => x.toDouble }
+          case (n, JArray(vs)) if vs.exists(num.isDefinedAt) =>
+            val ds = vs.collect(num)
             n -> ds.sorted.apply(ds.length / 2)
         }.toMap
         case _ => Map.empty[String, Double]
       }
       fromRuns ++ fromMedians
-    } catch { case _: Throwable => Map.empty }
+    }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Sessions.local()
-    val agg = new StageAgg
-    spark.sparkContext.addSparkListener(agg)
-    def time(fn: QueryFn): Double = {
-      val t0 = System.nanoTime()
-      // toRdd materializes every output column: a bare count() would
-      // let the optimizer prune expensive projections (hash RNG, pSA
-      // folds) and under-report queries whose cost lives in the
-      // SELECT list rather than the joins.
-      try {
-        fn(spark, sfDir).queryExecution.toRdd.count()
-        (System.nanoTime() - t0) / 1e9
-      } catch {
+    val metrics = new Probe.Metrics(spark)
+    def time(fn: QueryFn): Double =
+      try Probe.run(spark, fn, sfDir)
+      catch {
         case e: Throwable =>
           // a broken query must NOT shrink the headline as a ~0s entry
           System.err.println(s"BENCH FAILURE: ${e.getClass.getSimpleName}: ${e.getMessage}")
           -1.0
       }
-    }
     val names = SparkEntry.queries.keys.toSeq.sorted
     // EXECUTION order is a seeded shuffle of the name-ascending list:
     // two rounds straight, a co-tenant burst camped on one contiguous
@@ -255,59 +245,33 @@ object Bench {
       System.err.println(s"SETUP FAILURE: ${e.getClass.getSimpleName}: ${e.getMessage}")
     }
     val setupSec = (System.nanoTime() - setupT0) / 1e9
-    // Adaptive warmup: with map stages now running 32-wide, a cold
-    // query's first executions burn interpreted codegen on EVERY core
-    // until the C2 compile queue drains (measured 205 core-s cold vs 9
-    // hot on quality_gopher) — one fixed warmup pass is not always
-    // enough to reach steady state when the whole suite is queued.
-    // Re-run each query while it is still speeding up >1.4x (max 4
-    // runs) so the timed medians measure the hot engine, not the JIT.
-    execOrder.foreach { n =>
-      var prev = time(SparkEntry.queries(n))
-      var i = 1
-      var cur = prev
-      do { prev = cur; cur = time(SparkEntry.queries(n)); i += 1 }
-      while (i < 4 && cur >= 0 && prev >= 0 && prev / math.max(cur, 1e-9) > 1.4)
-    }
+    // Adaptive warmup, so the timed medians measure the hot engine,
+    // not the JIT, even with the whole suite queued.
+    execOrder.foreach(n => Probe.warm(() => time(SparkEntry.queries(n))))
     // Diagnosed queries: ordering probe right after warmup (cold
     // position), stage metrics around the timed runs, and a final
     // probe after the whole suite (hot position).
     val diagNames = Seq("propagation_table", "filter_funnel").filter(names.contains)
-    val diags = scala.collection.mutable.LinkedHashMap[String, Diag]()
-    diagNames.foreach { n => diags(n) = Diag(time(SparkEntry.queries(n)), Nil, -1.0, Nil) }
+    val diagFirst = diagNames.map(n => n -> time(SparkEntry.queries(n))).toMap
     // A query that fails ANY of its 3 runs is reported as null and
     // excluded from the total — a -1 sentinel must not participate in
     // the median (an intermittent failure would still yield a "real"
     // median) nor be summed into the headline.
     // Stage metrics are captured around EVERY query's timed runs (one
-    // listener snapshot pair per query — free), so any query can be
-    // diagnosed after the fact: the round-13 record carried ~90 s of
-    // host contention in one alphabetical block, and only the two
-    // pre-declared queries had the evidence to prove it. The short
-    // drain sleep is paid only for queries later reported.
-    val perQueryMetrics = scala.collection.mutable.LinkedHashMap[String, Seq[Long]]()
+    // listener window per query, drained outside the timed runs), so
+    // any query can be diagnosed after the fact: the round-13 record
+    // carried ~90 s of host contention in one alphabetical block, and
+    // only the two pre-declared queries had the evidence to prove it.
+    val perQueryMetrics = scala.collection.mutable.Map[String, Probe.Stage]()
     val resultsByExec = execOrder.map { n =>
-      val before = agg.snapshot
+      val mark = metrics.mark()
       val runs = (1 to 3).map(_ => time(SparkEntry.queries(n)))
-      perQueryMetrics(n) = before
-      if (diags.contains(n)) diags(n) = Diag(diags(n).first, runs, -1.0, Nil)
+      perQueryMetrics(n) = Probe.Stage.total(metrics.since(mark).stages)
       n -> runs
-    }
-    Thread.sleep(800) // drain the async listener bus once, at the end
-    val endSnap = agg.snapshot
-    // close each query's metric window at the NEXT query's opening
-    // snapshot (the suite runs queries back to back, in EXEC order)
-    val opens = execOrder.map(perQueryMetrics)
-    val closes = opens.drop(1) :+ endSnap
-    execOrder.zip(opens.zip(closes)).foreach { case (n, (b, e)) =>
-      perQueryMetrics(n) = e.zip(b).map { case (a, x) => a - x }
     }
     val byName = resultsByExec.toMap
     val results = names.map(n => n -> byName(n))
-    diagNames.foreach { n =>
-      diags(n) = diags(n).copy(metrics = perQueryMetrics(n))
-      diags(n).last = time(SparkEntry.queries(n))
-    }
+    val diagLast = diagNames.map(n => n -> time(SparkEntry.queries(n))).toMap
     // Self-adjudication: any query whose median regressed >2× against
     // the previous recorded bench (dev/bench_detail_last.json) gets a
     // diag line with its stage-metric window — exec_core_s separates
@@ -320,7 +284,7 @@ object Bench {
     val hist = baselineHistory(sfDir)
     val prev = floorBaseline(previousMedians(), hist)
     val ratioOf: ((String, Seq[Double])) => Option[(String, Double, Seq[Double], Double)] = {
-      case (n, runs) if runs.forall(_ >= 0) && !diags.contains(n) &&
+      case (n, runs) if runs.forall(_ >= 0) && !diagNames.contains(n) &&
         prev.get(n).exists(_ >= 0.05) && runs.sorted.apply(1) >= 0.5 =>
         Some((n, prev(n), runs, runs.sorted.apply(1) / prev(n)))
       case _ => None
@@ -368,9 +332,6 @@ object Bench {
     val medians = results.map { case (n, runs) =>
       n -> (if (runs.forall(_ >= 0)) Some(corrected(n, runs.sorted.apply(1))) else None)
     }
-    val failed = medians.collect { case (n, None) => n }
-    val total = medians.flatMap(_._2).sum
-    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     // Roll this run's corrected medians into the per-sf baseline
     // history — the next run's regression floor is the min over the
     // last BaselineKeep runs ∪ the committed record, so committing a
@@ -395,7 +356,7 @@ object Bench {
     // that outlives the driver's stdout tail.
     // detail file: raw in-suite runs under "runs", quiet-tail re-runs
     // under "tail", and the CORRECTED per-query medians (the numbers
-    // the compact/total lines report) under "medians" — the next
+    // the total line reports) under "medians" — the next
     // round's regression baseline reads "medians" first, so a
     // contention-poisoned raw run can no longer propagate into the
     // following round's 3× threshold.
@@ -415,54 +376,30 @@ object Bench {
       ",", "}}")
     try {
       java.nio.file.Files.write(
-        java.nio.file.Paths.get("/root/repo/dev/bench_detail_last.json"),
+        java.nio.file.Paths.get(DetailFile),
         detail.getBytes("UTF-8"))
     } catch { case e: Throwable =>
       System.err.println(s"DETAIL WRITE FAILURE: ${e.getMessage}")
     }
-    val diagLines = diags.map { case (n, dg) =>
-      val Seq(spillD, spillM, shufB, execMs) =
-        if (dg.metrics.nonEmpty) dg.metrics else Seq(0L, 0L, 0L, 0L)
-      s"""{"metric":"diag","q":"$n","first":${fmt(dg.first)},"runs":[${dg.runs.map(fmt).mkString(",")}],""" +
-      s""""last":${fmt(dg.last)},"spill_disk_mb":${spillD / 1048576},"spill_mem_mb":${spillM / 1048576},""" +
-      s""""shuffle_mb":${shufB / 1048576},"exec_core_s":${execMs / 1000}}"""
-    }.toSeq
+    val diagLines = diagNames.map { n =>
+      s"""{"metric":"diag","q":"$n","first":${fmt(diagFirst(n))},"runs":[${byName(n).map(fmt).mkString(",")}],""" +
+      s""""last":${fmt(diagLast(n))},${metricFields(perQueryMetrics(n))}}"""
+    }
     // >2× movers vs the previous record, worst first. Stdout carries
     // at most 8 (the driver tail is ~2 kB and front-truncates — the
-    // medians/total lines at the end must survive even on a
+    // total line at the end must survive even on a
     // contention-poisoned round); the FULL list goes into the detail
     // file below via `regressions`.
     val moverLines = movers
       .sortBy { case (_, p, runs, _) => -(runs.sorted.apply(1) / p) }
       .map { case (n, p, runs, m) =>
-        val Seq(spillD, spillM, shufB, execMs) = m
         val corr = corrected(n, runs.sorted.apply(1))
         val tail = tailRuns.getOrElse(n, Nil)
         s"""{"metric":"regress","q":"$n","prev":${fmt(p)},"runs":[${runs.map(fmt).mkString(",")}],""" +
         s""""tail":[${tail.map(fmt).mkString(",")}],"corr":${fmt(corr)},""" +
         s""""ratio":${fmt(runs.sorted.apply(1) / p)},"corr_ratio":${fmt(corr / p)},""" +
-        s""""spill_disk_mb":${spillD / 1048576},""" +
-        s""""spill_mem_mb":${spillM / 1048576},"shuffle_mb":${shufB / 1048576},"exec_core_s":${execMs / 1000}}"""
+        s"""${metricFields(m)}}"""
       }
-    // the tail-proof line: all medians, values only, name-ascending
-    // (2-decimal precision: full doubles double the line length for
-    // noise digits, and the driver's tail is the scarce resource)
-    val secJson =
-      medians.map(_._2.fold("null")(fmt)).mkString("[", ",", "]")
-    val compact =
-      s"""{"metric":"medians","order":"name_asc","n":${names.size},"setup_sec":${fmt(setupSec)},"sec":$secJson}"""
-    // The headline (the FINAL line, the only one the driver parses)
-    // now carries the per-query medians itself as a values-only array
-    // in ascending query-name order — r17's PERF had per_query:{} and
-    // an empty scaling block because the per-query numbers lived only
-    // in the medians line one line up, which the driver does not
-    // parse. 250 two-decimal values ≈ 1.3 kB; with the ~160-byte frame
-    // the line stays inside the driver's 2000-byte stdout tail.
-    // "queries":{} is kept for format compat (additions-only rule).
-    val headline =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":{},""" +
-      s""""order":"name_asc","n":${names.size},"setup_sec":${fmt(setupSec)},"sec":$secJson,""" +
-      s""""failed":$failedJson,"sf":"$sfDir"}"""
     // Stop Spark BEFORE printing so executor-shutdown log lines can't
     // land after the JSON — the driver parses the final stdout line.
     // Sub-bar sweep corrections change committed medians (and the next
@@ -483,8 +420,7 @@ object Bench {
     if (sweepCorr.nonEmpty)
       println(s"""{"metric":"sweep_corr","items":[${sweepCorr.mkString(",")}]}""")
     if (contended) println(contentionJson)
-    println(compact)
-    println(headline)
+    println(headline(medians, setupSec, sfDir))
     System.out.flush()
   }
 }

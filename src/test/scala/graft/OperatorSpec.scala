@@ -996,21 +996,12 @@ class OperatorSpec extends AnyFunSuite with BeforeAndAfterAll {
     // silently multiplying corpus scans at 100 TB. Warm-up runs
     // first so per-dir cache construction (kNN graph, walk results,
     // signatures) is charged to neither side.
-    val readAcc = new java.util.concurrent.atomic.AtomicLong
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = te.taskMetrics
-        if (m != null) readAcc.addAndGet(m.inputMetrics.recordsRead)
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
+    val metrics = new Probe.Metrics(spark)
     try {
       def recordsRead(q: String): Long = {
-        Thread.sleep(500) // drain in-flight listener events
-        readAcc.set(0L)
+        val mark = metrics.mark()
         SparkEntry.queries(q)(spark, Sf).queryExecution.toRdd.count()
-        Thread.sleep(800) // drain the async listener bus
-        readAcc.get
+        metrics.since(mark).stages.map(_.inputRecords).sum
       }
       for (q <- Seq("ann_recall_report", "tfidf_cosine_pairs")) {
         recordsRead(q) // warm caches; measurement discarded
@@ -1028,7 +1019,7 @@ class OperatorSpec extends AnyFunSuite with BeforeAndAfterAll {
             "without — the repeated subtrees no longer canonicalize equal (reuse " +
             "buys <15%); re-unify them or materialize the shared subtree")
       }
-    } finally spark.sparkContext.removeSparkListener(listener)
+    } finally metrics.close()
   }
 
   test("bench corrected-median rule is robust to a burst in either window") {
@@ -1064,6 +1055,58 @@ class OperatorSpec extends AnyFunSuite with BeforeAndAfterAll {
     // post-change runs, the floor follows the new honest cost
     assert(Bench.floorBaseline(
       Map("q" -> 3.1), Map("q" -> Seq(3.0, 3.2, 3.1, 3.05)))("q") == 3.0)
+  }
+
+  test("bench headline fits the stdout tail and keeps its format when it fits") {
+    import org.json4s._
+    import org.json4s.jackson.JsonMethods.parse
+    // over budget: the failed names become a count, then sec goes
+    val long = Bench.headline(
+      (0 until 250).map(i => f"q$i%03d" -> Some(123.45)) ++
+        (0 until 60).map(i => f"failed_query_number_$i%05d" -> None),
+      12.5, "/data/sf0.1")
+    assert(long.getBytes("UTF-8").length + 1 <= Bench.TailBytes, long)
+    val j = parse(long)
+    assert(j \ "value" == JDouble(30862.5) && j \ "setup_sec" == JDouble(12.5) &&
+      j \ "n" == JInt(310) && j \ "sf" == JString("/data/sf0.1") &&
+      j \ "queries" == JObject() && j \ "failed_count" == JInt(60) && j \ "sec" == JNothing, long)
+    // a normal run prints exactly the line the driver parses today
+    val sec = Seq.fill(250)("0.42").mkString("[", ",", "]")
+    assert(Bench.headline((0 until 250).map(i => f"q$i%03d" -> Some(0.42)), 1.5, "/data/sf0.1") ==
+      s"""{"metric":"total","value":105.00,"unit":"sec","queries":{},"order":"name_asc",""" +
+      s""""n":250,"setup_sec":1.50,"sec":$sec,"failed":[],"sf":"/data/sf0.1"}""")
+  }
+
+  test("Probe.warm runs 2 to 4 times, repeating while a run is more than 1.4x faster") {
+    def runs(ts: Double*): Int = { val it = ts.iterator; Probe.warm(() => it.next()).size }
+    assert(runs(5, 2, 1, 1) == 4)
+    assert(runs(1, 1) == 2)
+    assert(runs(16, 8, 4, 2, 1) == 4)
+    // a failed run (negative) stops the loop
+    assert(runs(5, -1, 1) == 2)
+  }
+
+  test("graft.Dev time, stages and explain print parseable lines and leave the session usable") {
+    import org.json4s._
+    import org.json4s.jackson.JsonMethods.parse
+    val timed = Dev.run(spark, Seq("time", Sf, "corpus_clean,streaming_corpus_filter", "2"))
+      .map(parse(_))
+    assert(timed.map(_ \ "q") == Seq(JString("corpus_clean"), JString("streaming_corpus_filter")))
+    for (j <- timed) {
+      assert((j \ "runs").children.size == 2 && (j \ "median").isInstanceOf[JDouble], j)
+      assert((j \ "stages").children.size == 2 && (j \ "stages").children.forall(_ \ "run_ms" != JNothing), j)
+    }
+    // per-run progress phases for the streaming query only
+    assert(timed.head \ "phases" == JNothing)
+    val phases = (timed(1) \ "phases").children
+    assert(phases.size == 2 && phases.forall(_ \ "triggerExecution" != JNothing), timed(1))
+    val stages = Dev.run(spark, Seq("stages", Sf, "corpus_clean")).map(parse(_))
+    assert(stages.nonEmpty &&
+      stages.forall(s => s \ "q" == JString("corpus_clean") && s \ "run_ms" != JNothing), stages)
+    val plans = Dev.run(spark, Seq("explain", Sf, "corpus_clean"))
+    assert(plans.size == 1 && plans.head.startsWith("==== corpus_clean ====\n== Physical Plan =="),
+      plans.mkString.take(300))
+    assert(!spark.sparkContext.isStopped && spark.range(5).count() == 5)
   }
 
   test("streaming_span_dedup equals the batch span_dedup_incremental exactly") {
