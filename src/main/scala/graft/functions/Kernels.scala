@@ -175,8 +175,7 @@ case class SdofPeak(child: Expression, cu: Double, cv: Double, keff: Double, tdt
 }
 
 /** Order-2 IIR (biquad) filter fold over a series: returns
-  * array(y_last, sum(y^2)). Same recurrence and association order as
-  * [[Spectra.biquadSql]]'s `list_reduce` twin. */
+  * array(y_last, sum(y^2)). */
 case class Iir2State(child: Expression, b0: Double, b1: Double, b2: Double,
                      a1: Double, a2: Double) extends UnaryExpression {
 

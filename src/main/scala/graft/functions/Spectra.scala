@@ -153,37 +153,6 @@ object Spectra {
     }.mkString("array(", ", ", ")")
   def dtSeriesSql(xs: String): String =
     s"list_transform(range(1, ${N + 1}), i -> ($xs[i] - (a_i + b_s * CAST(i - 1 AS DOUBLE))) * ${rowSql(welchRow)}[i])"
-  private def sparkRow(xs: Seq[Double]): String =
-    xs.map(dl).mkString("array(", ", ", ")")
-
-  // ---- Butterworth order-2 low-pass (bilinear transform) ---------
-
-  val CutoffHz = 4.0
-  /** Biquad coefficients computed once in Scala (tan only here). */
-  val (b0, b1, b2, a1, a2): (Double, Double, Double, Double, Double) = {
-    val k = math.tan(math.Pi * CutoffHz * Dt) // fc / fs = fc * dt
-    val norm = 1.0 / (1.0 + math.sqrt(2.0) * k + k * k)
-    val c0 = k * k * norm
-    (c0, 2.0 * c0, c0, 2.0 * (k * k - 1.0) * norm,
-      (1.0 - math.sqrt(2.0) * k + k * k) * norm)
-  }
-
-  /** IIR biquad over the series column `tw`, codegen'd ([[Iir2State]]):
-    * returns array(y_last, Σy²). Same +,-,*,/ recurrence and
-    * association order as [[biquadSql]]'s 5-state fold. */
-  def biquadCol(tw: Column): Column = {
-    import org.apache.spark.sql.graftbridge.{ColumnBridge => ExpressionUtils}
-    ExpressionUtils.column(Iir2State(
-      AssertNoNullElements(ExpressionUtils.expression(tw)), b0, b1, b2, a1, a2))
-  }
-  def biquadSql(tw: String): String = {
-    def y(x: String, st: String) =
-      s"(${dl(b0)} * $x + ${dl(b1)} * $st[1] + ${dl(b2)} * $st[2] - ${dl(a1)} * $st[3] - ${dl(a2)} * $st[4])"
-    val yn = y("el[1]", "st")
-    s"list_reduce(list_prepend([${dl(0.0)}, ${dl(0.0)}, ${dl(0.0)}, ${dl(0.0)}, ${dl(0.0)}], " +
-      s"list_transform($tw, x -> [x])), " +
-      s"(st, el) -> [el[1], st[1], $yn, st[3], st[5] + $yn * $yn])"
-  }
 
   // ---- Butterworth band-pass SOS cascade (scipy-equivalent) ------
 

@@ -109,8 +109,6 @@ object AnnOps {
       when(expr(s"vec_dot(cast($e as array<double>), $plane)") > 0, lit(1L << j)).otherwise(0L)
     }.reduce(_ + _)
 
-  private def bucketCol(e: String): Column = bucketColFor(e, 0, NPlanes)
-
   /** Sizing rule for the LSH/IVF constants: hyperplane count should
     * grow with the corpus so expected bucket occupancy stays bounded —
     * k = ceil(log2(N / targetOccupancy)) sign bits gives ~target

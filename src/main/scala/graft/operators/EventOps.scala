@@ -264,6 +264,22 @@ object EventOps {
 
   val AttributionUs: Long = graft.streaming.StreamingIntervalJoin.AttributionUs
 
+  /** The banded (click, purchase) pair frame [[intervalJoin]] projects
+    * and [[attributionLinear]] weights: every same-user pair with the
+    * purchase inside the click's attribution window, timestamps
+    * retained. */
+  private def clickPurchasePairs(s: SparkSession, d: String): DataFrame = {
+    val ev = events(s, d)
+    val clicks = ev.filter(col("event_type") === "click")
+      .select(col("event_id").as("click_id"), col("user_id"), col("ts_us").as("c_us"))
+    val purchases = ev.filter(col("event_type") === "purchase")
+      .select(col("event_id").as("purchase_id"), col("user_id"), col("ts_us").as("p_us"))
+    Joins.banded(clicks, purchases,
+        Seq(Joins.Band(col("c_us"), col("p_us"), AttributionUs.toDouble, 0.0, AttributionUs.toDouble)),
+        on = Seq("user_id"), replicatedLeft = true)
+      .filter(col("p_us") >= col("c_us") && col("p_us") <= col("c_us") + AttributionUs)
+  }
+
   /** Batch event-time INTERVAL JOIN: every (click, purchase) pair of
     * the same user with the purchase inside the click's 1-hour
     * attribution window — the batch twin of
@@ -278,24 +294,6 @@ object EventOps {
     * and equi-join on (user, bin) — each true pair matches in exactly
     * one bin (the purchase's), so no dedup, and per-key work is
     * bounded by events-per-user-per-hour, not events-per-user. */
-  /** The banded (click, purchase) pair frame [[intervalJoin]] projects
-    * and [[attributionLinear]] weights: every same-user pair with the
-    * purchase inside the click's attribution window, timestamps
-    * retained. */
-  private def clickPurchasePairs(s: SparkSession, d: String): DataFrame = {
-    val ev = events(s, d)
-    val clicks = ev.filter(col("event_type") === "click")
-      .select(col("event_id").as("click_id"), col("user_id"), col("ts_us").as("c_us"))
-      .select(col("click_id"), col("user_id"), col("c_us"),
-        explode(array(expr(s"c_us div $AttributionUs"),
-          expr(s"c_us div $AttributionUs + 1"))).as("bin"))
-    val purchases = ev.filter(col("event_type") === "purchase")
-      .select(col("event_id").as("purchase_id"), col("user_id"), col("ts_us").as("p_us"),
-        expr(s"ts_us div $AttributionUs").as("bin"))
-    clicks.join(purchases, Seq("user_id", "bin"))
-      .filter(col("p_us") >= col("c_us") && col("p_us") <= col("c_us") + AttributionUs)
-  }
-
   def intervalJoin(s: SparkSession, d: String): DataFrame =
     clickPurchasePairs(s, d).select(col("click_id"), col("purchase_id"), col("user_id"))
 

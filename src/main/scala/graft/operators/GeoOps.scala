@@ -5,15 +5,16 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.QueryFn
 import graft.model.Catalog
+import graft.operators.Joins.Band
 
 /** Geospatial + temporal GM operators.
   *
   * - `event_station_distances` — source-to-site distances
   *   (`nzgmdb/calculation/distances.py:582-598`: r_epi from geodesics,
   *   r_hyp = sqrt(r_epi² + depth²), bearings; driver at
-  *   `distances.py:398`). Spark shape: a coarse-latitude-band equi-join
-  *   prefilter turns event×station into a banded join (the station side
-  *   is dimension-sized and broadcast), then exact filtering.
+  *   `distances.py:398`). Spark shape: a coarse-latitude banded join
+  *   (the station side is dimension-sized and broadcast), then exact
+  *   filtering.
   *   Distance math is equirectangular with fixed NZ-latitude metric
   *   coefficients: multiply/add/sqrt are IEEE-exact cross-engine,
   *   whereas trig differs in the last ulp (dev/PORTABILITY.md), so the
@@ -27,8 +28,8 @@ import graft.model.Catalog
   * - `aftershock_flags` — Gardner-Knopoff-style time/space windowing
   *   (`calculation/aftershocks.py:19,222`): an event is flagged when a
   *   larger event exists within a magnitude-dependent window. The
-  *   self-join is bounded by a 60-day time-bucket band key (explode
-  *   {-1,0,1} neighbor buckets) — never all-pairs.
+  *   self-join is one [[Joins.banded]] join per magnitude class, banded
+  *   on (time, lat, lon) to that class's window — never all-pairs.
   * - `decimal_year` — `aftershocks.py:117`: integer epoch arithmetic,
   *   one exact division.
   */
@@ -38,7 +39,7 @@ object GeoOps {
   val KmPerDegLat = 111.2
   val KmPerDegLon = 82.7
   val MaxKm       = 300.0
-  val BandDeg     = 3.0 // >= MaxKm / KmPerDegLat, so ±1 band covers MaxKm
+  val BandDeg     = 3.0 // lat bucket width of the station-pair joins
 
   private def dxKm: Column = (col("sta_lon") - col("ev_lon")) * KmPerDegLon
   private def dyKm: Column = (col("sta_lat") - col("ev_lat")) * KmPerDegLat
@@ -75,6 +76,13 @@ object GeoOps {
     if (df.rdd.getNumPartitions < width) df.repartition(width) else df
   }
 
+  /** Candidate (event, station) pairs under [[eventStationDistancesGeo]]
+    * and [[pairFrame]]; callers apply the exact MaxKm cutoff. */
+  private def stationPairs(s: SparkSession, d: String): DataFrame =
+    Joins.banded(fanoutWide(s, Catalog.events(s, d)), broadcast(Catalog.stations(s, d)),
+      Seq(Band.symmetric(col("ev_lat"), col("sta_lat"), BandDeg, MaxKm / KmPerDegLat)),
+      replicatedLeft = true)
+
   // Mean Earth radius (IUGG), km — the spherical production metric.
   val EarthRadiusKm = 6371.0088
 
@@ -90,11 +98,6 @@ object GeoOps {
     * the bit-exact gate operator, so the two variants publish the same
     * rows with refined values. */
   def eventStationDistancesGeo(s: SparkSession, d: String): DataFrame = {
-    val ev = fanoutWide(s, Catalog.events(s, d))
-      .select(col("*"), explode(array(lit(-1L), lit(0L), lit(1L))).as("boff"))
-      .withColumn("band", floor(col("ev_lat") / BandDeg).cast("long") + col("boff"))
-    val st = Catalog.stations(s, d)
-      .withColumn("band", floor(col("sta_lat") / BandDeg).cast("long"))
     val dx = dxKm
     val dy = dyKm
     val phi1 = radians(col("ev_lat"))
@@ -107,37 +110,22 @@ object GeoOps {
     val rEpi = lit(2 * EarthRadiusKm) * asin(sqrt(h))
     val az = (degrees(atan2(sin(dlam) * cos(phi2),
       cos(phi1) * sin(phi2) - sin(phi1) * cos(phi2) * cos(dlam))) + 360) % 360
-    ev.join(broadcast(st), Seq("band"))
+    stationPairs(s, d)
       .filter(sqrt(dx * dx + dy * dy) <= MaxKm)
       .select(col("evid"), col("sta"), rEpi.as("r_epi"),
         sqrt(rEpi * rEpi + col("ev_depth") * col("ev_depth")).as("r_hyp"),
         az.as("azimuth_deg"))
   }
 
-  /** Rupture-plane distances (`distances.py` r_rup / r_jb): for large
-    * events a finite rupture surface replaces the point source. The
-    * synthetic plane is an axis-aligned box around the epicentre sized
-    * by magnitude class; r_jb is the horizontal distance to the
-    * clamped nearest point of the box (greatest/least + sqrt — exact
-    * cross-engine), r_rup adds the top-of-rupture depth. The plane
-    * side is dimension-sized (large events only) and broadcast; the
-    * station product is cut by the same lat-band prefilter as
-    * [[eventStationDistances]]. */
   val RupMagMin = 5.5
 
-  /** The rupture-plane pair frame behind [[rrupDistances]] and
-    * [[propagationTable]]: the banded station×plane join with r_jb /
-    * r_rup plus the GC2-style strike coordinates r_x (signed
-    * perpendicular km from the extended strike line — the box strike
-    * runs east-west, so this is the north-positive offset from the
-    * box centre line, the hanging-wall convention of
-    * `src_site_dist.calc_rx_ry`) and r_y (km along strike beyond the
-    * trace ends; 0 when the projection lands inside). All
-    * greatest/least/abs arithmetic — bit-portable. */
+  private val MaxRupMag = 9 // rupture extents are sized for magnitudes up to this
+  private val RupHalfWDegPerMag = 0.05
+
   /** The magnitude-sized rupture-plane boxes (large events only —
     * dimension-sized at any scale, always broadcastable). */
   private def rupPlanes(s: SparkSession, d: String): DataFrame = {
-    val halfW = floor(col("mag")) * lit(0.05) // half-width in degrees
+    val halfW = floor(col("mag")) * lit(RupHalfWDegPerMag) // half-width in degrees
     Catalog.events(s, d).filter(col("mag") >= RupMagMin)
       .select(col("evid"), col("mag"),
         (col("ev_lat") - halfW).as("lat1"), (col("ev_lat") + halfW).as("lat2"),
@@ -161,17 +149,21 @@ object GeoOps {
       abs((col("sta_lon") - (col("lon1") + col("lon2")) / 2) * KmPerDegLon)
         - (col("lon2") - col("lon1")) / 2 * KmPerDegLon)
 
+  /** The rupture-plane pair frame behind [[rrupDistances]] and
+    * [[propagationTable]]: the banded station×plane join with r_jb /
+    * r_rup plus the GC2-style strike coordinates r_x (signed
+    * perpendicular km from the extended strike line — the box strike
+    * runs east-west, so this is the north-positive offset from the
+    * box centre line, the hanging-wall convention of
+    * `src_site_dist.calc_rx_ry`) and r_y (km along strike beyond the
+    * trace ends; 0 when the projection lands inside). All
+    * greatest/least/abs arithmetic — bit-portable. */
   private def rupFrame(s: SparkSession, d: String): DataFrame = {
-    val planes = rupPlanes(s, d)
-      // ±2 bands: MaxKm/KmPerDegLat (2.70°) + the rupture half-width
-      // (0.35° at mag 7, 0.45° at mag 9) can exceed one 3° band, so a
-      // ±1 explode would silently drop qualifying pairs for mag ≥ 7;
-      // ±2 keeps the prefilter exhaustive for any magnitude ≤ 9.
-      .select(col("*"), explode(array((-2L to 2L).map(lit): _*)).as("boff"))
-      .withColumn("band", floor((col("lat1") + col("lat2")) / 2 / BandDeg).cast("long") + col("boff"))
-    val st = fanoutWide(s, Catalog.stations(s, d))
-      .withColumn("band", floor(col("sta_lat") / BandDeg).cast("long"))
-    st.join(broadcast(planes), Seq("band"))
+    // MaxKm/KmPerDegLat (2.70°) plus the box half-width (0.45° at mag 9)
+    // can exceed one 3° band: the derived offsets are ±2
+    val reach = MaxKm / KmPerDegLat + MaxRupMag * RupHalfWDegPerMag
+    Joins.banded(broadcast(rupPlanes(s, d)), fanoutWide(s, Catalog.stations(s, d)),
+        Seq(Band.symmetric((col("lat1") + col("lat2")) / 2, col("sta_lat"), BandDeg, reach)))
       .withColumn("r_jb", rupJbCol)
       .filter(col("r_jb") <= MaxKm)
       .select(col("evid"), col("sta"), col("r_jb"),
@@ -179,6 +171,15 @@ object GeoOps {
         rupXCol.as("r_x"), rupYCol.as("r_y"))
   }
 
+  /** Rupture-plane distances (`distances.py` r_rup / r_jb): for large
+    * events a finite rupture surface replaces the point source. The
+    * synthetic plane is an axis-aligned box around the epicentre sized
+    * by magnitude class; r_jb is the horizontal distance to the
+    * clamped nearest point of the box (greatest/least + sqrt — exact
+    * cross-engine), r_rup adds the top-of-rupture depth. The plane
+    * side is dimension-sized (large events only) and broadcast; the
+    * station product is cut by the same lat-band prefilter as
+    * [[eventStationDistances]]. */
   def rrupDistances(s: SparkSession, d: String): DataFrame =
     rupFrame(s, d).select("evid", "sta", "r_jb", "r_rup")
 
@@ -211,15 +212,15 @@ object GeoOps {
         cos(dip).as("cd"), sin(dip).as("sd"),
         halfL.as("half_l"), width.as("wid"),
         (col("ev_depth") * 0.5).as("ztop"))
-      .select(col("*"), explode(array((-2L to 2L).map(lit): _*)).as("boff"))
-      .withColumn("band", floor(col("ev_lat") / BandDeg).cast("long") + col("boff"))
-    val st = fanoutWide(s, Catalog.stations(s, d))
-      .withColumn("band", floor(col("sta_lat") / BandDeg).cast("long"))
+    // the surface rectangle reaches at most half_l + wid·cos(dip) ≤
+    // 2·half_l (65 km at mag 9) from the epicentre: the offsets are ±2
+    val reach = (MaxKm + 2 * ((MaxRupMag - 3) * 5.0 + 2.5)) / KmPerDegLat
     val dx = (col("sta_lon") - col("ev_lon")) * KmPerDegLon // East, km
     val dy = (col("sta_lat") - col("ev_lat")) * KmPerDegLat // North, km
     val (sx, sy) = (col("sx"), col("sy"))  // strike unit (E,N)
     val (hx, hy) = (col("hx"), col("hy"))  // dip-direction horizontal unit
-    st.join(broadcast(planes), Seq("band"))
+    Joins.banded(broadcast(planes), fanoutWide(s, Catalog.stations(s, d)),
+        Seq(Band.symmetric(col("ev_lat"), col("sta_lat"), BandDeg, reach)))
       // 3D frame: r = station - top-edge anchor (anchor at depth ztop, up = +z)
       .withColumn("rz", col("ztop"))
       .withColumn("sp", greatest(-col("half_l"), least(col("half_l"), dx * sx + dy * sy)))
@@ -365,24 +366,6 @@ object GeoOps {
 
   // ---- TVZ path terms --------------------------------------------
 
-  /** Taupo-volcanic-zone path terms (`calculation/distances.py:674
-    * distance_in_taupo`): for each event→station path, the fraction of
-    * the path crossing the TVZ polygon (the reference's `tvz_length`,
-    * its km length normalized by r_epi and capped at 1) and the
-    * station-to-boundary distance (`boundary_dist`, 0 when the station
-    * sits inside the zone, NULL when the path never crosses).
-    *
-    * Shape: the same broadcast-station banded join as
-    * [[eventStationDistances]], then a Liang-Barsky parametric clip of
-    * the segment against the convex quad's four half-planes — each
-    * edge contributes a linear function a_i + t·b_i whose sign gates
-    * entry/exit, so the whole geometry is +,-,*,/ and comparisons:
-    * bit-exact cross-engine, no trig, no shapely-style geometry lib.
-    * Deviations from the reference's shapely quirks (first-geom pick
-    * on MultiPoint) are resolved deterministically: boundary_dist is
-    * measured to the path's exit crossing, which coincides with the
-    * reference for the simple entry/exit case and is well-defined for
-    * all others. */
   /** The shared banded (event, station) pair frame: ONE banded join
     * carrying every per-pair path column — r_epi / r_hyp / azimuth
     * octant AND the TVZ clip terms. [[eventStationDistances]],
@@ -399,14 +382,9 @@ object GeoOps {
       val (x2, y2) = verts((i + 1) % verts.size)
       lit(x2 - x1) * (py - lit(y1)) - lit(y2 - y1) * (px - lit(x1))
     }
-    val ev = fanoutWide(s, Catalog.events(s, d))
-      .select(col("*"), explode(array(lit(-1L), lit(0L), lit(1L))).as("boff"))
-      .withColumn("band", floor(col("ev_lat") / BandDeg).cast("long") + col("boff"))
-    val st = Catalog.stations(s, d)
-      .withColumn("band", floor(col("sta_lat") / BandDeg).cast("long"))
     val dx = dxKm
     val dy = dyKm
-    val base = ev.join(broadcast(st), Seq("band"))
+    val base = stationPairs(s, d)
       .withColumn("r_epi", sqrt(dx * dx + dy * dy))
       .filter(col("r_epi") <= MaxKm)
     val withF = verts.indices.foldLeft(base) { (df, i) =>
@@ -428,6 +406,24 @@ object GeoOps {
           .otherwise(lit(null).cast("double")).as("boundary_dist"))
   }
 
+  /** Taupo-volcanic-zone path terms (`calculation/distances.py:674
+    * distance_in_taupo`): for each event→station path, the fraction of
+    * the path crossing the TVZ polygon (the reference's `tvz_length`,
+    * its km length normalized by r_epi and capped at 1) and the
+    * station-to-boundary distance (`boundary_dist`, 0 when the station
+    * sits inside the zone, NULL when the path never crosses).
+    *
+    * Shape: the same broadcast-station banded join as
+    * [[eventStationDistances]], then a Liang-Barsky parametric clip of
+    * the segment against the convex quad's four half-planes — each
+    * edge contributes a linear function a_i + t·b_i whose sign gates
+    * entry/exit, so the whole geometry is +,-,*,/ and comparisons:
+    * bit-exact cross-engine, no trig, no shapely-style geometry lib.
+    * Deviations from the reference's shapely quirks (first-geom pick
+    * on MultiPoint) are resolved deterministically: boundary_dist is
+    * measured to the path's exit crossing, which coincides with the
+    * reference for the simple entry/exit case and is well-defined for
+    * all others. */
   def tvzPath(s: SparkSession, d: String): DataFrame =
     pairFrame(s, d).select("evid", "sta", "tvz_length", "boundary_dist")
 
@@ -495,57 +491,49 @@ object GeoOps {
 
   /** Gardner-Knopoff-style windows, piecewise per magnitude class
     * (floor(mag) ∈ {3,4,5}) so both engines evaluate identical
-    * arithmetic (no pow): (class, time window, distance window,
-    * lat band width in degrees — the smallest round band covering the
-    * distance window so a ±1-band join is exhaustive). */
-  val magClasses: Seq[(Int, Long, Double, Double)] = Seq(
-    (3, 10L * 86400L * 1000000L, 10.0, 0.1),
-    (4, 25L * 86400L * 1000000L, 30.0, 0.3),
-    (5, 50L * 86400L * 1000000L, 50.0, 0.5))
+    * arithmetic (no pow): (class, time window, distance window, lat and
+    * lon bucket widths in degrees — the smallest round widths covering
+    * the distance window, so every band's derived offsets are ±1). */
+  val magClasses: Seq[(Int, Long, Double, Double, Double)] = Seq(
+    (3, 10L * 86400L * 1000000L, 10.0, 0.1, 0.15),
+    (4, 25L * 86400L * 1000000L, 30.0, 0.3, 0.4),
+    (5, 50L * 86400L * 1000000L, 50.0, 0.5, 0.7))
 
-  /** Longitude band width per class: smallest round width covering the
-    * class distance window at the NZ lon metric. */
-  private def lonBandDeg(dKm: Double): Double = dKm match {
-    case 10.0 => 0.15
-    case 30.0 => 0.4
-    case _    => 0.7
-  }
-
-  /** Candidate (sub, main) pairs satisfying the magnitude-dependent
-    * time/space windows. One banded equi-join per magnitude class,
-    * each keyed on (time bucket, lat band) sized to that class's
-    * window — a flat 60-day band was measured to blow up ~1000x on
-    * the dense synthetic catalogue; per-class 2-D banding keeps the
-    * joined row count within a small slack factor of the true
-    * qualifying pairs. */
-  private def aftershockPairs(s: SparkSession, d: String): DataFrame = {
+  /** The class-pair core of both aftershock pair sets: (event,
+    * container) pairs with `m_evid` a different event inside the time
+    * window |dt| ≤ T and the distance window of the container's
+    * magnitude class, that also meet `cond`. One banded join per class,
+    * on (time, lat, lon) sized to that class's window — a flat 60-day
+    * band was measured to blow up ~1000x on the dense synthetic
+    * catalogue; per-class banding keeps the joined row count within a
+    * small slack factor of the true qualifying pairs. `cond` is checked
+    * before the distance's sqrt: as a filter on top of the core it
+    * came after it, and the ABWD build then took the sqrt over the
+    * backward half of the time window too. */
+  private def classPairs(s: SparkSession, d: String, cond: Column): DataFrame = {
     val ev = Catalog.events(s, d)
-    val offsets = explode(array((for (t <- -1 to 1; la <- -1 to 1; lo <- -1 to 1)
-      yield struct(lit(t.toLong).as("t"), lit(la.toLong).as("la"), lit(lo.toLong).as("lo"))): _*)).as("off")
-    magClasses.map { case (cls, tUs, dKm, bandDeg) =>
-      val lonDeg = lonBandDeg(dKm)
+    magClasses.map { case (cls, tUs, dKm, latDeg, lonDeg) =>
       val mains = ev.filter(floor(col("mag")) === cls)
         .select(col("evid").as("m_evid"), col("mag").as("m_mag"), col("ev_us").as("m_us"),
-          col("ev_lat").as("m_lat"), col("ev_lon").as("m_lon"), offsets)
-        .select(col("m_evid"), col("m_mag"), col("m_us"), col("m_lat"), col("m_lon"),
-          (expr(s"m_us div $tUs") + col("off.t")).as("tb"),
-          (floor(col("m_lat") / bandDeg).cast("long") + col("off.la")).as("lb"),
-          (floor(col("m_lon") / lonDeg).cast("long") + col("off.lo")).as("lob"))
-      val subs = ev.select(col("evid"), col("mag"), col("ev_us"),
-        col("ev_lat"), col("ev_lon"),
-        expr(s"ev_us div $tUs").as("tb"),
-        floor(col("ev_lat") / bandDeg).cast("long").as("lb"),
-        floor(col("ev_lon") / lonDeg).cast("long").as("lob"))
+          col("ev_lat").as("m_lat"), col("ev_lon").as("m_lon"))
+      val subs = ev.select("evid", "mag", "ev_us", "ev_lat", "ev_lon")
       val dx = (col("m_lon") - col("ev_lon")) * KmPerDegLon
       val dy = (col("m_lat") - col("ev_lat")) * KmPerDegLat
-      subs.join(mains, Seq("tb", "lb", "lob"))
-        .filter(col("m_evid") =!= col("evid"))
-        .filter(col("m_mag") >= col("mag") + MagGapMin)
-        .filter(abs(col("ev_us") - col("m_us")) <= tUs)
-        .filter(sqrt(dx * dx + dy * dy) <= dKm)
+      Joins.banded(mains, subs, Seq(
+          Band.symmetric(col("m_us"), col("ev_us"), tUs.toDouble, tUs.toDouble),
+          Band.symmetric(col("m_lat"), col("ev_lat"), latDeg, dKm / KmPerDegLat),
+          Band.symmetric(col("m_lon"), col("ev_lon"), lonDeg, dKm / KmPerDegLon)))
+        .filter(col("m_evid") =!= col("evid") && abs(col("ev_us") - col("m_us")) <= tUs &&
+          cond && sqrt(dx * dx + dy * dy) <= dKm)
         .select("evid", "mag", "m_evid", "m_mag")
     }.reduce(_ unionByName _)
   }
+
+  /** Candidate (sub, main) pairs satisfying the magnitude-dependent
+    * time/space windows: the class-pair core plus the Gardner-Knopoff
+    * magnitude gap. */
+  private def aftershockPairs(s: SparkSession, d: String): DataFrame =
+    classPairs(s, d, col("m_mag") >= col("mag") + MagGapMin)
 
   def aftershockFlags(s: SparkSession, d: String): DataFrame = {
     val aft = aftershockPairs(s, d).select(col("evid")).distinct()
@@ -580,54 +568,13 @@ object GeoOps {
     * window holds it. Both sides' magnitudes are emitted because the
     * greedy's processing order (mag DESC, evid ASC — the
     * deterministic stand-in for numpy's reversed stable argsort) is
-    * resolved downstream, not encoded in the pair set. Same
-    * per-magnitude-class banded join shape as [[aftershockPairs]]. */
-  private[graft] def abwdPairs(s: SparkSession, d: String): DataFrame = {
-    val ev = Catalog.events(s, d)
-    val offsets = explode(array((for (t <- -1 to 1; la <- -1 to 1; lo <- -1 to 1)
-      yield struct(lit(t.toLong).as("t"), lit(la.toLong).as("la"), lit(lo.toLong).as("lo"))): _*)).as("off")
-    magClasses.map { case (cls, tUs, dKm, bandDeg) =>
-      val lonDeg = lonBandDeg(dKm)
-      val mains = ev.filter(floor(col("mag")) === cls)
-        .select(col("evid").as("m_evid"), col("mag").as("m_mag"), col("ev_us").as("m_us"),
-          col("ev_lat").as("m_lat"), col("ev_lon").as("m_lon"), offsets)
-        .select(col("m_evid"), col("m_mag"), col("m_us"), col("m_lat"), col("m_lon"),
-          (expr(s"m_us div $tUs") + col("off.t")).as("tb"),
-          (floor(col("m_lat") / bandDeg).cast("long") + col("off.la")).as("lb"),
-          (floor(col("m_lon") / lonDeg).cast("long") + col("off.lo")).as("lob"))
-      val subs = ev.select(col("evid"), col("mag"), col("ev_us"),
-        col("ev_lat"), col("ev_lon"),
-        expr(s"ev_us div $tUs").as("tb"),
-        floor(col("ev_lat") / bandDeg).cast("long").as("lb"),
-        floor(col("ev_lon") / lonDeg).cast("long").as("lob"))
-      val dx = (col("m_lon") - col("ev_lon")) * KmPerDegLon
-      val dy = (col("m_lat") - col("ev_lat")) * KmPerDegLat
-      subs.join(mains, Seq("tb", "lb", "lob"))
-        .filter(col("m_evid") =!= col("evid"))
-        .filter(col("ev_us") >= col("m_us") && col("ev_us") - col("m_us") <= tUs)
-        .filter(sqrt(dx * dx + dy * dy) <= dKm)
-        .select("evid", "mag", "m_evid", "m_mag")
-    }.reduce(_ unionByName _)
-  }
+    * resolved downstream, not encoded in the pair set. The class-pair
+    * core plus the forward half of its time window. */
+  private[graft] def abwdPairs(s: SparkSession, d: String): DataFrame =
+    classPairs(s, d, col("ev_us") >= col("m_us"))
 
   val MaxAbwdRounds = 500
 
-  /** Greedy ABWD cluster labels (`aftershocks.py:222`; reference test
-    * `tests/test_aftershocks.py:52`): walk the catalogue in magnitude
-    * order (mag DESC, evid ASC — the deterministic stand-in for
-    * numpy's reversed stable argsort); each still-unlabeled event
-    * with ≥1 still-unlabeled event in its forward window becomes a
-    * mainshock, labels itself, and claims all of them. Faithful to
-    * the reference's fine print: claims carry NO magnitude condition
-    * (a barren earlier event can be claimed by a later, smaller
-    * container — `valid` is only "unlabeled, dt in [0, window], in
-    * range"), a mainshock labels itself only when it claims ≥1
-    * event, and the order-last event never claims (the reference
-    * loops `range(neq - 1)`).
-    *
-    * Output: cluster_evid = the claiming mainshock's evid (its own
-    * for mainshocks, NULL for events in no cluster — the reference's
-    * label-0), is_aftershock flag. */
   /** The qualifying ABWD pair table, checkpointed and cached per data
     * dir (the sigCache pattern): ~O(events × window occupancy) narrow
     * rows, scanned many times per labeling run (dependency build,
@@ -650,9 +597,24 @@ object GeoOps {
   }
 
   private def abwdPairsCached(s: SparkSession, d: String): DataFrame =
-    abwdPairCache.get(d)(
-      abwdPairs(s, d).select("evid", "mag", "m_evid", "m_mag").localCheckpoint(true))
+    abwdPairCache.get(d)(abwdPairs(s, d).localCheckpoint(true))
 
+  /** Greedy ABWD cluster labels (`aftershocks.py:222`; reference test
+    * `tests/test_aftershocks.py:52`): walk the catalogue in magnitude
+    * order (mag DESC, evid ASC — the deterministic stand-in for
+    * numpy's reversed stable argsort); each still-unlabeled event
+    * with ≥1 still-unlabeled event in its forward window becomes a
+    * mainshock, labels itself, and claims all of them. Faithful to
+    * the reference's fine print: claims carry NO magnitude condition
+    * (a barren earlier event can be claimed by a later, smaller
+    * container — `valid` is only "unlabeled, dt in [0, window], in
+    * range"), a mainshock labels itself only when it claims ≥1
+    * event, and the order-last event never claims (the reference
+    * loops `range(neq - 1)`).
+    *
+    * Output: cluster_evid = the claiming mainshock's evid (its own
+    * for mainshocks, NULL for events in no cluster — the reference's
+    * label-0), is_aftershock flag. */
   def aftershockClusters(s: SparkSession, d: String): DataFrame =
     abwdLabel(Catalog.events(s, d).select(col("evid"), col("mag")),
       abwdPairsCached(s, d))
@@ -1135,10 +1097,10 @@ object GeoOps {
 
   /** Piecewise window lookups keyed on the mainshock magnitude class. */
   private val tWinSql: String =
-    magClasses.map { case (cls, tUs, _, _) => s"WHEN floor(m.mag) = $cls THEN $tUs" }
+    magClasses.map { case (cls, tUs, _, _, _) => s"WHEN floor(m.mag) = $cls THEN $tUs" }
       .mkString("(CASE ", " ", " END)")
   private val dWinSql: String =
-    magClasses.map { case (cls, _, dKm, _) => s"WHEN floor(m.mag) = $cls THEN ${dKm}e0" }
+    magClasses.map { case (cls, _, dKm, _, _) => s"WHEN floor(m.mag) = $cls THEN ${dKm}e0" }
       .mkString("(CASE ", " ", " END)")
 
   private def insideQuadSql(verts: Seq[(Double, Double)], px: String, py: String): String =

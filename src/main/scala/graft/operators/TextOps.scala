@@ -1678,9 +1678,6 @@ object TextOps {
   def uniVocabFor(nTypes: Long, mul: Int = 4): Int =
     math.max(UniVocabK, math.min(32000, (mul * math.sqrt(nTypes.toDouble)).toInt))
 
-  def uniSeedFor(nTypes: Long, mul: Int = 4): Int =
-    uniVocabFor(nTypes, mul) * 5 / 2
-
   /** Viterbi segmentation of every word in the vocab table under a
     * broadcast-literal log-prob model — expressed entirely in Catalyst
     * higher-order functions (no UDF, no mapPartitions): one forward

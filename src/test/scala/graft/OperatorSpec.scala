@@ -1767,6 +1767,45 @@ class OperatorSpec extends AnyFunSuite with BeforeAndAfterAll {
       .collect().map(r => (r.getDouble(2), r.getDouble(3), r.getInt(4)))
     assert(rows.nonEmpty)
     assert(rows.forall { case (epi, hyp, oct) => hyp >= epi && epi <= GeoOps.MaxKm && oct >= 0 && oct <= 7 })
+    // the banded join drops no pair: same (evid, sta) set as the full
+    // events x stations product under the same equirectangular cutoff
+    val ev = graft.model.Catalog.events(spark, Sf).select("evid", "ev_lat", "ev_lon").collect()
+      .map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2)))
+    val st = graft.model.Catalog.stations(spark, Sf).select("sta", "sta_lat", "sta_lon").collect()
+      .map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2)))
+    val brute = (for ((evid, eLat, eLon) <- ev; (sta, sLat, sLon) <- st) yield {
+      val dx = (sLon - eLon) * GeoOps.KmPerDegLon
+      val dy = (sLat - eLat) * GeoOps.KmPerDegLat
+      (evid, sta, math.sqrt(dx * dx + dy * dy) <= GeoOps.MaxKm)
+    }).collect { case (evid, sta, true) => (evid, sta) }.toSet
+    val got = GeoOps.eventStationDistances(spark, Sf).select("evid", "sta").collect()
+      .map(r => (r.getLong(0), r.getLong(1)))
+    assert(got.length == got.distinct.length, "duplicate (evid, sta) pairs")
+    assert(got.toSet == brute,
+      s"missing ${(brute -- got).take(5)}, extra ${(got.toSet -- brute).take(5)}")
+  }
+
+  test("rrup_distances pair set equals the rupture-box brute force") {
+    // the +-2-band site: a box's half-width adds to the MaxKm reach
+    val planes = graft.model.Catalog.events(spark, Sf).select("evid", "mag", "ev_lat", "ev_lon")
+      .collect().map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2), r.getDouble(3)))
+      .filter(_._2 >= GeoOps.RupMagMin)
+    val st = graft.model.Catalog.stations(spark, Sf).select("sta", "sta_lat", "sta_lon").collect()
+      .map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2)))
+    assert(planes.nonEmpty)
+    val brute = (for ((evid, mag, eLat, eLon) <- planes; (sta, sLat, sLon) <- st) yield {
+      val halfW = math.floor(mag) * 0.05
+      val cLat = math.max(eLat - halfW, math.min(eLat + halfW, sLat))
+      val cLon = math.max(eLon - halfW, math.min(eLon + halfW, sLon))
+      val dx = (sLon - cLon) * GeoOps.KmPerDegLon
+      val dy = (sLat - cLat) * GeoOps.KmPerDegLat
+      (evid, sta, math.sqrt(dx * dx + dy * dy) <= GeoOps.MaxKm)
+    }).collect { case (evid, sta, true) => (evid, sta) }.toSet
+    val got = GeoOps.rrupDistances(spark, Sf).select("evid", "sta").collect()
+      .map(r => (r.getLong(0), r.getLong(1)))
+    assert(got.length == got.distinct.length, "duplicate (evid, sta) pairs")
+    assert(got.toSet == brute,
+      s"missing ${(brute -- got).take(5)}, extra ${(got.toSet -- brute).take(5)}")
   }
 
   test("abwd greedy matches the sequential reference on a hand-computed fixture") {
@@ -1822,6 +1861,22 @@ class OperatorSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("abwd clusters match a sequential greedy replay on the sf0.001 catalogue") {
     val pairs = GeoOps.abwdPairs(spark, Sf)
       .select("evid", "m_evid").collect().map(r => (r.getLong(0), r.getLong(1)))
+    // the replay below takes the pair set as input, so check the pair
+    // set itself: e lies in m's forward window 0 <= dt <= T and in the
+    // distance window of m's magnitude class
+    val ev = graft.model.Catalog.events(spark, Sf)
+      .select("evid", "mag", "ev_us", "ev_lat", "ev_lon").collect()
+      .map(r => (r.getLong(0), r.getDouble(1), r.getLong(2), r.getDouble(3), r.getDouble(4)))
+    val winByClass = GeoOps.magClasses.map(c => c._1 -> (c._2, c._3)).toMap
+    val brute = (for (m <- ev; (tUs, dKm) <- winByClass.get(math.floor(m._2).toInt).toSeq;
+                      e <- ev if e._1 != m._1 && e._3 - m._3 >= 0 && e._3 - m._3 <= tUs) yield {
+      val dx = (m._5 - e._5) * GeoOps.KmPerDegLon
+      val dy = (m._4 - e._4) * GeoOps.KmPerDegLat
+      (e._1, m._1, math.sqrt(dx * dx + dy * dy) <= dKm)
+    }).collect { case (e, m, true) => (e, m) }.toSet
+    assert(pairs.length == pairs.distinct.length, "duplicate (evid, m_evid) pairs")
+    assert(pairs.toSet == brute,
+      s"missing ${(brute -- pairs).take(5)}, extra ${(pairs.toSet -- brute).take(5)}")
     val claimable = pairs.groupBy(_._2).map { case (m, ps) => m -> ps.map(_._1).toSet }
     val order = graft.model.Catalog.events(spark, Sf).select("evid", "mag").collect()
       .map(r => (r.getLong(0), r.getDouble(1))).sortBy { case (evid, mag) => (-mag, evid) }
@@ -2726,6 +2781,69 @@ class OperatorSpec extends AnyFunSuite with BeforeAndAfterAll {
       docs, srcStats, "source", col("doc_id"), salts = 5)
     assert(sortedRows(salted) == sortedRows(plain),
       "salted join must be row-identical to the plain join")
+  }
+
+  test("Joins.banded plus the exact predicate equals the filtered cross join") {
+    import org.apache.spark.sql.functions._
+    import org.scalacheck.{Gen, Prop, Test => Check}
+    import org.scalacheck.Prop.propBoolean
+    import Joins.Band
+    val sp = spark; import sp.implicits._
+    // a band over key column stem "t" (Long), "la" or "lo" (Double)
+    case class Dim(stem: String, width: Double, lo: Double, hi: Double)
+    val timeDim = for {
+      w <- Gen.oneOf(7L, 10L)
+      t <- Gen.oneOf(w - 1, w, w + 3, 2 * w)
+      forward <- Gen.oneOf(true, false) // [0, T] as in the interval join
+    } yield Dim("t", w.toDouble, if (forward) 0.0 else -t.toDouble, t.toDouble)
+    def geoDim(stem: String) = for {
+      w <- Gen.oneOf(0.1, 0.15, 0.5, 3.0)
+      ratio <- Gen.oneOf(0.899, 1.0, 1.5, 2.0) // whole ratios put a window edge on a bucket edge
+    } yield Dim(stem, w, -w * ratio, w * ratio)
+    // keys on bucket edges, an ulp (Long: 1) either side, and a window
+    // edge away from a bucket edge, so pairs sit exactly reach apart
+    def key(d: Dim, integral: Boolean) = for {
+      k <- Gen.choose(-3, 3)
+      shift <- Gen.oneOf(0.0, d.lo, d.hi)
+      edge = k * d.width + shift
+      v <- if (integral) Gen.oneOf(edge - 1, edge, edge + 1)
+           else Gen.oneOf(math.nextDown(edge), edge, math.nextUp(edge))
+    } yield v
+    def rows(dims: Seq[Dim]) = Gen.choose(1, 40).flatMap(n => Gen.listOfN(n, for {
+      g <- Gen.frequency(8 -> Gen.const(0), 2 -> Gen.choose(1, 3)) // one hot `on` value
+      t <- key(dims(0), integral = true)
+      la <- key(dims(1), integral = false)
+      lo <- key(dims(2), integral = false)
+    } yield (g, t.toLong, la, lo)))
+    val cases = for {
+      dims <- Gen.sequence[Seq[Dim], Dim](Seq(timeDim, geoDim("la"), geoDim("lo")))
+      used <- Gen.atLeastOne(dims)
+      withOn <- Gen.oneOf(true, false)
+      replicatedLeft <- Gen.oneOf(true, false)
+      r <- rows(dims)
+      o <- rows(dims)
+    } yield (dims, used.toSeq, withOn, replicatedLeft, r, o)
+    val prop = Prop.forAllNoShrink(cases) { case (_, used, withOn, replicatedLeft, r, o) =>
+      val rep = r.zipWithIndex.map { case ((g, t, la, lo), i) => (i.toLong, g, t, la, lo) }
+        .toDF("rid", "g", "r_t", "r_la", "r_lo")
+      val oth = o.zipWithIndex.map { case ((g, t, la, lo), i) => (i.toLong, g, t, la, lo) }
+        .toDF("oid", "g", "o_t", "o_la", "o_lo")
+      val pred = used.map { d =>
+        val diff = col(s"o_${d.stem}") - col(s"r_${d.stem}")
+        if (d.stem == "t") diff >= d.lo.toLong && diff <= d.hi.toLong else diff >= d.lo && diff <= d.hi
+      }.reduce(_ && _)
+      val bands = used.map(d => Band(col(s"r_${d.stem}"), col(s"o_${d.stem}"), d.width, d.lo, d.hi))
+      val got = Joins.banded(rep, oth, bands, if (withOn) Seq("g") else Nil, replicatedLeft)
+        .filter(pred).select("rid", "oid").collect().map(x => (x.getLong(0), x.getLong(1))).toSeq
+      val want = rep.crossJoin(oth.withColumnRenamed("g", "og"))
+        .filter(pred && (if (withOn) col("g") === col("og") else lit(true)))
+        .select("rid", "oid").collect().map(x => (x.getLong(0), x.getLong(1))).toSet
+      (got.size == got.distinct.size) :| s"a pair appears twice in $got" &&
+        (got.toSet == want) :| s"bands $used: missing ${want -- got}, extra ${got.toSet -- want}"
+    }
+    val res = Check.check(Check.Parameters.default.withMinSuccessfulTests(30).withWorkers(1)
+      .withInitialSeed(org.scalacheck.rng.Seed(20261018L)), prop)
+    assert(res.passed, org.scalacheck.util.Pretty.pretty(res))
   }
 
   test("semantic_clusters equals a union-find over the thresholded kNN graph") {
