@@ -276,7 +276,7 @@ object EventOps {
       .select(col("event_id").as("purchase_id"), col("user_id"), col("ts_us").as("p_us"))
     Joins.banded(clicks, purchases,
         Seq(Joins.Band(col("c_us"), col("p_us"), AttributionUs.toDouble, 0.0, AttributionUs.toDouble)),
-        on = Seq("user_id"), replicatedLeft = true)
+        on = Seq("user_id"))
       .filter(col("p_us") >= col("c_us") && col("p_us") <= col("c_us") + AttributionUs)
   }
 

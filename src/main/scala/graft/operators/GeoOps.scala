@@ -80,8 +80,7 @@ object GeoOps {
     * and [[pairFrame]]; callers apply the exact MaxKm cutoff. */
   private def stationPairs(s: SparkSession, d: String): DataFrame =
     Joins.banded(fanoutWide(s, Catalog.events(s, d)), broadcast(Catalog.stations(s, d)),
-      Seq(Band.symmetric(col("ev_lat"), col("sta_lat"), BandDeg, MaxKm / KmPerDegLat)),
-      replicatedLeft = true)
+      Seq(Band.symmetric(col("ev_lat"), col("sta_lat"), BandDeg, MaxKm / KmPerDegLat)))
 
   // Mean Earth radius (IUGG), km — the spherical production metric.
   val EarthRadiusKm = 6371.0088
@@ -121,12 +120,17 @@ object GeoOps {
 
   private val MaxRupMag = 9 // rupture extents are sized for magnitudes up to this
   private val RupHalfWDegPerMag = 0.05
+  // oblique-plane half-length (= width), km: the columns and the band reach read it here
+  private val RupHalfLenKmPerMag = 5.0
+  private val RupHalfLenZeroMag = 2.5
+  private def rupHalfLenKm(mag: Column): Column =
+    (floor(mag) - RupHalfLenZeroMag) * RupHalfLenKmPerMag
 
   /** The magnitude-sized rupture-plane boxes (large events only —
     * dimension-sized at any scale, always broadcastable). */
-  private def rupPlanes(s: SparkSession, d: String): DataFrame = {
+  private def rupPlanes(events: DataFrame): DataFrame = {
     val halfW = floor(col("mag")) * lit(RupHalfWDegPerMag) // half-width in degrees
-    Catalog.events(s, d).filter(col("mag") >= RupMagMin)
+    events.filter(col("mag") >= RupMagMin)
       .select(col("evid"), col("mag"),
         (col("ev_lat") - halfW).as("lat1"), (col("ev_lat") + halfW).as("lat2"),
         (col("ev_lon") - halfW).as("lon1"), (col("ev_lon") + halfW).as("lon2"),
@@ -142,34 +146,17 @@ object GeoOps {
     val dyKm = (col("sta_lat") - cLat) * KmPerDegLat
     sqrt(dxKm * dxKm + dyKm * dyKm)
   }
+  // GC2-style strike coordinates of the propagation table: r_x, signed
+  // km from the extended strike line (the box strike runs east-west, so
+  // the north-positive offset from the box centre line, the hanging-wall
+  // convention of `src_site_dist.calc_rx_ry`), and r_y, km along strike
+  // beyond the trace ends (0 inside). greatest/least/abs — bit-portable.
   private def rupXCol: Column =
     (col("sta_lat") - (col("lat1") + col("lat2")) / 2) * KmPerDegLat
   private def rupYCol: Column =
     greatest(lit(0.0),
       abs((col("sta_lon") - (col("lon1") + col("lon2")) / 2) * KmPerDegLon)
         - (col("lon2") - col("lon1")) / 2 * KmPerDegLon)
-
-  /** The rupture-plane pair frame behind [[rrupDistances]] and
-    * [[propagationTable]]: the banded station×plane join with r_jb /
-    * r_rup plus the GC2-style strike coordinates r_x (signed
-    * perpendicular km from the extended strike line — the box strike
-    * runs east-west, so this is the north-positive offset from the
-    * box centre line, the hanging-wall convention of
-    * `src_site_dist.calc_rx_ry`) and r_y (km along strike beyond the
-    * trace ends; 0 when the projection lands inside). All
-    * greatest/least/abs arithmetic — bit-portable. */
-  private def rupFrame(s: SparkSession, d: String): DataFrame = {
-    // MaxKm/KmPerDegLat (2.70°) plus the box half-width (0.45° at mag 9)
-    // can exceed one 3° band: the derived offsets are ±2
-    val reach = MaxKm / KmPerDegLat + MaxRupMag * RupHalfWDegPerMag
-    Joins.banded(broadcast(rupPlanes(s, d)), fanoutWide(s, Catalog.stations(s, d)),
-        Seq(Band.symmetric((col("lat1") + col("lat2")) / 2, col("sta_lat"), BandDeg, reach)))
-      .withColumn("r_jb", rupJbCol)
-      .filter(col("r_jb") <= MaxKm)
-      .select(col("evid"), col("sta"), col("r_jb"),
-        sqrt(col("r_jb") * col("r_jb") + col("ztop") * col("ztop")).as("r_rup"),
-        rupXCol.as("r_x"), rupYCol.as("r_y"))
-  }
 
   /** Rupture-plane distances (`distances.py` r_rup / r_jb): for large
     * events a finite rupture surface replaces the point source. The
@@ -181,7 +168,20 @@ object GeoOps {
     * station product is cut by the same lat-band prefilter as
     * [[eventStationDistances]]. */
   def rrupDistances(s: SparkSession, d: String): DataFrame =
-    rupFrame(s, d).select("evid", "sta", "r_jb", "r_rup")
+    rrupDistances(s, Catalog.events(s, d), Catalog.stations(s, d))
+
+  /** [[rrupDistances]] over given event and station frames. */
+  private[graft] def rrupDistances(s: SparkSession, events: DataFrame, stations: DataFrame): DataFrame = {
+    // MaxKm/KmPerDegLat (2.70°) plus the box half-width (0.45° at mag 9)
+    // can exceed one 3° band: the derived offsets are ±2
+    val reach = MaxKm / KmPerDegLat + MaxRupMag * RupHalfWDegPerMag
+    Joins.banded(broadcast(rupPlanes(events)), fanoutWide(s, stations),
+        Seq(Band.symmetric((col("lat1") + col("lat2")) / 2, col("sta_lat"), BandDeg, reach)))
+      .withColumn("r_jb", rupJbCol)
+      .filter(col("r_jb") <= MaxKm)
+      .select(col("evid"), col("sta"), col("r_jb"),
+        sqrt(col("r_jb") * col("r_jb") + col("ztop") * col("ztop")).as("r_rup"))
+  }
 
   /** Production-grade rupture distances with OBLIQUE plane geometry —
     * the user-facing twin of [[rrupDistances]] matching the
@@ -197,15 +197,19 @@ object GeoOps {
     * cross-engine, so like the geodesic distances this is rows-only at
     * the gate and value-checked by a driver-side recompute test; the
     * plane side stays broadcast + lat-banded. */
-  def rrupDistancesGeo(s: SparkSession, d: String): DataFrame = {
-    val halfL = (floor(col("mag")) - 3) * 5.0 + 2.5 // along-strike half-length, km
-    val width = halfL                                // down-dip width, km
+  def rrupDistancesGeo(s: SparkSession, d: String): DataFrame =
+    rrupDistancesGeo(s, Catalog.events(s, d), Catalog.stations(s, d))
+
+  /** [[rrupDistancesGeo]] over given event and station frames. */
+  private[graft] def rrupDistancesGeo(s: SparkSession, events: DataFrame, stations: DataFrame): DataFrame = {
+    val halfL = rupHalfLenKm(col("mag")) // along-strike half-length, km
+    val width = halfL                    // down-dip width, km
     // All trig evaluates on the PLANE side (dimension-sized, broadcast):
     // the per-pair math below is pure +,-,*,/ over the precomputed
     // frame vectors — measured ~2x on the banded product.
     val strike = radians((col("evid") % 360).cast("double"))
     val dip = radians(lit(30.0) + (col("evid") % 6) * 10.0)
-    val planes = Catalog.events(s, d).filter(col("mag") >= RupMagMin)
+    val planes = events.filter(col("mag") >= RupMagMin)
       .select(col("evid"), col("ev_lat"), col("ev_lon"),
         sin(strike).as("sx"), cos(strike).as("sy"),
         cos(strike).as("hx"), (-sin(strike)).as("hy"),
@@ -214,12 +218,12 @@ object GeoOps {
         (col("ev_depth") * 0.5).as("ztop"))
     // the surface rectangle reaches at most half_l + wid·cos(dip) ≤
     // 2·half_l (65 km at mag 9) from the epicentre: the offsets are ±2
-    val reach = (MaxKm + 2 * ((MaxRupMag - 3) * 5.0 + 2.5)) / KmPerDegLat
+    val reach = (MaxKm + 2 * (MaxRupMag - RupHalfLenZeroMag) * RupHalfLenKmPerMag) / KmPerDegLat
     val dx = (col("sta_lon") - col("ev_lon")) * KmPerDegLon // East, km
     val dy = (col("sta_lat") - col("ev_lat")) * KmPerDegLat // North, km
     val (sx, sy) = (col("sx"), col("sy"))  // strike unit (E,N)
     val (hx, hy) = (col("hx"), col("hy"))  // dip-direction horizontal unit
-    Joins.banded(broadcast(planes), fanoutWide(s, Catalog.stations(s, d)),
+    Joins.banded(broadcast(planes), fanoutWide(s, stations),
         Seq(Band.symmetric(col("ev_lat"), col("sta_lat"), BandDeg, reach)))
       // 3D frame: r = station - top-edge anchor (anchor at depth ztop, up = +z)
       .withColumn("rz", col("ztop"))
@@ -249,7 +253,7 @@ object GeoOps {
     * corner table per large event; rows-only at the gate (trig),
     * recompute-tested. */
   def ccldVertices(s: SparkSession, d: String): DataFrame = {
-    val halfL = (floor(col("mag")) - 3) * 5.0 + 2.5
+    val halfL = rupHalfLenKm(col("mag"))
     val corners = explode(array(
       struct(lit(0L).as("corner"), lit(-1.0).as("su"), lit(0.0).as("wu")),  // ULC
       struct(lit(1L).as("corner"), lit(1.0).as("su"), lit(0.0).as("wu")),   // URC
@@ -470,7 +474,7 @@ object GeoOps {
       // same holds: a multi-split scan is already wide, and no pair
       // row ever crosses the wire.
       .withColumn("b_az_oct", (col("az_oct") + 4) % 8)
-      .join(broadcast(rupPlanes(s, d).drop("mag")), Seq("evid"), "left")
+      .join(broadcast(rupPlanes(Catalog.events(s, d)).drop("mag")), Seq("evid"), "left")
       .withColumn("r_jb0", rupJbCol)
       .select(col("evid"), col("sta"), col("r_epi"), col("r_hyp"),
         when(gate, col("r_jb0")).otherwise(lit(null).cast("double")).as("r_jb"),
@@ -506,10 +510,8 @@ object GeoOps {
     * on (time, lat, lon) sized to that class's window — a flat 60-day
     * band was measured to blow up ~1000x on the dense synthetic
     * catalogue; per-class banding keeps the joined row count within a
-    * small slack factor of the true qualifying pairs. `cond` is checked
-    * before the distance's sqrt: as a filter on top of the core it
-    * came after it, and the ABWD build then took the sqrt over the
-    * backward half of the time window too. */
+    * small slack factor of the true qualifying pairs. `cond` runs
+    * before the distance's sqrt. */
   private def classPairs(s: SparkSession, d: String, cond: Column): DataFrame = {
     val ev = Catalog.events(s, d)
     magClasses.map { case (cls, tUs, dKm, latDeg, lonDeg) =>
@@ -1171,8 +1173,8 @@ object GeoOps {
        |)""".stripMargin
   }
 
-  /** [[rupFrame]]'s oracle body — the rrup oracle plus the r_x / r_y
-    * strike coordinates, same association order as the Columns. */
+  /** The propagation table's rupture columns — the rrup oracle plus the
+    * r_x / r_y strike coordinates, same association order as the Columns. */
   private val rupxOracleBody: String =
     s"""SELECT evid, sta, r_jb, sqrt(r_jb * r_jb + ztop * ztop) AS r_rup,
        |  (sta_lat - (lat1 + lat2) / 2) * ${KmPerDegLat}e0 AS r_x,

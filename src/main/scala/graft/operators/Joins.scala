@@ -49,11 +49,10 @@ object Joins {
 
   /** One dimension of [[banded]]: a qualifying pair has `otherKey −
     * replicatedKey` in `[lo, hi]`, and both keys bucket by `width` (a
-    * double key as `floor(key / width)`, an integral key by exact `div`,
-    * so `width` must then be whole). `div` truncates toward zero, so
-    * its bucket 0 is nearly twice as wide; buckets at least `width`
-    * wide keep the offsets exhaustive only for a window holding 0,
-    * which an integral band must have. */
+    * double key as `floor(key / width)`, an integral key by exact `div`
+    * with a whole `width`). `div` truncates toward zero, so its bucket 0
+    * is nearly twice as wide: the offsets stay exhaustive only for a
+    * window holding 0, which an integral band must have. */
   final case class Band(replicatedKey: Column, otherKey: Column,
                         width: Double, lo: Double, hi: Double) {
     require(width > 0 && lo <= hi, s"a band needs width > 0 and lo <= hi: $this")
@@ -83,10 +82,10 @@ object Joins {
     * band; `replicated` explodes over the cross product of the bands'
     * [[Band.offsets]], and the sides equi-join on `on` plus the
     * buckets, whose names miss every input column (as in
-    * [[saltedJoin]]). `replicatedLeft` only sets the join's child
-    * order, so a caller's plan keeps its build side. */
+    * [[saltedJoin]]). `other` is the join's left child; callers read
+    * the output by column name. */
   def banded(replicated: DataFrame, other: DataFrame, bands: Seq[Band],
-             on: Seq[String] = Nil, replicatedLeft: Boolean = false): DataFrame = {
+             on: Seq[String] = Nil): DataFrame = {
     require(bands.nonEmpty, "banded needs at least one band")
     val taken = (replicated.columns ++ other.columns).toSet
     val names = Iterator.from(0).map(i => s"__band$i").filterNot(taken).take(bands.size + 1).toSeq
@@ -108,8 +107,7 @@ object Joins {
     val oth = other.select(col("*") +: bands.indices.map { i =>
       bucket(bands(i).otherKey, bands(i).width, integral(i)).as(buckets(i))
     }: _*)
-    val (left, right) = if (replicatedLeft) (rep, oth) else (oth, rep)
-    left.join(right, on ++ buckets).drop(buckets: _*)
+    oth.join(rep, on ++ buckets).drop(buckets: _*)
   }
 
   private def bucket(key: Column, width: Double, integral: Boolean): Column =

@@ -1785,27 +1785,92 @@ class OperatorSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"missing ${(brute -- got).take(5)}, extra ${(got.toSet -- brute).take(5)}")
   }
 
-  test("rrup_distances pair set equals the rupture-box brute force") {
-    // the +-2-band site: a box's half-width adds to the MaxKm reach
-    val planes = graft.model.Catalog.events(spark, Sf).select("evid", "mag", "ev_lat", "ev_lon")
-      .collect().map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2), r.getDouble(3)))
+  /** Asserts the (evid, sta) pairs of `got` are every large event ×
+    * station pair with `rjb` within the cutoff, none twice, and returns
+    * the band offset (station lat bucket − the join key's bucket) of
+    * each qualifying pair. */
+  private def assertRupturePairs(got: DataFrame, events: DataFrame, stations: DataFrame)
+      (key: (Double, Double) => Double,
+       rjb: (Long, Double, Double, Double, Double, Double) => Double): Set[Int] = {
+    val planes = events.select("evid", "mag", "ev_lat", "ev_lon").collect()
+      .map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2), r.getDouble(3)))
       .filter(_._2 >= GeoOps.RupMagMin)
-    val st = graft.model.Catalog.stations(spark, Sf).select("sta", "sta_lat", "sta_lon").collect()
+    val st = stations.select("sta", "sta_lat", "sta_lon").collect()
       .map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2)))
     assert(planes.nonEmpty)
-    val brute = (for ((evid, mag, eLat, eLon) <- planes; (sta, sLat, sLon) <- st) yield {
-      val halfW = math.floor(mag) * 0.05
-      val cLat = math.max(eLat - halfW, math.min(eLat + halfW, sLat))
-      val cLon = math.max(eLon - halfW, math.min(eLon + halfW, sLon))
-      val dx = (sLon - cLon) * GeoOps.KmPerDegLon
-      val dy = (sLat - cLat) * GeoOps.KmPerDegLat
-      (evid, sta, math.sqrt(dx * dx + dy * dy) <= GeoOps.MaxKm)
-    }).collect { case (evid, sta, true) => (evid, sta) }.toSet
-    val got = GeoOps.rrupDistances(spark, Sf).select("evid", "sta").collect()
-      .map(r => (r.getLong(0), r.getLong(1)))
-    assert(got.length == got.distinct.length, "duplicate (evid, sta) pairs")
-    assert(got.toSet == brute,
-      s"missing ${(brute -- got).take(5)}, extra ${(got.toSet -- brute).take(5)}")
+    def bucket(lat: Double) = math.floor(lat / GeoOps.BandDeg).toInt
+    val brute = for ((evid, mag, eLat, eLon) <- planes; (sta, sLat, sLon) <- st
+                     if rjb(evid, mag, eLat, eLon, sLat, sLon) <= GeoOps.MaxKm)
+      yield ((evid, sta), bucket(sLat) - bucket(key(mag, eLat)))
+    val want = brute.map(_._1).toSet
+    val pairs = got.select("evid", "sta").collect().map(r => (r.getLong(0), r.getLong(1)))
+    assert(pairs.length == pairs.distinct.length, "duplicate (evid, sta) pairs")
+    assert(pairs.toSet == want,
+      s"missing ${(want -- pairs).take(5)}, extra ${(pairs.toSet -- want).take(5)}")
+    brute.map(_._2).toSet
+  }
+
+  // rrup_distances: r_jb to the axis-aligned box, banded on its centre
+  private def boxKey(mag: Double, eLat: Double): Double = {
+    val halfW = math.floor(mag) * 0.05
+    ((eLat - halfW) + (eLat + halfW)) / 2
+  }
+  private def boxRjb(evid: Long, mag: Double, eLat: Double, eLon: Double, sLat: Double, sLon: Double): Double = {
+    val halfW = math.floor(mag) * 0.05
+    val cLat = math.max(eLat - halfW, math.min(eLat + halfW, sLat))
+    val cLon = math.max(eLon - halfW, math.min(eLon + halfW, sLon))
+    val dx = (sLon - cLon) * GeoOps.KmPerDegLon
+    val dy = (sLat - cLat) * GeoOps.KmPerDegLat
+    math.sqrt(dx * dx + dy * dy)
+  }
+  // rrup_distances_geo: r_jb to the oblique plane's surface projection,
+  // banded on the epicentre (same operation order as the operator)
+  private def obliqueRjb(evid: Long, mag: Double, eLat: Double, eLon: Double, sLat: Double, sLon: Double): Double = {
+    val strike = math.toRadians((evid % 360).toDouble)
+    val cd = math.cos(math.toRadians(30.0 + (evid % 6) * 10.0))
+    val halfL = (math.floor(mag) - 3) * 5.0 + 2.5
+    val (sx, sy, hx, hy) = (math.sin(strike), math.cos(strike), math.cos(strike), -math.sin(strike))
+    val dx = (sLon - eLon) * GeoOps.KmPerDegLon
+    val dy = (sLat - eLat) * GeoOps.KmPerDegLat
+    val s2 = math.max(-halfL, math.min(halfL, dx * sx + dy * sy))
+    val w2 = math.max(0.0, math.min(halfL * cd, dx * hx + dy * hy))
+    val (ex, ey) = (dx - (s2 * sx + w2 * hx), dy - (s2 * sy + w2 * hy))
+    math.sqrt(ex * ex + ey * ey)
+  }
+
+  /** Rupture events the catalogue cannot produce (its magnitudes stay
+    * below 6): two class-9 events 0.05° inside a 3° band edge whose
+    * stations within the cutoff sit two bands away — reachable only
+    * through the ±2 offsets the rupture reach derives — a class-7
+    * event, and a small event the plane filter drops. */
+  private def rupFixture: (DataFrame, DataFrame) = {
+    val sp = spark; import sp.implicits._
+    val ev = Seq((330L, 0L, 9.2, -42.05, 172.0, 10.0), (150L, 0L, 9.2, -41.95, 172.0, 10.0),
+        (335L, 0L, 7.4, -42.02, 172.0, 20.0), (7L, 0L, 4.0, -42.0, 172.0, 5.0))
+      .toDF("evid", "ev_us", "mag", "ev_lat", "ev_lon", "ev_depth")
+    val st = Seq((1L, -38.99, 172.0983, 400.0), (2L, -45.01, 171.9017, 400.0),
+        (3L, -38.99, 172.0, 400.0), (4L, -38.5, 172.0, 400.0))
+      .toDF("sta", "sta_lat", "sta_lon", "sta_vs30")
+    (ev, st)
+  }
+
+  test("rrup_distances pair set equals the rupture-box brute force") {
+    val (ev, st) = (graft.model.Catalog.events(spark, Sf), graft.model.Catalog.stations(spark, Sf))
+    assertRupturePairs(GeoOps.rrupDistances(spark, Sf), ev, st)(boxKey, boxRjb)
+    // the ±2 site: a class-9 box's half-width adds 0.45° to the MaxKm reach
+    val (fev, fst) = rupFixture
+    val offsets = assertRupturePairs(GeoOps.rrupDistances(spark, fev, fst), fev, fst)(boxKey, boxRjb)
+    assert(offsets.contains(2) && offsets.contains(-2), s"fixture offsets $offsets")
+  }
+
+  test("rrup_distances_geo pair set equals the oblique-plane brute force") {
+    val (ev, st) = (graft.model.Catalog.events(spark, Sf), graft.model.Catalog.stations(spark, Sf))
+    assertRupturePairs(GeoOps.rrupDistancesGeo(spark, Sf), ev, st)((_, lat) => lat, obliqueRjb)
+    // the ±2 site: a class-9 plane's surface projection reaches 42 km
+    // beyond the epicentre
+    val (fev, fst) = rupFixture
+    val offsets = assertRupturePairs(GeoOps.rrupDistancesGeo(spark, fev, fst), fev, fst)((_, lat) => lat, obliqueRjb)
+    assert(offsets.contains(2) && offsets.contains(-2), s"fixture offsets $offsets")
   }
 
   test("abwd greedy matches the sequential reference on a hand-computed fixture") {
@@ -2819,11 +2884,10 @@ class OperatorSpec extends AnyFunSuite with BeforeAndAfterAll {
       dims <- Gen.sequence[Seq[Dim], Dim](Seq(timeDim, geoDim("la"), geoDim("lo")))
       used <- Gen.atLeastOne(dims)
       withOn <- Gen.oneOf(true, false)
-      replicatedLeft <- Gen.oneOf(true, false)
       r <- rows(dims)
       o <- rows(dims)
-    } yield (dims, used.toSeq, withOn, replicatedLeft, r, o)
-    val prop = Prop.forAllNoShrink(cases) { case (_, used, withOn, replicatedLeft, r, o) =>
+    } yield (dims, used.toSeq, withOn, r, o)
+    val prop = Prop.forAllNoShrink(cases) { case (_, used, withOn, r, o) =>
       val rep = r.zipWithIndex.map { case ((g, t, la, lo), i) => (i.toLong, g, t, la, lo) }
         .toDF("rid", "g", "r_t", "r_la", "r_lo")
       val oth = o.zipWithIndex.map { case ((g, t, la, lo), i) => (i.toLong, g, t, la, lo) }
@@ -2833,7 +2897,7 @@ class OperatorSpec extends AnyFunSuite with BeforeAndAfterAll {
         if (d.stem == "t") diff >= d.lo.toLong && diff <= d.hi.toLong else diff >= d.lo && diff <= d.hi
       }.reduce(_ && _)
       val bands = used.map(d => Band(col(s"r_${d.stem}"), col(s"o_${d.stem}"), d.width, d.lo, d.hi))
-      val got = Joins.banded(rep, oth, bands, if (withOn) Seq("g") else Nil, replicatedLeft)
+      val got = Joins.banded(rep, oth, bands, if (withOn) Seq("g") else Nil)
         .filter(pred).select("rid", "oid").collect().map(x => (x.getLong(0), x.getLong(1))).toSeq
       val want = rep.crossJoin(oth.withColumnRenamed("g", "og"))
         .filter(pred && (if (withOn) col("g") === col("og") else lit(true)))
