@@ -1061,20 +1061,6 @@ object AnnOps {
       .toDF("m", "c", "cent")
   }
 
-  /** Product-quantized ANN (PQ + asymmetric distance computation,
-    * Jégou et al. 2011): each vector is stored as PqM sub-codes (one
-    * byte per subspace — 8 bytes per vector here vs 256 for float32),
-    * each sub-code the argmax-dot codebook entry for that subspace
-    * slice; queries stay exact and score against the CONCATENATED
-    * reconstruction (sequential-fold dot → deterministic double on
-    * both engines, unlike a shuffled sum of per-subspace partials).
-    * Scale shape: assignment is one broadcast nested-loop over the
-    * 128-row codebook + a partial-aggregable per-(vec, subspace)
-    * max_by + one per-vec sorted-collect — all keyed by vec_id, no
-    * vector-side shuffle beyond those groupBys; then the same
-    * broadcast-queries + window top-k as every ANN baseline here.
-    * Compose with the IVF cells for the probe structure; this checked
-    * query pins the quantize→ADC arithmetic end-to-end. */
   /** PQ encode + reconstruct: (vec_id, recon, rnrm) — the quantized
     * representation both PQ variants score against (assignment via the
     * broadcast codebook, per-(vec, subspace) partial-agg max_by, one
@@ -1107,6 +1093,20 @@ object AnnOps {
     * table (the FAISS index file). Released by [[Caches.clearAll]]. */
   private val pqReconCache = new Caches.PerDir[DataFrame]("AnnOps.pqRecon", Seq(_))
 
+  /** Product-quantized ANN (PQ + asymmetric distance computation,
+    * Jégou et al. 2011): each vector is stored as PqM sub-codes (one
+    * byte per subspace — 8 bytes per vector here vs 256 for float32),
+    * each sub-code the argmax-dot codebook entry for that subspace
+    * slice; queries stay exact and score against the CONCATENATED
+    * reconstruction (sequential-fold dot → deterministic double on
+    * both engines, unlike a shuffled sum of per-subspace partials).
+    * Scale shape: assignment is one broadcast nested-loop over the
+    * 128-row codebook + a partial-aggregable per-(vec, subspace)
+    * max_by + one per-vec sorted-collect — all keyed by vec_id, no
+    * vector-side shuffle beyond those groupBys; then the same
+    * broadcast-queries + window top-k as every ANN baseline here.
+    * Compose with the IVF cells for the probe structure; this checked
+    * query pins the quantize→ADC arithmetic end-to-end. */
   def annPqTopk(s: SparkSession, d: String): DataFrame = {
     pqRecon(s, d)
       .crossJoin(broadcast(queriesSide(s, d)))
@@ -1352,120 +1352,31 @@ object AnnOps {
   }
 
   val SemClusterCosT = 0.25 // edge-keep threshold for semantic clusters
-  val MaxCcRounds    = 50
-  // Driver-tail threshold (thresholded-edge rows; two longs each, so
-  // 4M edges ≈ 64 MB driver state) — the same bounded-tail pattern as
-  // the ABWD aftershock loop: below it the component structure is
-  // driver-sized and a union-find beats ~log(diameter) distributed
-  // rounds of per-round job latency; above it the distributed loop
-  // runs. Both paths are pinned equivalent by the spec.
-  val SemEdgeTailMax = 4000000L
 
   /** SEMANTIC CLUSTERS: connected components of the kNN similarity
     * graph above a cosine threshold — the graph-clustering consumer of
     * [[annKnnGraph]] (agglomerative semantic grouping for diversity
     * sampling / topic-balanced mixes; SemDeDup's cluster step without
-    * a fixed cell count). Same scale shape as the text-side
-    * `dup_clusters`: iterative min-label propagation over the
-    * thresholded edge list, checkpointed per round; every vector gets
-    * the minimum vec_id of its component (singletons keep their own).
-    * The kNN edge list is NOT symmetric — [[annKnnGraph]] rank-caps
-    * per direction, so an edge can survive the top-K cut in only one
-    * direction — and connected components are an undirected notion,
-    * so the edges are symmetrized (both directions unioned) before
-    * propagation. Two execution paths behind one result: a bounded
-    * DRIVER union-find tail when the thresholded edge list fits
-    * [[SemEdgeTailMax]] (distributed rounds are pure job latency at
-    * that size), and the distributed min-label loop with per-round
-    * POINTER JUMPS (label := label(label), every label is itself a
-    * vec_id) above it — O(log diameter) rounds, so the 50-round cap
-    * covers diameters up to 2^49 hops rather than aborting on a long
-    * near-dup chain. The DuckDB twin is a recursive-CTE transitive
-    * closure over the same kNN-graph SQL, symmetrized the same way. */
+    * a fixed cell count). Every vector gets the minimum vec_id of its
+    * component (singletons keep their own). The kNN edge list is NOT
+    * symmetric — [[annKnnGraph]] rank-caps per direction, so an edge
+    * can survive the top-K cut in only one direction — and connected
+    * components are an undirected notion; [[UnionFind.components]]
+    * reads edges in either direction (one edge-count gate, a driver
+    * union-find tail below it and the checkpointed pointer-jumping
+    * min-label loop above it). The DuckDB twin is a recursive-CTE
+    * transitive closure over the same kNN-graph SQL, symmetrized. */
   def semanticClusters(s: SparkSession, d: String): DataFrame =
     clusterCache.get(d)(
-      semanticClusters(s, d, SemEdgeTailMax)
+      semanticClusters(s, d, UnionFind.TailMax)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 
-  /** Implementation with an explicit driver-tail threshold so the spec
-    * can force the distributed path (`tailMax = -1`) and pin it
-    * equivalent to the union-find tail. */
-  def semanticClusters(s: SparkSession, d: String, tailMax: Long): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
-    val dirEdges = annKnnGraph(s, d).filter(col("cosine") >= SemClusterCosT)
-      .select(col("src"), col("dst")).distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      val ids = Tables.embeddings(s, d).select(col("vec_id"))
-      if (dirEdges.count() <= tailMax) semanticClustersTail(s, ids, dirEdges)
-      else semanticClustersDistributed(s, ids, dirEdges)
-    } finally dirEdges.unpersist()
-  }
-
-  /** Driver union-find tail (the ABWD-tail pattern): stream the
-    * deduplicated DIRECTED edge list — bounded by `SemEdgeTailMax`
-    * rows, held as primitive longs (16 B/edge) — through the shared
-    * iterative [[UnionFind]] (union-by-size, two-pass compression; no
-    * recursion, so a multi-million-link chain cannot overflow the
-    * driver stack), and ship back ONE label row per non-singleton
-    * VERTEX (≤ 2·edges rows, so the shipped state is edge-bounded
-    * too; the unbounded id table never leaves the cluster —
-    * singletons keep their own label via the left join). */
-  private def semanticClustersTail(s: SparkSession, ids: DataFrame, dirEdges: DataFrame): DataFrame = {
-    val lbl = s.createDataFrame(UnionFind.minLabels(dirEdges)).toDF("vec_id", "cl")
-    ids.join(lbl, Seq("vec_id"), "left")
-      .select(col("vec_id"), coalesce(col("cl"), col("vec_id")).as("cluster_id"))
-  }
-
-  /** The 100 TB path: checkpointed min-label propagation with
-    * per-round pointer jumping — O(log diameter) rounds, every step
-    * an equi-join. */
-  private def semanticClustersDistributed(s: SparkSession, ids: DataFrame, dirEdges: DataFrame): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
-    val edges = dirEdges
-      .union(dirEdges.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var labels = ids
-      .select(col("vec_id"), col("vec_id").as("cluster_id")).localCheckpoint(true)
-    var converged = false
-    var rounds = 0
-    try {
-      while (!converged && rounds < MaxCcRounds) {
-        rounds += 1
-        val neighborMin = edges
-          .join(labels.select(col("vec_id").as("dst"), col("cluster_id").as("nl")), Seq("dst"))
-          .groupBy(col("src")).agg(min(col("nl")).as("nmin"))
-        // Checkpointed before the self-join: the jump shuffles its two
-        // sides on DIFFERENT keys (cluster_id vs vec_id), so exchange
-        // reuse cannot dedupe them — without the checkpoint the whole
-        // neighborMin subtree would execute twice per round.
-        val propagated = labels
-          .join(neighborMin.select(col("src").as("vec_id"), col("nmin")), Seq("vec_id"), "left")
-          .select(col("vec_id"), col("cluster_id").as("prev"),
-            least(col("cluster_id"), coalesce(col("nmin"), col("cluster_id"))).as("cluster_id"))
-          .localCheckpoint(true)
-        // Pointer jump: label := label(label). Every label is the
-        // vec_id of some row of `propagated`, so the self-join always
-        // hits; this halves the remaining label-chain depth each
-        // round (O(log diameter) total rounds). The `changed` flag
-        // rides the checkpointed frame so the convergence test is a
-        // filter over already-materialized rows, not a per-round
-        // extra join job.
-        val next = propagated.as("a")
-          .join(propagated.select(col("vec_id").as("cluster_id"),
-            col("cluster_id").as("jump")).as("b"), Seq("cluster_id"))
-          .select(col("vec_id"),
-            least(col("cluster_id"), col("jump")).as("cluster_id"),
-            (least(col("cluster_id"), col("jump")) =!= col("prev")).as("changed"))
-          .localCheckpoint(true)
-        converged = next.filter(col("changed")).isEmpty
-        labels = next.select(col("vec_id"), col("cluster_id"))
-      }
-      require(converged, s"semantic-cluster propagation did not converge in $MaxCcRounds rounds")
-      labels
-    } finally edges.unpersist()
-  }
+  /** [[semanticClusters]] uncached, with an explicit driver-tail gate
+    * so the spec can force the distributed loop (`tailMax = -1`). */
+  def semanticClusters(s: SparkSession, d: String, tailMax: Long): DataFrame =
+    UnionFind.components(Tables.embeddings(s, d).select(col("vec_id")),
+      annKnnGraph(s, d).filter(col("cosine") >= SemClusterCosT)
+        .select(col("src"), col("dst")).distinct(), tailMax)
 
   val DivPerCluster = 3 // diversity cap: kept members per semantic cluster
 
@@ -1625,16 +1536,6 @@ object AnnOps {
        |SELECT src, dst, rnk, cosine FROM rankedr WHERE rnk <= $RefineK""".stripMargin
   }
 
-  /** The graph-walk beam search as standalone SQL over an explicit
-    * edge-table query — `ann_graph_search`'s oracle when given the
-    * kNN graph, the 7th recall variant's when given [[knnRefineSql]].
-    * Entry points mirror the r17 IVF seeding: per query, the
-    * [[GraphSeeds]] hash-rank-smallest members of its nearest coarse
-    * cell ∪ the global hash-rank seeds. The [[WalkRounds]] expansion
-    * rounds are unrolled: each round ranks the visited set to a
-    * [[GraphBeam]]-wide frontier, expands it through the edge CTE,
-    * anti-joins already-visited pairs, scores the fresh candidates
-    * by exact cosine, and unions them in. */
   /** The walk's CTE body (edge table → IVF-seeded entries → unrolled
     * rounds, ending at `vis<rounds>`) — shared by the walk twins and
     * the sweep legs, parameterized by the serving knobs. */
@@ -1684,6 +1585,16 @@ object AnnOps {
        |${(1 to rounds).map(round).mkString(",\n")}""".stripMargin
   }
 
+  /** The graph-walk beam search as standalone SQL over an explicit
+    * edge-table query — `ann_graph_search`'s oracle when given the
+    * kNN graph, the 7th recall variant's when given [[knnRefineSql]].
+    * Entry points mirror the r17 IVF seeding: per query, the
+    * [[GraphSeeds]] hash-rank-smallest members of its nearest coarse
+    * cell ∪ the global hash-rank seeds. The [[WalkRounds]] expansion
+    * rounds are unrolled: each round ranks the visited set to a
+    * [[GraphBeam]]-wide frontier, expands it through the edge CTE,
+    * anti-joins already-visited pairs, scores the fresh candidates
+    * by exact cosine, and unions them in. */
   private def graphSearchSqlOver(edgeSql: String): String =
     s"""WITH ${walkCtes(edgeSql, GraphSeeds, GraphBeam, WalkRounds)},
        |rankedw AS (SELECT q_id, vec_id, cosine,

@@ -655,8 +655,6 @@ object GeoOps {
     // processing position is (mag DESC, evid ASC)
     def before(aMag: Column, aEvid: Column, bMag: Column, bEvid: Column): Column =
       aMag > bMag || (aMag === bMag && aEvid < bEvid)
-    val dbg0 = sys.env.contains("GRAFT_DEBUG")
-    val tEntry = System.nanoTime()
     // materialize once per CALL unless the caller already did (the
     // per-dir cache hands in a checkpointed table; fixture tests hand
     // in local relations — either way one more checkpoint would cost
@@ -678,16 +676,10 @@ object GeoOps {
     val pairs =
       if (bareLeaf(pairsIn.queryExecution.analyzed)) pairsSel
       else pairsSel.localCheckpoint(true)
-    if (dbg0) System.err.println(
-      f"ABWD pairs built [${(System.nanoTime() - tEntry) / 1e9}%5.2fs]")
     // range(neq - 1): the order-last event never claims. A one-row
     // collect of a scalar, not a data-path collect.
     val lastEvid = events.orderBy(col("mag").asc, col("evid").desc).limit(1)
       .select("evid").collect().headOption.map(_.getLong(0)).getOrElse(Long.MinValue)
-
-    val dbg = sys.env.contains("GRAFT_DEBUG")
-    val t0 = System.nanoTime()
-    def dt = f"${(System.nanoTime() - t0) / 1e9}%6.2fs"
 
     var mains = events.select(col("evid")).limit(0).localCheckpoint(true)
     var undecided = events.select(col("evid"), col("mag")).localCheckpoint(true)
@@ -720,10 +712,6 @@ object GeoOps {
       .filter(before(col("d_mag"), col("d"), col("e_mag"), col("e")))
       .select("e", "d")
     val deps = dep1.unionByName(dep2).unionByName(dep3).distinct().localCheckpoint(true)
-    if (dbg0) System.err.println(
-      f"ABWD deps built [${(System.nanoTime() - tEntry) / 1e9}%5.2fs]")
-    if (dbg)
-      System.err.println(s"ABWD static [$dt]: pairs=${pairs.count()} deps=${deps.count()}")
 
     // fmc: each event's order-FIRST decided-main container (max mag,
     // then min evid). One broadcast-sized row per claimed-or-claimable
@@ -738,8 +726,6 @@ object GeoOps {
       col("evid").as("fm_evid")).limit(0).localCheckpoint(true)
     while (uCount > chunkBudget && rounds < MaxAbwdRounds) {
       rounds += 1
-      if (dbg)
-        System.err.println(s"ABWD round $rounds [$dt]: undecided=$uCount")
       // Rule A: an event whose first decided-main container is order-
       // earlier was claimed before its own step — main=false is
       // determined regardless of its other unresolved dependencies.
@@ -761,9 +747,7 @@ object GeoOps {
       // sources are still undecided evaluate main() exactly.
       val blocked = deps.join(und2.select(col("evid").as("d")), Seq("d"), "left_semi")
         .select(col("e").as("evid"))
-      def lap(tag: String): Unit = if (dbg) System.err.println(s"  ABWD lap $tag [$dt]")
       val ready = und2.join(blocked, Seq("evid"), "left_anti").localCheckpoint(true)
-      lap("ready")
       // Ready events passed the fmc filter with all containers decided,
       // so none is arrival-claimed: e is a mainshock iff it has an
       // available claimee x — x not an order-earlier mainshock itself,
@@ -788,9 +772,7 @@ object GeoOps {
         .join(availE, Seq("evid"), "left_semi")
         .filter(col("evid") =!= lit(lastEvid))
         .localCheckpoint(true)
-      lap("newMains")
       mains = mains.unionByName(newMains).localCheckpoint(true)
-      lap("mains")
       // merge the new mains' claim pairs into fmc (order-first wins)
       val newCand = claimPairs
         .join(newMains.select(col("evid").as("m_evid")), Seq("m_evid"), "left_semi")
@@ -801,16 +783,12 @@ object GeoOps {
           struct(col("fm_mag"), -col("fm_evid"))).as("fm"))
         .select(col("evid"), col("fm.fm_mag").as("fm_mag"), col("fm.fm_evid").as("fm_evid"))
         .localCheckpoint(true)
-      lap("fmc")
       undecided = und2.join(ready, Seq("evid"), "left_anti").localCheckpoint(true)
-      lap("undecided")
       uCount = undecided.count()
     }
     } // deps/fmc scope — rounds only run above the chunk budget
     require(uCount <= chunkBudget,
       s"ABWD greedy did not shrink to the driver tail in $MaxAbwdRounds rounds")
-    if (dbg)
-      System.err.println(s"ABWD tail [$dt]: undecided=$uCount after $rounds rounds")
     // Sequential driver finish over the WHOLE residual in ONE fused
     // pass (r18 — was processing-order chunks of tailThreshold events,
     // 2 collect jobs per chunk plus a rank+checkpoint pass; at sf0.1
@@ -826,57 +804,39 @@ object GeoOps {
     // chunkBudget × window occupancy pair rows — never
     // catalogue-sized; the full mains set never reaches the driver
     // (membership bits are joined distributed).
-    if (uCount == 0) {
-      // pure-rounds path (the tailThreshold=0 spec variant): claims
-      // and labels assembled distributed, as before
-      val claims = pairs
-        .join(mains.select(col("evid").as("m_evid")), Seq("m_evid"), "left_semi")
-        .join(mains, Seq("evid"), "left_anti")
-        .groupBy(col("evid"))
-        .agg(max_by(col("m_evid"), struct(col("m_mag"), -col("m_evid")))
-          .as("cluster_evid"))
-        .select(col("evid"), col("cluster_evid"), lit(true).as("is_aftershock"))
-      events.select("evid")
-        .join(claims, Seq("evid"), "left")
-        .join(mains.withColumn("m", lit(true)), Seq("evid"), "left")
-        .select(col("evid"),
-          when(col("m"), col("evid")).otherwise(col("cluster_evid")).as("cluster_evid"),
-          coalesce(col("is_aftershock"), lit(false)).as("is_aftershock"))
-    } else {
-      val sp = events.sparkSession
-      import sp.implicits._
-      val (tailIds, uRows, inU) =
-        abwdDriverTail(undecided, pairs, mains, lastEvid)
-      if (dbg) System.err.println(
-        s"ABWD tail done [$dt]: tailMains=${tailIds.size} uRows=${uRows.size}")
-      val allMains =
-        if (tailIds.isEmpty) mains else mains.unionByName(tailIds.toDF("evid"))
-      // The residual's OUTPUT rows were fully resolved on the driver
-      // (the tail pass already held every container it needed), so
-      // the residual contributes a bounded local relation; only the
-      // rounds-decided remainder needs the distributed claim agg —
-      // at gate scale, where the tail covers the whole catalogue,
-      // that leg is empty and costs one filtered pass. Residual
-      // membership tests ride ONE broadcast hash set (`inU`) instead
-      // of per-use local-relation broadcast joins (measured ~0.5 s
-      // per 150k-row local broadcast at sf0.1).
-      val uOut = uRows.toDF("evid", "cluster_evid", "is_aftershock")
-      val claims = pairs
-        .filter(!inU(col("evid")))
-        .join(allMains.select(col("evid").as("m_evid")), Seq("m_evid"), "left_semi")
-        .join(allMains, Seq("evid"), "left_anti")
-        .groupBy(col("evid"))
-        .agg(max_by(col("m_evid"), struct(col("m_mag"), -col("m_evid")))
-          .as("cluster_evid"))
-        .select(col("evid"), col("cluster_evid"), lit(true).as("is_aftershock"))
-      val rest = events.select("evid").filter(!inU(col("evid")))
-        .join(claims, Seq("evid"), "left")
-        .join(allMains.withColumn("m", lit(true)), Seq("evid"), "left")
-        .select(col("evid"),
-          when(col("m"), col("evid")).otherwise(col("cluster_evid")).as("cluster_evid"),
-          coalesce(col("is_aftershock"), lit(false)).as("is_aftershock"))
-      uOut.unionByName(rest)
-    }
+    val sp = events.sparkSession
+    import sp.implicits._
+    val (tailIds, uRows, inU) =
+      abwdDriverTail(undecided, uCount, pairs, mains, lastEvid)
+    val allMains =
+      if (tailIds.isEmpty) mains else mains.unionByName(tailIds.toDF("evid"))
+    // The residual's OUTPUT rows were fully resolved on the driver
+    // (the tail pass already held every container it needed), so
+    // the residual contributes a bounded local relation; only the
+    // rounds-decided remainder needs the distributed claim agg —
+    // at gate scale, where the tail covers the whole catalogue,
+    // that leg is empty and costs one filtered pass (with no
+    // residual, the pure-rounds tailThreshold=0 spec variant, the
+    // local relation is empty and the filters fold away). Residual
+    // membership tests ride ONE broadcast hash set (`inU`) instead
+    // of per-use local-relation broadcast joins (measured ~0.5 s
+    // per 150k-row local broadcast at sf0.1).
+    val uOut = uRows.toDF("evid", "cluster_evid", "is_aftershock")
+    val claims = pairs
+      .filter(!inU(col("evid")))
+      .join(allMains.select(col("evid").as("m_evid")), Seq("m_evid"), "left_semi")
+      .join(allMains, Seq("evid"), "left_anti")
+      .groupBy(col("evid"))
+      .agg(max_by(col("m_evid"), struct(col("m_mag"), -col("m_evid")))
+        .as("cluster_evid"))
+      .select(col("evid"), col("cluster_evid"), lit(true).as("is_aftershock"))
+    val rest = events.select("evid").filter(!inU(col("evid")))
+      .join(claims, Seq("evid"), "left")
+      .join(allMains.withColumn("m", lit(true)), Seq("evid"), "left")
+      .select(col("evid"),
+        when(col("m"), col("evid")).otherwise(col("cluster_evid")).as("cluster_evid"),
+        coalesce(col("is_aftershock"), lit(false)).as("is_aftershock"))
+    uOut.unionByName(rest)
   }
 
   /** Driver-tail CHUNK size for [[abwdLabel]]'s sequential finish. A
@@ -927,22 +887,19 @@ object GeoOps {
     * UnsafeRows (`toRdd` + copy) — the generic Row conversion was
     * measured at ~2× the collect decode cost on ~2M-row sets.
     *
-    * Returns (tail events that became mains, driver-resolved claim
-    * labels (evid → cluster) for the NON-main residual events, the
-    * residual id array) — the containers needed to resolve each
-    * residual event's order-first main container are exactly the rows
-    * already collected, so the final claim agg for U-events is a free
-    * driver pass instead of a second distributed aggregation. */
-  private def abwdDriverTail(undecided: DataFrame, pairs: DataFrame,
+    * Returns (tail events that became mains, driver-resolved output
+    * rows for the residual events, the residual-membership predicate)
+    * — the containers needed to resolve each residual event's
+    * order-first main container are exactly the rows already
+    * collected, so the final claim agg for U-events is a free driver
+    * pass instead of a second distributed aggregation. An empty
+    * residual (`uCount == 0`) returns at once, without a job. */
+  private def abwdDriverTail(undecided: DataFrame, uCount: Long, pairs: DataFrame,
                              mains: DataFrame, lastEvid: Long)
-      : (Seq[Long], Seq[(Long, Option[Long], Boolean)],
-         org.apache.spark.sql.expressions.UserDefinedFunction) = {
+      : (Seq[Long], Seq[(Long, Option[Long], Boolean)], Column => Column) = {
+    if (uCount == 0) return (Nil, Nil, _ => lit(false))
     val sp = pairs.sparkSession
     import sp.implicits._
-    val dbg = sys.env.contains("GRAFT_DEBUG")
-    val t0 = System.nanoTime()
-    def lap(tag: String, n: Int): Unit = if (dbg)
-      System.err.println(f"  ABWD tail lap $tag rows=$n [${(System.nanoTime() - t0) / 1e9}%5.2fs]")
     def beforeL(aMag: Double, aEvid: Long, bMag: Double, bEvid: Long): Boolean =
       aMag > bMag || (aMag == bMag && aEvid < bEvid)
     val u = undecided.select("evid", "mag").queryExecution.toRdd
@@ -954,7 +911,8 @@ object GeoOps {
     // measured at ~0.5 s per use (driver-side row conversion + hash
     // relation build), and the old tail used four of them per chunk
     val uSetB = sp.sparkContext.broadcast(uSet)
-    val inU = udf((id: Long) => uSetB.value.contains(id))
+    val inUdf = udf((id: Long) => uSetB.value.contains(id))
+    val inU = (c: Column) => inUdf(c)
     // Relevant pair rows, wave 1: x ∈ U (arrival-claim containers,
     // and ALL of them — contOf must be complete for e∈U) or m ∈ U
     // (claim candidates; also yields the claimee id set X on the
@@ -998,7 +956,6 @@ object GeoOps {
         }
       }
     ingest(wave1, trackX = true)
-    lap("wave1", wave1.length)
     // wave 2 — containers of claimees OUTSIDE the residual (the
     // claimee-already-claimed check needs them): usually empty when
     // the tail covers the whole undecided set; bounded by the wave-1
@@ -1010,7 +967,6 @@ object GeoOps {
         .queryExecution.toRdd.map(_.copy()).collect()
       xB.destroy()
       ingest(wave2, trackX = false)
-      lap("wave2", wave2.length)
     }
     val tailSet = new java.util.HashSet[Long]()
     val out = scala.collection.mutable.ArrayBuffer.empty[Long]
@@ -1033,7 +989,6 @@ object GeoOps {
         if (canClaim) { tailSet.add(e); out += e }
       }
     }
-    lap("greedy", out.size)
     // driver OUTPUT rows for the whole residual: tail mains label
     // themselves (flag false, like every mainshock); each non-main
     // e∈U with ≥1 decided-main container gets its order-first main
@@ -1054,7 +1009,6 @@ object GeoOps {
         uRows += ((e, Option(best).map(_.id), best != null))
       }
     }
-    lap("uRows", uRows.size)
     (out.toSeq, uRows.toSeq, inU)
   }
 

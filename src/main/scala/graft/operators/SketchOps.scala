@@ -87,20 +87,6 @@ object SketchOps {
       .select(col("event_type"), explode(col("sk")).as("h"))
   }
 
-  /** KMV sketch INTERSECTION (theta-sketch-style set algebra): for
-    * every unordered pair of event_types, estimate the overlap of
-    * their user sets FROM THE SKETCHES ALONE — the segment-overlap
-    * question ("how many purchase users also click?") answered
-    * without ever joining the raw user sets. Union sketch = K
-    * smallest of the merged states (the associative KMV merge);
-    * θ = its K-th value; Jaccard = |A ∩ B ∩ union-sketch| / K_union
-    * (exact integer ppm); intersection estimate = Jaccard × the
-    * union's KMV cardinality estimate. Everything up to the final two
-    * float ops is integer state over ≤ K·|types| rows — the pair
-    * "join" is a type-dimension² cross (bounded by event-type
-    * cardinality², the `session_cooccurrence` fan-out bound), and the
-    * sketch rows it fans out are ≤ K per type REGARDLESS of corpus
-    * size: this is the whole point of sketch algebra at 100 TB. */
   /** Pair frame + merged UNION sketch shared by the KMV set-algebra
     * operators: per unordered type pair, the K smallest distinct
     * hashes of A ∪ B (the associative KMV merge). Returns the two
@@ -129,6 +115,20 @@ object SketchOps {
       unioned.withColumn("rn", row_number().over(mw)).filter(col("rn") <= KmvK))
   }
 
+  /** KMV sketch INTERSECTION (theta-sketch-style set algebra): for
+    * every unordered pair of event_types, estimate the overlap of
+    * their user sets FROM THE SKETCHES ALONE — the segment-overlap
+    * question ("how many purchase users also click?") answered
+    * without ever joining the raw user sets. Union sketch = K
+    * smallest of the merged states (the associative KMV merge);
+    * θ = its K-th value; Jaccard = |A ∩ B ∩ union-sketch| / K_union
+    * (exact integer ppm); intersection estimate = Jaccard × the
+    * union's KMV cardinality estimate. Everything up to the final two
+    * float ops is integer state over ≤ K·|types| rows — the pair
+    * "join" is a type-dimension² cross (bounded by event-type
+    * cardinality², the `session_cooccurrence` fan-out bound), and the
+    * sketch rows it fans out are ≤ K per type REGARDLESS of corpus
+    * size: this is the whole point of sketch algebra at 100 TB. */
   def kmvIntersect(s: SparkSession, d: String): DataFrame = {
     val (aRows, bRows, merged) = kmvPairUnion(s, d)
     val mstats = merged.groupBy(col("type_a"), col("type_b"))
@@ -184,18 +184,6 @@ object SketchOps {
   val HistQs = Seq(50, 90, 99)
   val HistMaxPow = 62
 
-  /** Mergeable log₂-histogram QUANTILE sketch: per event_type the
-    * approximate p50/p90/p99 of cent values from a bounded power-of-2
-    * bucket histogram — the fixed-state answer where
-    * `corpus_quantiles`' exact nearest-rank selection needs the full
-    * per-group shuffle. The sketch state is ≤ 64 (bucket, count)
-    * pairs per key, merged by plain addition (partial-aggregable
-    * groupBy — Spark's map-side combine IS the sketch merge), and
-    * every reported quantile is the bucket LOWER BOUND at the exact
-    * ceil(q·n/100) rank — a one-sided bound with ≤ 2× value error by
-    * construction, bit-identical on any partitioning because
-    * everything is integer. Non-positive cents land in bucket −1
-    * (lower bound 0). */
   /** The Spark-SQL log₂-bucket CASE chain over a `cents` column —
     * shared with the streaming twin
     * ([[graft.streaming.StreamingQuantileHist]]) so batch and stream
@@ -221,6 +209,18 @@ object SketchOps {
           s"ELSE shiftleft(CAST(1 AS BIGINT), CAST(b$q AS INT)) END").as(s"p${q}_lo")): _*)
   }
 
+  /** Mergeable log₂-histogram QUANTILE sketch: per event_type the
+    * approximate p50/p90/p99 of cent values from a bounded power-of-2
+    * bucket histogram — the fixed-state answer where
+    * `corpus_quantiles`' exact nearest-rank selection needs the full
+    * per-group shuffle. The sketch state is ≤ 64 (bucket, count)
+    * pairs per key, merged by plain addition (partial-aggregable
+    * groupBy — Spark's map-side combine IS the sketch merge), and
+    * every reported quantile is the bucket LOWER BOUND at the exact
+    * ceil(q·n/100) rank — a one-sided bound with ≤ 2× value error by
+    * construction, bit-identical on any partitioning because
+    * everything is integer. Non-positive cents land in bucket −1
+    * (lower bound 0). */
   def quantileHistSketch(s: SparkSession, d: String): DataFrame = {
     val ev = Tables.events(s, d).select(col("event_type"),
       expr("cast(round(value * 100) as bigint)").as("cents"))
@@ -282,24 +282,6 @@ object SketchOps {
       .map(b => s"WHEN w >= ${sqlLong(1L << b)} THEN ${sqlLong(HllWBits - b)}")
       .mkString("CASE ", " ", s" ELSE ${sqlLong(HllWBits + 1)} END")
 
-  /** HyperLogLog distinct users per event_type — the CONSTANT-state
-    * counterpart of [[distinctKmv]]: where KMV keeps K hash values,
-    * HLL keeps m = 64 six-bit registers (max leading-zero rank per
-    * register), merged by per-register MAX — associative, commutative,
-    * idempotent, so the same state unions across partitions, days and
-    * datacenters, and duplicates cost nothing. Everything up to the
-    * last division is integer and bit-exact cross-engine: register
-    * index = low 6 hash bits, rho = CASE-chain rank over the top 54
-    * bits, and the harmonic denominator is computed EXACTLY as
-    * harm_sum = Σ 2^(55 − rho_j) ≤ 64·2^55 < 2^62 (empty registers
-    * contribute 2^55), so est = [[HllEstNum]] / harm_sum is one float
-    * division of two exact values. No small/large-range corrections —
-    * n_zero is emitted so a consumer can see when the linear-counting
-    * regime applies (the raw estimate is still deterministic). */
-  /** Per-(event_type, register) max rho — the exploded HLL state rows
-    * the estimate aggregates and the set-algebra operator
-    * ([[hllIntersect]]) merges relationally (≤ [[HllM]] rows per type
-    * regardless of corpus size). */
   /** Cached per data dir (the sigCache pattern): [[hllIntersect]]
     * otherwise re-derives the events scan + register aggregation four
     * times (per-type estimates, the type dimension, and both arms of
@@ -307,6 +289,10 @@ object SketchOps {
     * memory at any corpus size. Released by [[Caches.clearAll]]. */
   private val hllRegCache = new Caches.PerDir[DataFrame]("SketchOps.hllReg", Seq(_))
 
+  /** Per-(event_type, register) max rho — the exploded HLL state rows
+    * the estimate aggregates and the set-algebra operator
+    * ([[hllIntersect]]) merges relationally (≤ [[HllM]] rows per type
+    * regardless of corpus size). */
   private def hllRegs(s: SparkSession, d: String): DataFrame =
     hllRegCache.get(d)(
       Tables.events(s, d)
@@ -331,6 +317,20 @@ object SketchOps {
       .withColumn("est_hll", lit(HllEstNum) / col("harm_sum").cast("double"))
       .drop("n_regs", "s_present")
 
+  /** HyperLogLog distinct users per event_type — the CONSTANT-state
+    * counterpart of [[distinctKmv]]: where KMV keeps K hash values,
+    * HLL keeps m = 64 six-bit registers (max leading-zero rank per
+    * register), merged by per-register MAX — associative, commutative,
+    * idempotent, so the same state unions across partitions, days and
+    * datacenters, and duplicates cost nothing. Everything up to the
+    * last division is integer and bit-exact cross-engine: register
+    * index = low 6 hash bits, rho = CASE-chain rank over the top 54
+    * bits, and the harmonic denominator is computed EXACTLY as
+    * harm_sum = Σ 2^(55 − rho_j) ≤ 64·2^55 < 2^62 (empty registers
+    * contribute 2^55), so est = [[HllEstNum]] / harm_sum is one float
+    * division of two exact values. No small/large-range corrections —
+    * n_zero is emitted so a consumer can see when the linear-counting
+    * regime applies (the raw estimate is still deterministic). */
   def hllDistinct(s: SparkSession, d: String): DataFrame =
     hllEstimate(hllRegs(s, d).groupBy(col("event_type")))
       .select(col("event_type"), col("n_zero"), col("harm_sum"), col("est_hll"))

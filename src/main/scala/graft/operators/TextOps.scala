@@ -93,8 +93,6 @@ object TextOps {
       lit(P))
   }: _*)
 
-  /** (doc_id, band, bkey): one row per LSH band; the join key that
-    * replaces the all-pairs product. */
   /** Stateless signature projection over a documents frame — pure
     * column expressions (no window/agg), so it is STREAMING-SAFE: the
     * ingest-dedup stream computes the same shingle sets and minhash
@@ -120,6 +118,8 @@ object TextOps {
       .select(col("doc_id"), col("shset"),
         col("bk.band").as("band"), col("bk.bkey").as("bkey"))
 
+  /** (doc_id, band, bkey): one row per LSH band; the join key that
+    * replaces the all-pairs product. */
   private def bands(s: SparkSession, d: String): DataFrame =
     hashed(s, d).withColumn("sig", sigCol)
       .select(col("doc_id"), explode(array((0 until nBands).map { b =>
@@ -545,26 +545,6 @@ object TextOps {
         (col("n_in") - col("n_out")).as("n_dropped"))
   }
 
-  /** Near-duplicate CLUSTER assignment — the transitive closure the
-    * pairwise dedup operators stop short of: every document gets the
-    * minimum doc_id of its connected component in the verified
-    * near-dup pair graph (singletons keep their own id). Web-scale
-    * dedup publishes exactly this (canonical doc + cluster id), and
-    * the scale shape is the standard iterative min-label propagation
-    * for connected components: each round joins current labels across
-    * the (persisted, undirected) edge list and takes the per-node min;
-    * rounds needed = graph diameter ≈ O(log component size) — near-dup
-    * components are shallow chains, 2-4 rounds in practice. Lineage is
-    * checkpointed per round like the ABWD loop. The DuckDB twin is a
-    * recursive-CTE transitive closure — exact same fixpoint. */
-  val MaxCcRounds = 50
-  // Driver-tail threshold (verified pair rows) — the AnnOps
-  // `semantic_clusters` pattern: below it the component structure is
-  // driver-sized and a union-find beats per-round distributed job
-  // latency; above it the checkpointed loop runs. Both paths pinned
-  // equivalent by the spec.
-  val DupEdgeTailMax = 4000000L
-
   /** Cluster-label table cached per data dir (the sigCache pattern):
     * one narrow (doc_id, cluster_id) row per doc, shared by
     * `dup_clusters`, `dup_cluster_sizes` and `dedup_keep_best` — each
@@ -572,62 +552,25 @@ object TextOps {
     * Released by [[Caches.clearAll]]; warmed by [[warmCaches]]. */
   private val dupLabelCache = new Caches.PerDir[DataFrame]("TextOps.dupLabel", Seq(_))
 
+  /** Near-duplicate CLUSTER assignment — the transitive closure the
+    * pairwise dedup operators stop short of: every document gets the
+    * minimum doc_id of its connected component in the verified
+    * near-dup pair graph (singletons keep their own id). Web-scale
+    * dedup publishes exactly this (canonical doc + cluster id). The
+    * components come from [[UnionFind.components]]: one edge-count
+    * gate, a driver union-find tail below it and the checkpointed
+    * pointer-jumping min-label loop above it. The DuckDB twin is a
+    * recursive-CTE transitive closure — exact same fixpoint. */
   def dupClusters(s: SparkSession, d: String): DataFrame =
     dupLabelCache.get(d)(
-      dupClusters(s, d, DupEdgeTailMax)
+      dupClusters(s, d, UnionFind.TailMax)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 
-  def dupClusters(s: SparkSession, d: String, tailMax: Long): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
-    val pairs = pairJaccard(s, d).filter(col("jacc") >= JaccT).select("ida", "idb")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      if (pairs.count() <= tailMax) {
-        // Bounded driver union-find tail: ≤ tailMax two-long rows,
-        // streamed into primitive arrays and unioned by the shared
-        // iterative UnionFind (no recursion — a long dup chain cannot
-        // blow the driver stack); one label row shipped back per
-        // non-singleton doc (≤ 2·pairs rows — the unbounded doc table
-        // never leaves the cluster; singletons keep their own label
-        // via the left join).
-        val lbl = s.createDataFrame(UnionFind.minLabels(pairs)).toDF("doc_id", "cl")
-        Tables.documents(s, d).select(col("doc_id"))
-          .join(lbl, Seq("doc_id"), "left")
-          .select(col("doc_id"), coalesce(col("cl"), col("doc_id")).as("cluster_id"))
-      } else dupClustersDistributed(s, d, pairs)
-    } finally pairs.unpersist()
-  }
-
-  private def dupClustersDistributed(s: SparkSession, d: String, pairs: DataFrame): DataFrame = {
-    import org.apache.spark.storage.StorageLevel
-    val edges = pairs
-      .unionByName(pairs.select(col("idb").as("ida"), col("ida").as("idb")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var labels = Tables.documents(s, d)
-      .select(col("doc_id"), col("doc_id").as("cluster_id")).localCheckpoint(true)
-    var converged = false
-    var rounds = 0
-    // finally: a non-converged require() (or any round failure) must
-    // not leak the persisted edge list for the life of the session.
-    try {
-      while (!converged && rounds < MaxCcRounds) {
-        rounds += 1
-        val neighborMin = edges
-          .join(labels.select(col("doc_id").as("idb"), col("cluster_id").as("nl")), Seq("idb"))
-          .groupBy(col("ida")).agg(min(col("nl")).as("nmin"))
-        val next = labels
-          .join(neighborMin.select(col("ida").as("doc_id"), col("nmin")), Seq("doc_id"), "left")
-          .select(col("doc_id"),
-            least(col("cluster_id"), coalesce(col("nmin"), col("cluster_id"))).as("cluster_id"))
-          .localCheckpoint(true)
-        converged = next.join(labels.withColumnRenamed("cluster_id", "old"), Seq("doc_id"))
-          .filter(col("cluster_id") =!= col("old")).isEmpty
-        labels = next
-      }
-      require(converged, s"label propagation did not converge in $MaxCcRounds rounds")
-      labels
-    } finally edges.unpersist()
-  }
+  /** [[dupClusters]] uncached, with an explicit driver-tail gate so
+    * the spec can force the distributed loop (`tailMax = -1`). */
+  def dupClusters(s: SparkSession, d: String, tailMax: Long): DataFrame =
+    UnionFind.components(Tables.documents(s, d).select(col("doc_id")),
+      pairJaccard(s, d).filter(col("jacc") >= JaccT).select("ida", "idb"), tailMax)
 
   /** Best-representative dedup: one KEPT document per near-dup
     * cluster, chosen by quality rather than id — production pipelines
@@ -797,11 +740,6 @@ object TextOps {
           .cast("long"))
   }
 
-  /** Unpersist every signature table [[hashed]] has cached (one entry
-    * per data dir). The gate and bench deliberately keep the cache
-    * warm across the dedup family; a long-lived service should call
-    * this between corpus versions instead of letting entries
-    * accumulate. */
   /** Materialize the session-cached signature and segment tables for
     * `d` — the bench's named SETUP step. The persisted
     * tokenize→shingle→md5 projection is the shared kernel of the whole
@@ -843,14 +781,6 @@ object TextOps {
     * CCNet "line" unit is a fixed-width word window. */
   val SegWords = 8
 
-  /** Segment-level exact dedup report (the CCNet/RefinedWeb shape:
-    * hash every line across the WHOLE corpus, drop lines seen in
-    * multiple documents as boilerplate). Per document: segment count,
-    * duplicated-segment count/ratio, and the word count that survives
-    * dropping cross-document duplicate segments. Scale shape: explode
-    * to (segment-hash, doc) rows, one partial-aggregable groupBy on
-    * the hash (THE corpus-wide shuffle), join back on the same key
-    * (co-partitioned), re-aggregate per doc. */
   /** (doc_id, segh, wc) segment rows, persisted once per data dir:
     * the tokenize→window→hash subtree feeds BOTH the corpus-wide
     * frequency groupBy and the join back, and without materialization
@@ -872,6 +802,14 @@ object TextOps {
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
    }
 
+  /** Segment-level exact dedup report (the CCNet/RefinedWeb shape:
+    * hash every line across the WHOLE corpus, drop lines seen in
+    * multiple documents as boilerplate). Per document: segment count,
+    * duplicated-segment count/ratio, and the word count that survives
+    * dropping cross-document duplicate segments. Scale shape: explode
+    * to (segment-hash, doc) rows, one partial-aggregable groupBy on
+    * the hash (THE corpus-wide shuffle), join back on the same key
+    * (co-partitioned), re-aggregate per doc. */
   def dedupSegments(s: SparkSession, d: String): DataFrame = {
     val segRows = segmentRows(s, d)
     val freq = segRows.groupBy(col("segh")).agg(countDistinct(col("doc_id")).as("ndocs"))
@@ -2868,7 +2806,6 @@ object TextOps {
        |          HAVING count(*) >= $SpanMinRun)""".stripMargin
   private val stopListSql = Stopwords.map(w => s"'$w'").mkString("[", ", ", "]")
 
-  /** CTE chain shared by the minhash-family oracles. */
   /** toks→shingles→hashes→signature CTE chain — the SQL twin of
     * [[hashed]]+[[sigCol]], shared by the minhash family oracles and
     * the band-sweep oracle. */

@@ -1,24 +1,29 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{coalesce, col, least, min}
+import org.apache.spark.storage.StorageLevel
 
-/** Driver-tail union-find shared by the connected-component operators
-  * (`dup_clusters` in TextOps, `semantic_clusters` in AnnOps — the
-  * ABWD-tail pattern: below the edge-count gate the component
-  * structure is driver-sized, and a single union-find beats per-round
-  * distributed job latency).
+/** Connected components, the one mechanism behind `dup_clusters`
+  * (TextOps) and `semantic_clusters` (AnnOps): [[components]] labels
+  * every vertex with the minimum id of its component. One gate picks
+  * one of two paths. At or below [[TailMax]] edges the component
+  * structure is driver-sized and a single driver union-find
+  * ([[minLabels]]) beats per-round distributed job latency — the
+  * ABWD-tail pattern. Above it the distributed min-label loop runs,
+  * with pointer jumping, at most [[MaxRounds]] rounds.
   *
-  * Two hazards of the previous per-call-site implementation are closed
-  * here, once, for both callers:
+  * Two hazards of a naive driver union-find are closed in
+  * [[minLabels]]:
   *
   *  1. `find` is ITERATIVE (walk the parent chain to the root, then a
   *     second pass re-pointing every visited node at the root) and
   *     unions are BY SIZE, so tree depth is O(log n) even before
-  *     compression. The old recursive find compressed only on the
-  *     unwind and unioned by arbitrary root, so a long near-dup chain
-  *     — exactly the case the tail gate admits at its 4M-edge limit —
-  *     could recurse millions of frames deep and kill the driver with
-  *     a StackOverflowError.
+  *     compression. A recursive find that compresses only on the
+  *     unwind and unions by arbitrary root recurses once per link of
+  *     a long near-dup chain — exactly the case the tail gate admits
+  *     at its 4M-edge limit — and kills the driver with a
+  *     StackOverflowError.
   *  2. Edges are collected via `toLocalIterator` into PRIMITIVE long
   *     arrays: each Row is released as soon as its two longs are
   *     copied out, so the steady driver footprint is 16 bytes/edge
@@ -29,6 +34,95 @@ import org.apache.spark.sql.DataFrame
   *     case all-in at the gate, sized for the driver heap.
   */
 private[graft] object UnionFind {
+
+  /** Round cap of the distributed loop; a component that has not
+    * converged by then fails the call rather than return wrong labels. */
+  val MaxRounds = 50
+
+  /** Driver-tail gate, in edge rows (two longs each, so 4M edges is
+    * ~64 MB of driver state): at or below it [[components]] runs the
+    * union-find tail, above it the distributed loop. */
+  val TailMax = 4000000L
+
+  /** `(<ids column>, cluster_id)`: every id of the one-column frame
+    * `ids` labelled with the minimum id of its connected component
+    * (singletons keep their own id). `edges` has two long columns,
+    * read by position (src, dst); either direction, duplicates and
+    * self-loops are fine, and every endpoint must be an id. The edges
+    * are persisted and counted once: at or below `tailMax` rows the
+    * driver union-find labels them and a left join from `ids` ships
+    * the labels back (the unbounded id table never leaves the
+    * cluster); above it the distributed loop runs. */
+  def components(ids: DataFrame, edges: DataFrame, tailMax: Long = TailMax): DataFrame = {
+    val id = ids.columns.head
+    edges.persist(StorageLevel.MEMORY_AND_DISK)
+    // finally: a non-converged require() (or any round failure) must
+    // not leak the persisted edge list for the life of the session
+    try {
+      if (edges.count() <= tailMax) {
+        val lbl = ids.sparkSession.createDataFrame(minLabels(edges)).toDF(id, "cl")
+        ids.join(lbl, Seq(id), "left")
+          .select(col(id), coalesce(col("cl"), col(id)).as("cluster_id"))
+      } else distributed(ids, edges)
+    } finally edges.unpersist()
+  }
+
+  /** The 100 TB path: checkpointed min-label propagation with
+    * per-round pointer jumping, every step an equi-join. A label chain
+    * whose ids fall toward the minimum collapses in O(log length)
+    * rounds; a minimum that enters a chain from the side still moves
+    * one hop per round. Each round's propagation checkpoint and the
+    * labels it superseded are released once the round's jump
+    * checkpoint is materialized; the returned frame reads the last
+    * one. */
+  private def distributed(ids: DataFrame, dirEdges: DataFrame): DataFrame = {
+    val id = ids.columns.head
+    val d = dirEdges.toDF("src", "dst")
+    // components are an undirected notion: symmetrize
+    val edges = d.union(d.select(col("dst").as("src"), col("src").as("dst")))
+      .distinct()
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    var cp = ids.select(col(id).as("v"), col(id).as("cluster_id")).localCheckpoint(true)
+    var converged = false
+    var rounds = 0
+    try {
+      while (!converged && rounds < MaxRounds) {
+        rounds += 1
+        val labels = cp.select(col("v"), col("cluster_id"))
+        val neighborMin = edges
+          .join(labels.select(col("v").as("dst"), col("cluster_id").as("nl")), Seq("dst"))
+          .groupBy(col("src")).agg(min(col("nl")).as("nmin"))
+        // Checkpointed before the self-join: the jump shuffles its two
+        // sides on DIFFERENT keys (cluster_id vs v), so exchange reuse
+        // cannot dedupe them — without the checkpoint the whole
+        // neighborMin subtree would execute twice per round.
+        val propagated = labels
+          .join(neighborMin.select(col("src").as("v"), col("nmin")), Seq("v"), "left")
+          .select(col("v"), col("cluster_id").as("prev"),
+            least(col("cluster_id"), coalesce(col("nmin"), col("cluster_id"))).as("cluster_id"))
+          .localCheckpoint(true)
+        // Pointer jump: label := label(label). Every label is the id
+        // of some row of `propagated`, so the self-join always hits;
+        // this halves the remaining label-chain depth each round. The
+        // `changed` flag rides the checkpointed frame, so the
+        // convergence test is a filter over materialized rows, not an
+        // extra join job per round.
+        val next = propagated.as("a")
+          .join(propagated.select(col("v").as("cluster_id"),
+            col("cluster_id").as("jump")).as("b"), Seq("cluster_id"))
+          .select(col("v"),
+            least(col("cluster_id"), col("jump")).as("cluster_id"),
+            (least(col("cluster_id"), col("jump")) =!= col("prev")).as("changed"))
+          .localCheckpoint(true)
+        Caches.release(propagated)
+        Caches.release(cp)
+        cp = next
+        converged = next.filter(col("changed")).isEmpty
+      }
+      require(converged, s"label propagation did not converge in $MaxRounds rounds")
+      cp.select(col("v").as(id), col("cluster_id"))
+    } finally edges.unpersist()
+  }
 
   /** Collect a two-long-column edge DataFrame (column order: src, dst)
     * and return one (vertexId, minVertexIdOfComponent) row per DISTINCT

@@ -33,6 +33,16 @@ class OperatorSpec extends AnyFunSuite with BeforeAndAfterAll {
     spark.stop()
   }
 
+  /** Wait for the scheduler to go idle: a query can return while AQE
+    * still winds down a stage it no longer needs, and releasing under
+    * that job fails its tasks. */
+  private def awaitIdle(): Unit = {
+    val sc = spark.sparkContext
+    val deadline = System.nanoTime() + 30L * 1000000000L
+    while (sc.statusTracker.getActiveJobIds.nonEmpty && System.nanoTime() < deadline)
+      Thread.sleep(50)
+  }
+
   private def sortedRows(df: DataFrame): Seq[Seq[Any]] = {
     val cols = df.columns.sorted.toSeq
     df.select(cols.map(df.col): _*).collect()
@@ -912,6 +922,24 @@ class OperatorSpec extends AnyFunSuite with BeforeAndAfterAll {
         "declare them as Caches.PerDir so Caches.clearAll releases them")
   }
 
+  test("no scaladoc is stacked directly on another") {
+    // scaladoc keeps only the LAST of two adjacent doc comments, so a
+    // doc left above another one documents nothing
+    import scala.jdk.CollectionConverters._
+    val srcRoot = java.nio.file.Paths.get("src/main/scala/graft")
+    val stacked = java.nio.file.Files.walk(srcRoot).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .flatMap { p =>
+        val lines = java.nio.file.Files.readAllLines(p).asScala.toSeq
+        lines.indices.drop(1)
+          .filter(i => lines(i - 1).trim.endsWith("*/") && lines(i).trim.startsWith("/**"))
+          .map(i => s"${srcRoot.relativize(p)}:${i + 1}")
+      }.toSeq.sorted
+    assert(stacked.isEmpty,
+      s"doc comments stacked on another doc comment at ${stacked.mkString(", ")} — " +
+        "move each onto the definition it describes")
+  }
+
   test("Caches.clearAll empties every registered family and releases every block it held") {
     val sc = spark.sparkContext
     // the persistent-RDD map holds its RDDs weakly: an unreferenced
@@ -935,15 +963,7 @@ class OperatorSpec extends AnyFunSuite with BeforeAndAfterAll {
       val live = sc.getPersistentRDDs
       ids.toSeq.sorted.flatMap(live.get).map(_.toString.take(200))
     }
-    // a query can return while AQE still winds down a stage it no
-    // longer needs; releasing under that job fails its tasks, so let
-    // the scheduler go idle before each release
-    def idle(): Unit = {
-      val deadline = System.nanoTime() + 30L * 1000000000L
-      while (sc.statusTracker.getActiveJobIds.nonEmpty && System.nanoTime() < deadline)
-        Thread.sleep(50)
-    }
-    idle()
+    awaitIdle()
     Caches.clearAll()
     val baseline = settled()
     // the declared index builds, plus one consumer of every family
@@ -957,7 +977,7 @@ class OperatorSpec extends AnyFunSuite with BeforeAndAfterAll {
     val unfilled = families.filter(_.isEmpty).map(_.name)
     assert(unfilled.isEmpty,
       s"no consumer here fills ${unfilled.mkString(", ")} — add one, or the release below is untested")
-    idle()
+    awaitIdle()
     // a checkpointed entry's blocks would also go once the GC collects
     // its frame, so the settled check below cannot see a skipped
     // checkpoint release: clearAll must have unpersisted them itself
@@ -4830,6 +4850,66 @@ class OperatorSpec extends AnyFunSuite with BeforeAndAfterAll {
       .select((lit(100000L) - col("id")).as("src"), (lit(99999L) - col("id")).as("dst"))
     val labels2 = UnionFind.minLabels(rev)
     assert(labels2.length == 100001 && labels2.forall(_._2 == 0L))
+  }
+
+  test("UnionFind.components: driver tail, distributed loop and a brute force agree") {
+    import org.scalacheck.{Gen, Prop, Test => Check}
+    import org.scalacheck.Prop.propBoolean
+    val sp = spark; import sp.implicits._
+    // a path of more than MaxRounds vertices whose ids fall toward one
+    // end converges within the round cap only through the pointer
+    // jumps, so long paths come often
+    val graphs = for {
+      n <- Gen.frequency(2 -> Gen.choose(1, 60), 1 -> Gen.choose(52, 60))
+      base <- Gen.oneOf(-1000L, -30L, 0L, 1L << 40) // negative ids too
+      ids = (0 until n).map(base + _)
+      pathLen <- Gen.frequency(1 -> Gen.choose(0, n), 1 -> Gen.const(n))
+      descending <- Gen.oneOf(true, false) // the min id at either end
+      path = (if (descending) ids.reverse else ids).take(pathLen)
+        .sliding(2).collect { case Seq(a, b) => (a, b) }.toSeq
+      nExtra <- Gen.frequency(1 -> Gen.const(0), 1 -> Gen.choose(1, 12))
+      extra <- Gen.listOfN(nExtra, Gen.zip(Gen.oneOf(ids), Gen.oneOf(ids)))
+      again <- Gen.someOf(path ++ extra) // duplicated and reversed edges
+      loops <- Gen.someOf(ids).map(_.take(4).map(i => (i, i)))
+    } yield (ids, path ++ extra ++ again ++ again.map(_.swap) ++ loops)
+    val prop = Prop.forAllNoShrink(graphs) { case (ids, edges) =>
+      val parent = scala.collection.mutable.Map(ids.map(i => i -> i): _*)
+      def find(x: Long): Long = { if (parent(x) != x) parent(x) = find(parent(x)); parent(x) }
+      for ((a, b) <- edges) { val (ra, rb) = (find(a), find(b)); if (ra != rb) parent(ra) = rb }
+      val want = ids.groupBy(find).values.flatMap(c => c.map(_ -> c.min)).toMap
+      def labels(tailMax: Long) =
+        UnionFind.components(ids.toDF("id"), edges.toDF("a", "b"), tailMax).collect()
+          .map(r => r.getLong(0) -> r.getLong(1)).toSeq
+      val tail = labels(Long.MaxValue)
+      val dist = labels(-1L)
+      (tail.size == ids.size && tail.toMap == want) :| s"tail labels $tail, want $want" &&
+        (dist.size == ids.size && dist.toMap == want) :| s"distributed labels $dist, want $want"
+    }
+    val res = Check.check(Check.Parameters.default.withMinSuccessfulTests(30).withWorkers(1)
+      .withInitialSeed(org.scalacheck.rng.Seed(20261019L)), prop)
+    assert(res.passed, org.scalacheck.util.Pretty.pretty(res))
+  }
+
+  test("the distributed component loop releases every superseded round") {
+    import org.apache.spark.sql.execution.LogicalRDD
+    val sc = spark.sparkContext
+    def run() = Seq(AnnOps.semanticClusters(spark, Sf, -1L), TextOps.dupClusters(spark, Sf, -1L))
+    run() // fills the cache families both operators read
+    awaitIdle()
+    val baseline = sc.getPersistentRDDs.keySet.toSet
+    val out = run()
+    awaitIdle()
+    // read before any GC: the weak persistent-RDD map forgets an
+    // unreferenced checkpoint at GC, which would hide a skipped release
+    val live = sc.getPersistentRDDs
+    val added = live.keySet.toSet -- baseline
+    val returned = out.flatMap(_.queryExecution.analyzed.collectLeaves())
+      .collect { case lr: LogicalRDD => lr.rdd.id }.toSet
+    assert(returned.size == 2, s"each call returns one checkpoint leaf: $returned")
+    val leaked = (added -- returned).toSeq.sorted.flatMap(live.get).map(_.toString.take(200))
+    assert(added == returned,
+      s"${leaked.size} RDDs left persisted beyond the returned labels: ${leaked.mkString("; ")}")
+    returned.foreach(id => live.get(id).foreach(_.unpersist(false)))
   }
 
   test("diversity_sample keeps the K lowest ids of every semantic cluster") {
