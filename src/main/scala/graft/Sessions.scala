@@ -45,7 +45,7 @@ object Sessions {
       // old-generation heap (739 -> 850 MB with the whole registry
       // resident).
       .config("spark.sql.codegen.cache.maxEntries", "4096")
-      // Every writeStream.start() clones the session, and with artifact
+      // Every stream's start() clones the session, and with artifact
       // isolation on each clone gets a fresh class loader — so each
       // bounded stream run recompiled all of its classes however large
       // the cache (16 per streaming_db_upsert run, 5 per

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{coalesce, col, least, min}
+import org.apache.spark.sql.graftbridge.CheckpointBridge.measuredCheckpoint
 import org.apache.spark.storage.StorageLevel
 
 /** Connected components, the one mechanism behind `dup_clusters`
@@ -74,7 +75,9 @@ private[graft] object UnionFind {
     * one hop per round. Each round's propagation checkpoint and the
     * labels it superseded are released once the round's jump
     * checkpoint is materialized; the returned frame reads the last
-    * one. */
+    * one. Each checkpoint's size estimate is its measured block size,
+    * so the jump self-join cannot compound the estimate round over
+    * round. */
   private def distributed(ids: DataFrame, dirEdges: DataFrame): DataFrame = {
     val id = ids.columns.head
     val d = dirEdges.toDF("src", "dst")
@@ -82,7 +85,7 @@ private[graft] object UnionFind {
     val edges = d.union(d.select(col("dst").as("src"), col("src").as("dst")))
       .distinct()
       .persist(StorageLevel.MEMORY_AND_DISK)
-    var cp = ids.select(col(id).as("v"), col(id).as("cluster_id")).localCheckpoint(true)
+    var cp = measuredCheckpoint(ids.select(col(id).as("v"), col(id).as("cluster_id")))
     var converged = false
     var rounds = 0
     try {
@@ -100,7 +103,7 @@ private[graft] object UnionFind {
           .join(neighborMin.select(col("src").as("v"), col("nmin")), Seq("v"), "left")
           .select(col("v"), col("cluster_id").as("prev"),
             least(col("cluster_id"), coalesce(col("nmin"), col("cluster_id"))).as("cluster_id"))
-          .localCheckpoint(true)
+          .transform(measuredCheckpoint)
         // Pointer jump: label := label(label). Every label is the id
         // of some row of `propagated`, so the self-join always hits;
         // this halves the remaining label-chain depth each round. The
@@ -113,7 +116,7 @@ private[graft] object UnionFind {
           .select(col("v"),
             least(col("cluster_id"), col("jump")).as("cluster_id"),
             (least(col("cluster_id"), col("jump")) =!= col("prev")).as("changed"))
-          .localCheckpoint(true)
+          .transform(measuredCheckpoint)
         Caches.release(propagated)
         Caches.release(cp)
         cp = next

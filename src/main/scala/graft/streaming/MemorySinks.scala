@@ -1,15 +1,19 @@
 package graft.streaming
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.graftbridge.StateStoreBridge
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.operators.Caches
 
-/** Per-run result naming with garbage collection for the streaming
-  * family's bounded (AvailableNow) runs.
+/** The one module that runs bounded (`Trigger.AvailableNow`) streams:
+  * every streaming operator reaches Spark through [[runAvailableNow]]
+  * (rows kept as distributed blocks, for the registry and its oracle)
+  * or [[runFileSink]] (a durable parquet sink plus checkpoint, the
+  * deployment shape the restart specs pin). Both kinds unload the
+  * finished run's state-store providers before returning: the state is
+  * already committed to the checkpoint, and left loaded it would sit in
+  * the heap until the maintenance task's idle sweep.
   *
   * Through r16 every operator wrote its result through Spark's MEMORY
   * sink, which `collect()`s every batch's rows into the DRIVER — for
@@ -21,20 +25,17 @@ import graft.operators.Caches
   * instead: each micro-batch is eagerly local-checkpointed (persisted
   * partition blocks, lineage cut so the data outlives the stream's
   * incremental plan) inside the sink hook, and the returned frame is
-  * the union of batch results registered under the per-run name —
-  * byte-identical rows to the memory sink, none of them collected.
+  * the union of batch results — byte-identical rows to the memory
+  * sink, none of them collected.
   *
-  * Naming + GC (r16 ADVICE): a sink name cannot be re-opened, so each
-  * run takes `<prefix>_N` and drops run N−1's temp view AND its
-  * persisted blocks before handing out the next — repeated invocations
-  * in a long-lived session hold exactly one run's output per operator. */
+  * One live run per prefix: a memory run's query is named by its
+  * prefix, and Spark refuses to start a query whose name an active
+  * query of the session holds, so two overlapping runs of one operator
+  * fail at start instead of interleaving their retained batches. A
+  * finished run frees its name; the session sets no checkpoint root,
+  * so each memory run checkpoints to a fresh temp dir and reusing a
+  * name never resumes an earlier run. */
 object MemorySinks {
-
-  def next(s: SparkSession, prefix: String, seq: AtomicInteger): String = {
-    val n = seq.incrementAndGet()
-    if (n > 1) s.catalog.dropTempView(s"${prefix}_${n - 1}")
-    s"${prefix}_$n"
-  }
 
   /** Previous run's checkpointed batch frames per prefix — released
     * when the next run starts, and by
@@ -52,25 +53,15 @@ object MemorySinks {
     * frames belong to the stream's cloned session, and every consumer
     * takes the returned frame directly.
     *
-    * ONE-LIVE-RUN-PER-PREFIX CONTRACT (r17 advice): starting run N
-    * releases run N−1's checkpointed blocks, whose lineage is CUT — a
-    * caller still holding the previous run's returned frame gets a
-    * block-not-found on any later action (stricter than the old
-    * memory sink, whose driver-resident rows survived the view drop).
-    * Every call site here consumes the frame before re-invoking, and
-    * the same operator must not run concurrently on one prefix (the
-    * per-prefix live map would interleave); a service wanting
-    * overlapping runs keeps its own naming + release discipline.
-    *
-    * The finished run's state-store providers are unloaded before
-    * returning: its state is already committed to the checkpoint, and
-    * left loaded it would sit in the heap until the maintenance task's
-    * idle sweep. */
+    * Starting a run releases the previous run's checkpointed blocks for
+    * the same prefix, whose lineage is CUT — a caller still holding the
+    * previous run's returned frame gets a block-not-found on any later
+    * action (stricter than the old memory sink, whose driver-resident
+    * rows survived). Every call site here consumes the frame before
+    * re-invoking; a service wanting overlapping runs of one operator
+    * gives each its own prefix. */
   def runAvailableNow(s: SparkSession, stream: DataFrame, prefix: String,
-                      seq: AtomicInteger,
                       mode: String = "append"): (StreamingQuery, DataFrame) = {
-    val n = seq.incrementAndGet()
-    val name = s"${prefix}_$n"
     live.drop(prefix)
     val batches = scala.collection.mutable.ArrayBuffer[DataFrame]()
     val q = stream.writeStream
@@ -85,7 +76,7 @@ object MemorySinks {
         }
         ()
       }
-      .queryName(name)
+      .queryName(prefix)
       .outputMode(mode).trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
@@ -97,5 +88,23 @@ object MemorySinks {
     }
     live.put(prefix, batches.synchronized(batches.toSeq))
     (q, out)
+  }
+
+  /** Run a bounded stream to completion into a DURABLE parquet sink in
+    * append mode, checkpointing to `ckptDir`, and return the finished
+    * query handle. A restart with the same checkpoint resumes from the
+    * file-source offset log with every key's state rehydrated, so
+    * already-read files are skipped and state carries across the
+    * restart (pinned by the restart specs). */
+  def runFileSink(stream: DataFrame, sinkDir: String, ckptDir: String): StreamingQuery = {
+    val q = stream.writeStream
+      .format("parquet")
+      .option("path", sinkDir)
+      .option("checkpointLocation", ckptDir)
+      .outputMode("append").trigger(Trigger.AvailableNow())
+      .start()
+    q.awaitTermination()
+    StateStoreBridge.unload(q)
+    q
   }
 }

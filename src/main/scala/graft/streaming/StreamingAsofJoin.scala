@@ -1,10 +1,8 @@
 package graft.streaming
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import graft.operators.EventOps
 
 /** Streaming ASOF attribution: the Structured-Streaming twin of
@@ -23,9 +21,10 @@ import graft.operators.EventOps
   * batch operator's <= semantics; a late cross-batch click older than
   * the stored one never regresses the state (monotone guard), it can
   * only be missed — the documented watermark trade every streaming
-  * attribution makes. Run with `Trigger.AvailableNow` into a memory
-  * sink; the driver's DuckDB oracle (the batch `asof_join` range-join
-  * SQL, reused verbatim) checks it exactly. */
+  * attribution makes. Run with `Trigger.AvailableNow` through
+  * [[MemorySinks.runAvailableNow]]; the driver's DuckDB oracle (the
+  * batch `asof_join` range-join SQL, reused verbatim) checks it
+  * exactly. */
 object StreamingAsofJoin {
 
   final case class Ev(event_id: Long, user_id: Long, ts_us: Long, is_p: Int)
@@ -53,11 +52,9 @@ object StreamingAsofJoin {
     out.result().iterator
   }
 
-  private val runSeq = new AtomicInteger(0)
-
   def run(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val schema = StreamingSessionize.eventsSchema(s, dir)
+    val schema = graft.sources.Tables.events(s, dir).schema
     val stream = s.readStream.schema(schema).parquet(s"$dir/[e]vents.parquet")
       .filter(col("event_type").isin("click", "purchase"))
       .select(col("event_id"), col("user_id"),
@@ -66,6 +63,6 @@ object StreamingAsofJoin {
       .as[Ev]
       .groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(attribute)
-    MemorySinks.runAvailableNow(s, stream.toDF(), "stream_asof_join", runSeq)._2
+    MemorySinks.runAvailableNow(s, stream.toDF(), "stream_asof_join")._2
   }
 }

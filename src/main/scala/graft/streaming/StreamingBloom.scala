@@ -1,10 +1,8 @@
 package graft.streaming
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import graft.operators.SketchOps
 
 /** Streaming Bloom filter — the continuously-maintained membership
@@ -45,8 +43,6 @@ object StreamingBloom {
     Iterator.single(Out(key, bw))
   }
 
-  private val runSeq = new AtomicInteger(0)
-
   /** `srcOptions` go to the file SOURCE (e.g. maxFilesPerTrigger to
     * force a multi-batch run). */
   def filterStream(s: SparkSession, srcGlob: String,
@@ -71,6 +67,6 @@ object StreamingBloom {
   def run(s: SparkSession, dir: String): DataFrame = {
     val schema = graft.sources.Tables.events(s, dir).schema
     MemorySinks.runAvailableNow(s,
-      filterStream(s, s"$dir/[e]vents.parquet", schema), "stream_bloom", runSeq)._2
+      filterStream(s, s"$dir/[e]vents.parquet", schema), "stream_bloom")._2
   }
 }

@@ -1,10 +1,8 @@
 package graft.streaming
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import graft.operators.SketchOps
 
 /** Streaming Count-Min sketch — the continuously-maintained twin of
@@ -57,8 +55,6 @@ object StreamingCms {
       .map(p => Out(key, p.toLong, cw(p)))
   }
 
-  private val runSeq = new AtomicInteger(0)
-
   /** `srcOptions` go to the file SOURCE (e.g. maxFilesPerTrigger to
     * force a multi-batch run). */
   def sketchStream(s: SparkSession, srcGlob: String,
@@ -82,6 +78,6 @@ object StreamingCms {
   def run(s: SparkSession, dir: String): DataFrame = {
     val schema = graft.sources.Tables.documents(s, dir).schema
     MemorySinks.runAvailableNow(s,
-      sketchStream(s, s"$dir/[d]ocuments.parquet", schema), "stream_cms", runSeq)._2
+      sketchStream(s, s"$dir/[d]ocuments.parquet", schema), "stream_cms")._2
   }
 }

@@ -1,10 +1,7 @@
 package graft.streaming
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.operators.TextOps
 import graft.functions.Portable
@@ -24,11 +21,9 @@ import graft.functions.Portable
   * operator. */
 object StreamingCorpusFilter {
 
-  private val runSeq = new AtomicInteger(0)
-
   def run(s: SparkSession, dir: String): DataFrame = {
     val stopArr = array(TextOps.Stopwords.map(lit): _*)
-    val stream = s.readStream.schema(StreamingDedup.docsSchema)
+    val stream = s.readStream.schema(graft.sources.Tables.documents(s, dir).schema)
       .parquet(s"$dir/[d]ocuments.parquet")
       .withColumn("tk", Portable.tokens(col("text")))
       .select(col("doc_id"), col("source"),
@@ -40,7 +35,7 @@ object StreamingCorpusFilter {
       .filter(col("n_words") >= TextOps.MinWords &&
         col("mean_word_len") <= TextOps.MaxMeanWord &&
         col("stop_ratio") >= TextOps.MinStopRatio)
-    MemorySinks.runAvailableNow(s, stream, "stream_corpus_filter", runSeq)._2
+    MemorySinks.runAvailableNow(s, stream, "stream_corpus_filter")._2
   }
 
   val oracle: String = {

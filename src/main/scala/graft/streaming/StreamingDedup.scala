@@ -1,11 +1,7 @@
 package graft.streaming
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
-import org.apache.spark.sql.types._
 
 /** Streaming exact deduplication on document ingest: the pattern a
   * continuously-fed training-data pipeline uses to drop already-seen
@@ -17,19 +13,12 @@ import org.apache.spark.sql.types._
   * deployment bounds the state with a watermark on ingest time). */
 object StreamingDedup {
 
-  val docsSchema: StructType = StructType(Seq(
-    StructField("doc_id", LongType), StructField("text", StringType),
-    StructField("lang", StringType), StructField("source", StringType),
-    StructField("n_chars", LongType)))
-
-  private val runSeq = new AtomicInteger(0)
-
   def run(s: SparkSession, dir: String): DataFrame = {
-    val stream = s.readStream.schema(docsSchema)
+    val stream = s.readStream.schema(graft.sources.Tables.documents(s, dir).schema)
       .parquet(s"$dir/[d]ocuments.parquet")
       .select(sha2(col("text"), 256).as("chash"))
       .dropDuplicates("chash")
-    MemorySinks.runAvailableNow(s, stream, "stream_dedup", runSeq)._2
+    MemorySinks.runAvailableNow(s, stream, "stream_dedup")._2
   }
 
   val oracle: String = "SELECT DISTINCT sha256(text) AS chash FROM documents"

@@ -1,10 +1,8 @@
 package graft.streaming
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import graft.operators.TextOps
 
 /** Streaming INGEST-TIME near-dup detection — the MinHash-LSH dedup
@@ -79,8 +77,6 @@ object StreamingDedupMinhash {
     out.result().iterator
   }
 
-  private val runSeq = new AtomicInteger(0)
-
   def run(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val schema = graft.sources.Tables.documents(s, dir).schema
@@ -89,8 +85,7 @@ object StreamingDedupMinhash {
       .as[Doc]
       .groupByKey(d => (d.band, d.bkey))
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(fold)
-    val (q, out) =
-      MemorySinks.runAvailableNow(s, stream.toDF(), "stream_dedup_minhash", runSeq)
+    val (q, out) = MemorySinks.runAvailableNow(s, stream.toDF(), "stream_dedup_minhash")
     // single-batch precondition (see scaladoc): the doc_id-rank oracle
     // is only valid when all input rows arrived in ONE micro-batch.
     // Asserted from lastProgress.batchId, NOT by counting

@@ -1,10 +1,8 @@
 package graft.streaming
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import graft.operators.SketchOps
 
 /** Streaming distinct-count sketch — the continuously-maintained twin
@@ -57,8 +55,6 @@ object StreamingDistinctKmv {
     Iterator.single(Out(key, n.toLong, merged.last, est))
   }
 
-  private val runSeq = new AtomicInteger(0)
-
   /** `srcOptions` go to the file SOURCE (e.g. maxFilesPerTrigger to
     * force a multi-batch run — a write-side option would be silently
     * ignored by the source). */
@@ -80,6 +76,6 @@ object StreamingDistinctKmv {
   def run(s: SparkSession, dir: String): DataFrame = {
     val schema = graft.sources.Tables.events(s, dir).schema
     MemorySinks.runAvailableNow(s,
-      sketchStream(s, s"$dir/[e]vents.parquet", schema), "stream_kmv", runSeq)._2
+      sketchStream(s, s"$dir/[e]vents.parquet", schema), "stream_kmv")._2
   }
 }

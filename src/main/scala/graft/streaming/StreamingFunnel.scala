@@ -1,10 +1,8 @@
 package graft.streaming
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import graft.operators.EventOps
 
 /** Streaming conversion-funnel progress: the Structured-Streaming twin
@@ -58,10 +56,13 @@ object StreamingFunnel {
     out.result().iterator
   }
 
-  private val runSeq = new AtomicInteger(0)
-
-  private def funnelStream(s: SparkSession, srcGlob: String,
-                           schema: org.apache.spark.sql.types.StructType): DataFrame = {
+  /** The transition stream over the events files matching `srcGlob`.
+    * Run into a durable sink ([[MemorySinks.runFileSink]]), a restarted
+    * stream resumes the offset log and rehydrates every user's funnel
+    * stage, so a user whose view arrived before the restart still
+    * converts on a click after it (pinned by the restart spec). */
+  private[graft] def funnelStream(s: SparkSession, srcGlob: String,
+                                  schema: org.apache.spark.sql.types.StructType): DataFrame = {
     import s.implicits._
     s.readStream.schema(schema).parquet(srcGlob)
       .filter(col("event_type").isin("view", "click", "purchase"))
@@ -76,26 +77,10 @@ object StreamingFunnel {
       .toDF()
   }
 
-  /** Durable-sink variant for the restart-recovery spec: a restarted
-    * stream resumes the offset log and rehydrates every user's funnel
-    * stage, so a user whose view arrived before the restart still
-    * converts on a click after it. */
-  def runFileSink(s: SparkSession, srcGlob: String, sinkDir: String,
-                  ckptDir: String,
-                  schema: org.apache.spark.sql.types.StructType): Unit = {
-    val q = funnelStream(s, srcGlob, schema).writeStream
-      .format("parquet")
-      .option("path", sinkDir)
-      .option("checkpointLocation", ckptDir)
-      .outputMode("append").trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
-
   def run(s: SparkSession, dir: String): DataFrame = {
-    val schema = StreamingSessionize.eventsSchema(s, dir)
+    val schema = graft.sources.Tables.events(s, dir).schema
     val stream = funnelStream(s, s"$dir/[e]vents.parquet", schema)
-    MemorySinks.runAvailableNow(s, stream, "stream_funnel", runSeq)._2
+    MemorySinks.runAvailableNow(s, stream, "stream_funnel")._2
   }
 
   /** The batch funnel unpivoted into its transition rows — one row per

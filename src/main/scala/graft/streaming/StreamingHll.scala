@@ -1,10 +1,8 @@
 package graft.streaming
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import graft.operators.SketchOps
 
 /** Streaming HyperLogLog — the continuously-maintained twin of
@@ -68,8 +66,6 @@ object StreamingHll {
     Iterator.single(Out(key, nZero, harm, SketchOps.HllEstNum / harm.toDouble))
   }
 
-  private val runSeq = new AtomicInteger(0)
-
   /** `srcOptions` go to the file SOURCE (e.g. maxFilesPerTrigger to
     * force a multi-batch run — a write-side option would be silently
     * ignored by the source). */
@@ -95,6 +91,6 @@ object StreamingHll {
   def run(s: SparkSession, dir: String): DataFrame = {
     val schema = graft.sources.Tables.events(s, dir).schema
     MemorySinks.runAvailableNow(s,
-      sketchStream(s, s"$dir/[e]vents.parquet", schema), "stream_hll", runSeq)._2
+      sketchStream(s, s"$dir/[e]vents.parquet", schema), "stream_hll")._2
   }
 }

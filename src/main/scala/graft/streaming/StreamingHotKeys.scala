@@ -1,10 +1,8 @@
 package graft.streaming
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import graft.operators.EventOps
 
 /** Streaming hot-key detector — the continuously-maintained twin of
@@ -40,12 +38,14 @@ object StreamingHotKeys {
     Iterator.single(Out(key, n))
   }
 
-  private val runSeq = new AtomicInteger(0)
-
+  /** `srcOptions` go to the file SOURCE (e.g. maxFilesPerTrigger to
+    * force a multi-batch run — a write-side option would be silently
+    * ignored by the source). */
   def countStream(s: SparkSession, srcGlob: String,
-                  schema: org.apache.spark.sql.types.StructType): DataFrame = {
+                  schema: org.apache.spark.sql.types.StructType,
+                  srcOptions: Map[String, String] = Map.empty): DataFrame = {
     import s.implicits._
-    s.readStream.schema(schema).parquet(srcGlob)
+    s.readStream.schema(schema).options(srcOptions).parquet(srcGlob)
       .select(col("user_id")).as[Ev]
       .groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(fold)
@@ -67,6 +67,6 @@ object StreamingHotKeys {
   def run(s: SparkSession, dir: String): DataFrame = {
     val schema = graft.sources.Tables.events(s, dir).schema
     select(MemorySinks.runAvailableNow(s,
-      countStream(s, s"$dir/[e]vents.parquet", schema), "stream_hot", runSeq)._2)
+      countStream(s, s"$dir/[e]vents.parquet", schema), "stream_hot")._2)
   }
 }

@@ -1,10 +1,7 @@
 package graft.streaming
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Stream-stream event-time interval join: attribute each purchase to
   * the clicks of the same user in the preceding hour.
@@ -19,8 +16,6 @@ object StreamingIntervalJoin {
 
   val AttributionUs = 3600L * 1000000L // 1-hour click→purchase window
 
-  private val runSeq = new AtomicInteger(0)
-
   def run(s: SparkSession, dir: String): DataFrame = {
     // Streaming state partition count is fixed at the FIRST run from
     // the session's shuffle partitions and sizes the per-batch state
@@ -34,7 +29,7 @@ object StreamingIntervalJoin {
     // stream start, sized to its state volume.
     val ns = s.newSession()
     ns.conf.set("spark.sql.shuffle.partitions", "4")
-    val schema = StreamingSessionize.eventsSchema(ns, dir)
+    val schema = graft.sources.Tables.events(ns, dir).schema
     def side(tpe: String, idAs: String, userAs: String, tsAs: String) =
       ns.readStream.schema(schema)
         .parquet(s"$dir/[e]vents.parquet")
@@ -49,7 +44,7 @@ object StreamingIntervalJoin {
               | AND p_time >= click_time
               | AND p_time <= click_time + interval 1 hour""".stripMargin))
       .select(col("click_id"), col("purchase_id"), col("c_user").as("user_id"))
-    MemorySinks.runAvailableNow(ns, joined, "stream_interval_join", runSeq)._2
+    MemorySinks.runAvailableNow(ns, joined, "stream_interval_join")._2
   }
 
   val oracle: String =

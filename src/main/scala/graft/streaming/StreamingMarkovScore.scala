@@ -1,10 +1,8 @@
 package graft.streaming
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import graft.operators.EventOps
 
 /** Streaming per-user path scoring under a batch-fit Markov model —
@@ -22,9 +20,9 @@ import graft.operators.EventOps
   * window form of the same exact-ppm arithmetic. All state is
   * integers (ppm values from the model, counts); running sums over
   * integers are bit-portable where double accumulation would not be
-  * (dev/PORTABILITY.md). Run with `Trigger.AvailableNow` into a
-  * memory sink; production adds a watermark + state TTL and swaps
-  * the memory sink for a durable one. */
+  * (dev/PORTABILITY.md). Run with `Trigger.AvailableNow` through
+  * [[MemorySinks.runAvailableNow]]; production adds a watermark +
+  * state TTL and a durable sink. */
 object StreamingMarkovScore {
 
   final case class Ev(event_id: Long, user_id: Long, ts_us: Long, event_type: String)
@@ -60,8 +58,6 @@ object StreamingMarkovScore {
     out.result().iterator
   }
 
-  private val runSeq = new AtomicInteger(0)
-
   /** The fitted model per data dir (r17 optimization round): the
     * |types|² transition table is a batch-fit ARTIFACT — production
     * fits once and serves it to every scoring run, but through r16
@@ -77,14 +73,14 @@ object StreamingMarkovScore {
     val model = modelCache.get(dir)(
       EventOps.markovTransitions(s, dir).collect()
         .map(r => (r.getString(0), r.getString(1)) -> r.getLong(3)).toMap)
-    val schema = StreamingSessionize.eventsSchema(s, dir)
+    val schema = graft.sources.Tables.events(s, dir).schema
     val stream = s.readStream.schema(schema).parquet(s"$dir/[e]vents.parquet")
       .select(col("event_id"), col("user_id"),
         EventOps.tsUs(schema("ts").dataType).as("ts_us"), col("event_type"))
       .as[Ev]
       .groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(fold(model))
-    MemorySinks.runAvailableNow(s, stream.toDF(), "stream_markov_score", runSeq)._2
+    MemorySinks.runAvailableNow(s, stream.toDF(), "stream_markov_score")._2
   }
 
   /** Batch SQL twin: the same model fit + the running-window form of

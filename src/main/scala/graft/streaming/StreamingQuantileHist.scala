@@ -1,10 +1,8 @@
 package graft.streaming
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import graft.operators.SketchOps
 
 /** Streaming log₂-histogram quantile sketch — the continuously-
@@ -69,12 +67,14 @@ object StreamingQuantileHist {
       quantileLo(sorted, n, 50), quantileLo(sorted, n, 90), quantileLo(sorted, n, 99)))
   }
 
-  private val runSeq = new AtomicInteger(0)
-
+  /** `srcOptions` go to the file SOURCE (e.g. maxFilesPerTrigger to
+    * force a multi-batch run — a write-side option would be silently
+    * ignored by the source). */
   def histStream(s: SparkSession, srcGlob: String,
-                 schema: org.apache.spark.sql.types.StructType): DataFrame = {
+                 schema: org.apache.spark.sql.types.StructType,
+                 srcOptions: Map[String, String] = Map.empty): DataFrame = {
     import s.implicits._
-    s.readStream.schema(schema).parquet(srcGlob)
+    s.readStream.schema(schema).options(srcOptions).parquet(srcGlob)
       .select(col("event_type"),
         expr("cast(round(value * 100) as bigint)").as("cents"))
       .select(col("event_type"), expr(SketchOps.histBucketChain).as("bucket"))
@@ -88,6 +88,6 @@ object StreamingQuantileHist {
   def run(s: SparkSession, dir: String): DataFrame = {
     val schema = graft.sources.Tables.events(s, dir).schema
     MemorySinks.runAvailableNow(s,
-      histStream(s, s"$dir/[e]vents.parquet", schema), "stream_qhist", runSeq)._2
+      histStream(s, s"$dir/[e]vents.parquet", schema), "stream_qhist")._2
   }
 }

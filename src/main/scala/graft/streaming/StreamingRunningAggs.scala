@@ -1,10 +1,8 @@
 package graft.streaming
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import graft.operators.EventOps
 
 /** Streaming per-user running aggregates: the Structured-Streaming
@@ -19,10 +17,11 @@ import graft.operators.EventOps
   * batch fold in (ts_us, event_id) order; monetary state is integer
   * cents, so cross-engine and cross-retry results are bit-exact
   * (double accumulation would be order-sensitive —
-  * dev/PORTABILITY.md). Run with `Trigger.AvailableNow` into a memory
-  * sink so the driver's DuckDB oracle (the batch `user_running_aggs`
-  * SQL, reused verbatim) checks it like any batch query; a production
-  * deployment would add a watermark + state TTL and a durable sink. */
+  * dev/PORTABILITY.md). Run with `Trigger.AvailableNow` through
+  * [[MemorySinks.runAvailableNow]] so the driver's DuckDB oracle (the
+  * batch `user_running_aggs` SQL, reused verbatim) checks it like any
+  * batch query; a production deployment would add a watermark + state
+  * TTL and a durable sink. */
 object StreamingRunningAggs {
 
   final case class Ev(event_id: Long, user_id: Long, ts_us: Long, cents: Long)
@@ -41,11 +40,9 @@ object StreamingRunningAggs {
     out.iterator
   }
 
-  private val runSeq = new AtomicInteger(0)
-
   def run(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val schema = StreamingSessionize.eventsSchema(s, dir)
+    val schema = graft.sources.Tables.events(s, dir).schema
     val stream = s.readStream.schema(schema).parquet(s"$dir/[e]vents.parquet")
       .select(col("event_id"), col("user_id"),
         EventOps.tsUs(schema("ts").dataType).as("ts_us"),
@@ -53,6 +50,6 @@ object StreamingRunningAggs {
       .as[Ev]
       .groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(fold)
-    MemorySinks.runAvailableNow(s, stream.toDF(), "stream_running_aggs", runSeq)._2
+    MemorySinks.runAvailableNow(s, stream.toDF(), "stream_running_aggs")._2
   }
 }

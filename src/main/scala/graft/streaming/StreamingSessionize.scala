@@ -1,11 +1,9 @@
 package graft.streaming
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.types.StructType
 import graft.operators.EventOps
 
 /** Streaming gap-rule sessionization: the Structured-Streaming twin of
@@ -15,10 +13,10 @@ import graft.operators.EventOps
   * keyed by user — per-user state is (last event time, session
   * counter), so an open session survives across micro-batches, which
   * is exactly what the batch window cannot do on an unbounded stream.
-  * Run here with `Trigger.AvailableNow` into a memory sink so the
-  * driver's oracle can check it like any batch query (one batch →
-  * deterministic); a production deployment would add an event-time
-  * watermark + state TTL and write a durable sink instead.
+  * [[run]] runs it with `Trigger.AvailableNow` over the bounded input
+  * (one batch → deterministic) so the driver's oracle can check it
+  * like any batch query; a production deployment would add an
+  * event-time watermark + state TTL.
   */
 object StreamingSessionize {
 
@@ -43,22 +41,16 @@ object StreamingSessionize {
     out.iterator
   }
 
-  /** events schema for `readStream` (which demands an explicit schema),
-    * derived from the parquet FOOTER via a batch footer read of the same
-    * file — never hand-declared. Round 9's forced
-    * `StructField("ts", LongType)` over a column the driver had
-    * regenerated as TIMESTAMP(MICROS) made the vectorized reader hand
-    * back raw micros that downstream code divided as nanos: plausible
-    * numbers, 1000x wrong, caught only by the oracle. Deriving the
-    * schema from the footer removes that failure class; the ts vintage
-    * branch lives in [[EventOps.tsUs]]/[[EventOps.tsEventTime]]. */
-  def eventsSchema(s: SparkSession, dir: String): StructType =
-    graft.sources.Tables.events(s, dir).schema
-
-  private val runSeq = new AtomicInteger(0)
-
-  private def sessionStream(s: SparkSession, srcGlob: String,
-                            schema: StructType): DataFrame = {
+  /** The session-assignment stream over the events files matching
+    * `srcGlob`. Run into a durable sink ([[MemorySinks.runFileSink]]),
+    * a restart with the same checkpoint resumes exactly where the last
+    * trigger stopped — the file-source offset log skips already-read
+    * files and the state store rehydrates every user's open session,
+    * so sessions CONTINUE across restarts (pinned by the
+    * restart-recovery spec, which equals the batch window result over
+    * the full data). */
+  private[graft] def sessionStream(s: SparkSession, srcGlob: String,
+                                   schema: StructType): DataFrame = {
     import s.implicits._
     s.readStream.schema(schema).parquet(srcGlob)
       .select(col("event_id"), col("user_id"),
@@ -69,30 +61,11 @@ object StreamingSessionize {
       .toDF()
   }
 
-  /** Production-shaped run: DURABLE parquet sink + checkpoint dir. A
-    * restart with the same checkpoint resumes exactly where the last
-    * trigger stopped — the file-source offset log skips already-read
-    * files and the state store rehydrates every user's open session,
-    * so sessions CONTINUE across restarts (pinned by the
-    * restart-recovery spec, which equals the batch window result over
-    * the full data). This is the deployment shape; [[run]]'s memory
-    * sink exists for the driver's exact-compare harness. */
-  def runFileSink(s: SparkSession, srcGlob: String, sinkDir: String,
-                  ckptDir: String, schema: StructType): Unit = {
-    val q = sessionStream(s, srcGlob, schema).writeStream
-      .format("parquet")
-      .option("path", sinkDir)
-      .option("checkpointLocation", ckptDir)
-      .outputMode("append").trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
-
   def run(s: SparkSession, dir: String): DataFrame = {
-    val schema = eventsSchema(s, dir)
+    val schema = graft.sources.Tables.events(s, dir).schema
     // glob form: the file-stream source requires a directory or glob
     // basePath, and the driver ships events as a single parquet file
     val stream = sessionStream(s, s"$dir/[e]vents.parquet", schema)
-    MemorySinks.runAvailableNow(s, stream, "stream_sessionize", runSeq)._2
+    MemorySinks.runAvailableNow(s, stream, "stream_sessionize")._2
   }
 }

@@ -1,10 +1,7 @@
 package graft.streaming
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Streaming SLIDING-window aggregation: the 1-hour / 15-minute
   * traffic curve of the batch
@@ -18,11 +15,12 @@ import org.apache.spark.sql.streaming.Trigger
   * production (append-mode) deployment the watermark is what keeps
   * that bounded — windows whose end is older than the watermark
   * close, emit, and drop from the store; that bounded path, including
-  * survival across a restart, is what
-  * [[StreamingWindowCounts.runFileSink]] pins for the tumbling twin
-  * and the same eviction rule applies per-window here. THIS entry
-  * point, however, runs Complete mode into a memory sink for the
-  * driver's exact-compare harness, and in Complete mode Spark retains
+  * survival across a restart, is what the window-counts late-data
+  * spec pins for the tumbling twin ([[StreamingWindowCounts.windowAgg]]
+  * through [[MemorySinks.runFileSink]]), and the same eviction rule
+  * applies per-window here. THIS entry point, however, runs Complete
+  * mode through [[MemorySinks.runAvailableNow]] for the driver's
+  * exact-compare harness, and in Complete mode Spark retains
   * every window indefinitely (the watermark evicts nothing) — it is a
   * harness surface, not the bounded deployment shape. The batch
   * sliding oracle (epoch bucket arithmetic) is reused verbatim —
@@ -30,10 +28,8 @@ import org.apache.spark.sql.streaming.Trigger
   * oracle computes. */
 object StreamingSlidingCounts {
 
-  private val runSeq = new AtomicInteger(0)
-
   def run(s: SparkSession, dir: String): DataFrame = {
-    val schema = StreamingSessionize.eventsSchema(s, dir)
+    val schema = graft.sources.Tables.events(s, dir).schema
     val stream = s.readStream.schema(schema)
       .parquet(s"$dir/[e]vents.parquet")
       .select(
@@ -45,7 +41,7 @@ object StreamingSlidingCounts {
       .select(unix_micros(col("window.start")).as("start_us"),
         unix_micros(col("window.end")).as("end_us"),
         col("n_events"), col("sum_cents").cast("long").as("sum_cents"))
-    MemorySinks.runAvailableNow(s, stream, "stream_sliding_counts", runSeq,
+    MemorySinks.runAvailableNow(s, stream, "stream_sliding_counts",
       mode = "complete")._2
   }
 }

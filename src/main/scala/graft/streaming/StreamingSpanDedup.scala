@@ -1,10 +1,8 @@
 package graft.streaming
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
 
 import graft.operators.TextOps
 import graft.functions.Portable
@@ -55,8 +53,6 @@ object StreamingSpanDedup {
     out.result().iterator
   }
 
-  private val runSeq = new AtomicInteger(0)
-
   /** The persisted shingle-hash store per data dir (r17 optimization
     * round): the distinct-hash index of everything outside the
     * incoming slice IS the store a production pipeline maintains
@@ -84,7 +80,7 @@ object StreamingSpanDedup {
         .filter(col("doc_id") % TextOps.IncMod =!= 0)
         .select(col("h")).distinct()
         .localCheckpoint(true))
-    val stream = posOf(s.readStream.schema(StreamingDedup.docsSchema)
+    val stream = posOf(s.readStream.schema(graft.sources.Tables.documents(s, dir).schema)
         .parquet(s"$dir/[d]ocuments.parquet")
         .filter(col("doc_id") % TextOps.IncMod === 0))
       .join(idx, Seq("h"), "left_semi")
@@ -95,8 +91,7 @@ object StreamingSpanDedup {
          _: org.apache.spark.sql.streaming.GroupState[Long]) =>
           merge(docId, rows.map(_.pos).toArray)
       }
-    val (q, out) =
-      MemorySinks.runAvailableNow(s, stream.toDF(), "stream_span_dedup", runSeq)
+    val (q, out) = MemorySinks.runAvailableNow(s, stream.toDF(), "stream_span_dedup")
     // single-batch precondition (the streaming_dedup_minhash rule):
     // the in-group islands merge sees one document's positions only if
     // they all arrived in ONE micro-batch; asserted from

@@ -1,10 +1,8 @@
 package graft.streaming
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import graft.operators.EventOps
 
 /** Streaming trailing-window features: the Structured-Streaming twin
@@ -22,8 +20,8 @@ import graft.operators.EventOps
   * (ts_us, event_id) order; the RANGE-frame semantics (every event
   * with ts in [t-1h, t] counts, ties included) are reproduced by
   * evicting strictly-older-than-horizon rows before emitting. Run
-  * with `Trigger.AvailableNow` into a memory sink; the batch
-  * `trailing_window_counts` oracle checks it verbatim. */
+  * with `Trigger.AvailableNow` through [[MemorySinks.runAvailableNow]];
+  * the batch `trailing_window_counts` oracle checks it verbatim. */
 object StreamingTrailingCounts {
 
   final case class Ev(event_id: Long, user_id: Long, ts_us: Long, cents: Long)
@@ -56,11 +54,9 @@ object StreamingTrailingCounts {
     out.result().iterator
   }
 
-  private val runSeq = new AtomicInteger(0)
-
   def run(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val schema = StreamingSessionize.eventsSchema(s, dir)
+    val schema = graft.sources.Tables.events(s, dir).schema
     val stream = s.readStream.schema(schema).parquet(s"$dir/[e]vents.parquet")
       .select(col("event_id"), col("user_id"),
         EventOps.tsUs(schema("ts").dataType).as("ts_us"),
@@ -68,6 +64,6 @@ object StreamingTrailingCounts {
       .as[Ev]
       .groupByKey(_.user_id)
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(fold)
-    MemorySinks.runAvailableNow(s, stream.toDF(), "stream_trailing_counts", runSeq)._2
+    MemorySinks.runAvailableNow(s, stream.toDF(), "stream_trailing_counts")._2
   }
 }

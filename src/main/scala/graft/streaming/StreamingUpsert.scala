@@ -1,11 +1,8 @@
 package graft.streaming
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.StateStoreBridge
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming keep-latest upsert — the CDC / materialized-latest-view
   * twin of [[graft.operators.MergeOps.dbUpsert]]: versioned updates
@@ -54,10 +51,15 @@ object StreamingUpsert {
     else Iterator.empty
   }
 
-  private val runSeq = new AtomicInteger(0)
-
-  private def upsertStream(s: SparkSession, srcGlob: String,
-                           schema: org.apache.spark.sql.types.StructType): DataFrame = {
+  /** The upsert changelog stream over the lineitem files matching
+    * `srcGlob`. Run into a durable sink ([[MemorySinks.runFileSink]]),
+    * a restart with the same checkpoint resumes from the file-source
+    * offset log with every key's latest version rehydrated: replayed
+    * input re-emits NOTHING (the monotone guard sees equal versions),
+    * the idempotence a CDC changelog needs (pinned by the restart
+    * spec). */
+  private[graft] def upsertStream(s: SparkSession, srcGlob: String,
+                                  schema: org.apache.spark.sql.types.StructType): DataFrame = {
     import s.implicits._
     s.readStream.schema(schema).parquet(srcGlob)
       .select(
@@ -80,29 +82,9 @@ object StreamingUpsert {
       .toDF()
   }
 
-  /** Production-shaped run: durable parquet changelog + checkpoint. A
-    * restart with the same checkpoint resumes from the file-source
-    * offset log with every key's latest version rehydrated — replayed
-    * input re-emits NOTHING (the monotone guard sees equal versions),
-    * which is the idempotence a CDC changelog needs (pinned by the
-    * restart spec). Returns the finished query handle. */
-  def runFileSink(s: SparkSession, srcGlob: String, sinkDir: String,
-                  ckptDir: String,
-                  schema: org.apache.spark.sql.types.StructType): StreamingQuery = {
-    val q = upsertStream(s, srcGlob, schema).writeStream
-      .format("parquet")
-      .option("path", sinkDir)
-      .option("checkpointLocation", ckptDir)
-      .outputMode("append").trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    StateStoreBridge.unload(q)
-    q
-  }
-
   def run(s: SparkSession, dir: String): DataFrame = {
     val schema = graft.sources.Tables.lineitem(s, dir).schema
     val stream = upsertStream(s, s"$dir/[l]ineitem.parquet", schema)
-    MemorySinks.runAvailableNow(s, stream.toDF(), "stream_upsert", runSeq)._2
+    MemorySinks.runAvailableNow(s, stream.toDF(), "stream_upsert")._2
   }
 }

@@ -1,10 +1,7 @@
 package graft.streaming
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Streaming event-time windowed aggregation: tumbling 1-hour counts
   * and exact cent-sums per event type.
@@ -12,17 +9,22 @@ import org.apache.spark.sql.streaming.Trigger
   * `readStream` → event-time watermark → `groupBy(window(...))` — the
   * canonical Structured-Streaming aggregation. The watermark bounds
   * state (windows older than 2 hours of event time drop from the
-  * store); `Complete` output into the memory sink makes the bounded
-  * AvailableNow run deterministic so the DuckDB oracle can check it
-  * (Append mode would hold back the final, still-open window — right
-  * for production, wrong for an exact-compare harness).
+  * store); [[run]]'s `Complete` output makes the bounded AvailableNow
+  * run deterministic so the DuckDB oracle can check it (Append mode
+  * would hold back the final, still-open window — right for
+  * production, wrong for an exact-compare harness).
   */
 object StreamingWindowCounts {
 
-  private val runSeq = new AtomicInteger(0)
-
-  private def windowAgg(s: SparkSession, srcGlob: String,
-                        schema: org.apache.spark.sql.types.StructType): DataFrame =
+  /** The windowed-count stream over the events files matching
+    * `srcGlob`. Its production shape is APPEND mode into a durable sink
+    * ([[MemorySinks.runFileSink]]): a window row is emitted exactly
+    * once, when the watermark passes its end, and rows older than the
+    * checkpointed watermark are DROPPED before aggregation — the
+    * contract that bounds the state store at any scale, pinned across
+    * a restart by the late-data spec. */
+  private[graft] def windowAgg(s: SparkSession, srcGlob: String,
+                               schema: org.apache.spark.sql.types.StructType): DataFrame =
     s.readStream.schema(schema)
       .parquet(srcGlob)
       .select(
@@ -35,41 +37,10 @@ object StreamingWindowCounts {
       .select(unix_micros(col("window.start")).as("win_start_us"),
         col("event_type"), col("n"), col("sum_cents"))
 
-  /** Production shape: APPEND mode into a durable parquet sink with a
-    * checkpoint. A window row is emitted exactly once, when the
-    * watermark passes its end; rows older than the checkpointed
-    * watermark are DROPPED before aggregation — that is the contract
-    * that bounds the state store at any scale, and the late-data spec
-    * pins it across a restart. [[run]]'s Complete-mode memory sink
-    * exists for the driver's exact-compare harness (Append would hold
-    * back still-open windows there). */
-  def runFileSinkAppend(s: SparkSession, srcGlob: String, sinkDir: String,
-                        ckptDir: String,
-                        schema: org.apache.spark.sql.types.StructType): Unit = {
-    val q = windowAgg(s, srcGlob, schema).writeStream
-      .format("parquet")
-      .option("path", sinkDir)
-      .option("checkpointLocation", ckptDir)
-      .outputMode("append").trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
-
   def run(s: SparkSession, dir: String): DataFrame = {
-    val schema = StreamingSessionize.eventsSchema(s, dir)
-    val stream = s.readStream.schema(schema)
-      .parquet(s"$dir/[e]vents.parquet")
-      .select(
-        graft.operators.EventOps.tsEventTime(schema("ts").dataType).as("ev_time"),
-        col("event_type"),
-        expr("cast(round(value * 100) as bigint)").as("cents"))
-      .withWatermark("ev_time", "2 hours")
-      .groupBy(window(col("ev_time"), "1 hour"), col("event_type"))
-      .agg(count(lit(1)).as("n"), sum(col("cents")).as("sum_cents"))
-      .select(unix_micros(col("window.start")).as("win_start_us"),
-        col("event_type"), col("n"), col("sum_cents"))
-    MemorySinks.runAvailableNow(s, stream, "stream_window_counts", runSeq,
-      mode = "complete")._2
+    val schema = graft.sources.Tables.events(s, dir).schema
+    val stream = windowAgg(s, s"$dir/[e]vents.parquet", schema)
+    MemorySinks.runAvailableNow(s, stream, "stream_window_counts", mode = "complete")._2
   }
 
   val oracle: String =
