@@ -1,9 +1,11 @@
 package graft.functions
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 
 /** Codegen'd per-record recurrence kernels.
@@ -18,7 +20,11 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   * and the DuckDB `list_reduce` twin, so swapping changes no checked
   * output bit. Coefficients are constructor constants (they are
   * Scala-computed literals at every call site), so the generated code
-  * inlines them.
+  * inlines them. Each recurrence is written once per engine path: a
+  * Scala evaluator and a Java emitter here ([[Newmark]], [[Biquads]]),
+  * a DuckDB twin beside its column builder ([[Sdof.peakSql]],
+  * [[Spectra.cascadeSql]]); [[SeriesKernel]] holds what every
+  * one-series kernel shares.
   */
 
 /** Null-element guard shared by the series kernels. The kernels read
@@ -108,160 +114,141 @@ case class AssertNoNullElements(child: Expression) extends UnaryExpression {
     copy(child = newChild)
 }
 
-/** Peak |u| of the Newmark-beta SDOF recurrence over the negated
-  * ground-acceleration series `ps` (see [[Sdof]] for the derivation):
-  * state (u, v, p_prev) starting at (0, 0, ps[0]); per element x:
-  * u' = (x + p_prev + cu*u + cv*v) / keff; v' = tdt*(u' - u) - v. */
-case class SdofPeak(child: Expression, cu: Double, cv: Double, keff: Double, tdt: Double)
-    extends UnaryExpression {
+/** Skeleton of a series kernel: one `array<double>` child folded by a
+  * primitive loop. It owns what every such kernel shares — the type
+  * check, the [[KernelGuards]] NULL-element guard on both paths and
+  * the null-safe codegen plumbing — so a kernel supplies only its
+  * loop: [[fold]] for the interpreted path and [[genFold]] for the
+  * generated one, written with the same association order. */
+abstract class SeriesKernel extends UnaryExpression {
 
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "sdof_peak"
+  /** The kernel's loop over the guarded series. */
+  protected def fold(xs: ArrayData): Any
+
+  /** Java twin of [[fold]] over the series held in `a`; assigns the
+    * result to `out`. */
+  protected def genFold(ctx: CodegenContext, a: String, out: String): String
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"sdof_peak requires array<double>, got $t")
+    case t => TypeCheckResult.TypeCheckFailure(s"$prettyName requires array<double>, got $t")
   }
 
-  override def nullSafeEval(a: Any): Any = {
-    val ps = a.asInstanceOf[ArrayData]
+  final override def nullSafeEval(a: Any): Any = {
+    val xs = a.asInstanceOf[ArrayData]
     if (KernelGuards.mayContainNulls(child.dataType))
-      KernelGuards.requireNoNulls(ps, prettyName)
-    val n = ps.numElements()
-    if (n == 0) 0.0
-    else {
-      var u = 0.0; var v = 0.0; var pn = ps.getDouble(0); var peak = 0.0
+      KernelGuards.requireNoNulls(xs, prettyName)
+    fold(xs)
+  }
+
+  final override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, a => {
+      s"""
+         |${KernelGuards.genGuard(ctx, a, prettyName, child.dataType)}
+         |${genFold(ctx, a, ev.value)}
+       """.stripMargin
+    })
+}
+
+object SeriesKernel {
+
+  /** A column builder's series argument: `c` behind
+    * [[AssertNoNullElements]], so the kernels skip their own guard. */
+  private[functions] def input(c: Column): Expression =
+    AssertNoNullElements(ColumnBridge.expression(c))
+}
+
+/** The Newmark-beta SDOF step (see [[Sdof]] for the derivation), shared
+  * by [[SdofPeak]] and [[RotdStats]]: state (u, v, p_prev) starting at
+  * (0, 0, x(0)); per later element x: u' = (x + p_prev + cu*u + cv*v)
+  * / keff; v' = tdt*(u' - u) - v. The caller supplies the input term
+  * x(i): one series element, or a rotation of two. */
+private[functions] object Newmark {
+
+  /** Peak |u'| over the `n` inputs `x(0..n-1)`; 0 when `n` is 0. */
+  def peak(n: Int, x: Int => Double, cu: Double, cv: Double, keff: Double, tdt: Double): Double = {
+    var peak = 0.0
+    if (n > 0) {
+      var u = 0.0; var v = 0.0; var pn = x(0)
       var i = 1
       while (i < n) {
-        val x = ps.getDouble(i)
-        val u1 = (x + pn + cu * u + cv * v) / keff
+        val xi = x(i)
+        val u1 = (xi + pn + cu * u + cv * v) / keff
         v = tdt * (u1 - u) - v
         u = u1
-        pn = x
+        pn = xi
         val au = math.abs(u1)
         if (au > peak) peak = au
         i += 1
       }
-      peak
     }
+    peak
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val Seq(n, u, v, pn, peak, i, x, u1, au) =
-        Seq("n", "u", "v", "pn", "peak", "i", "x", "u1", "au").map(ctx.freshName)
-      s"""
-         |${KernelGuards.genGuard(ctx, a, prettyName, child.dataType)}
-         |int $n = $a.numElements();
-         |double $peak = 0.0;
-         |if ($n > 0) {
-         |  double $u = 0.0; double $v = 0.0; double $pn = $a.getDouble(0);
-         |  for (int $i = 1; $i < $n; $i++) {
-         |    double $x = $a.getDouble($i);
-         |    double $u1 = ($x + $pn + ($cu) * $u + ($cv) * $v) / ($keff);
-         |    $v = ($tdt) * ($u1 - $u) - $v;
-         |    $u = $u1;
-         |    $pn = $x;
-         |    double $au = java.lang.Math.abs($u1);
-         |    if ($au > $peak) $peak = $au;
-         |  }
-         |}
-         |${ev.value} = $peak;
-       """.stripMargin
-    })
+  /** Java twin of [[peak]]: raises the declared double `peak` to the
+    * peak |u'| over the `n` inputs, `x(i)` being the Java input term
+    * at index expression `i`. */
+  def genPeak(ctx: CodegenContext, n: String, x: String => String, peak: String,
+              cu: Double, cv: Double, keff: Double, tdt: Double): String = {
+    val Seq(u, v, pn, i, xi, u1, au) =
+      Seq("u", "v", "pn", "i", "x", "u1", "au").map(ctx.freshName)
+    s"""if ($n > 0) {
+       |  double $u = 0.0; double $v = 0.0;
+       |  double $pn = ${x("0")};
+       |  for (int $i = 1; $i < $n; $i++) {
+       |    double $xi = ${x(i)};
+       |    double $u1 = ($xi + $pn + ($cu) * $u + ($cv) * $v) / ($keff);
+       |    $v = ($tdt) * ($u1 - $u) - $v;
+       |    $u = $u1;
+       |    $pn = $xi;
+       |    double $au = java.lang.Math.abs($u1);
+       |    if ($au > $peak) $peak = $au;
+       |  }
+       |}""".stripMargin
+  }
+}
+
+/** Peak |u| of the Newmark-beta SDOF recurrence ([[Newmark]]) over the
+  * negated ground-acceleration series `ps`. */
+case class SdofPeak(child: Expression, cu: Double, cv: Double, keff: Double, tdt: Double)
+    extends SeriesKernel {
+
+  override def dataType: DataType = DoubleType
+  override def prettyName: String = "sdof_peak"
+
+  override protected def fold(ps: ArrayData): Any =
+    Newmark.peak(ps.numElements(), ps.getDouble, cu, cv, keff, tdt)
+
+  override protected def genFold(ctx: CodegenContext, a: String, out: String): String = {
+    val Seq(n, peak) = Seq("n", "peak").map(ctx.freshName)
+    s"""int $n = $a.numElements();
+       |double $peak = 0.0;
+       |${Newmark.genPeak(ctx, n, i => s"$a.getDouble($i)", peak, cu, cv, keff, tdt)}
+       |$out = $peak;""".stripMargin
+  }
 
   override protected def withNewChildInternal(newChild: Expression): SdofPeak =
     copy(child = newChild)
 }
 
-/** Order-2 IIR (biquad) filter fold over a series: returns
-  * array(y_last, sum(y^2)). */
-case class Iir2State(child: Expression, b0: Double, b1: Double, b2: Double,
-                     a1: Double, a2: Double) extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def prettyName: String = "iir2_state"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"iir2_state requires array<double>, got $t")
-  }
-
-  override def nullSafeEval(a: Any): Any = {
-    val xs = a.asInstanceOf[ArrayData]
-    if (KernelGuards.mayContainNulls(child.dataType))
-      KernelGuards.requireNoNulls(xs, prettyName)
-    val n = xs.numElements()
-    var x1 = 0.0; var x2 = 0.0; var y1 = 0.0; var y2 = 0.0; var en = 0.0
-    var i = 0
-    while (i < n) {
-      val x = xs.getDouble(i)
-      val y = b0 * x + b1 * x1 + b2 * x2 - a1 * y1 - a2 * y2
-      x2 = x1; x1 = x
-      y2 = y1; y1 = y
-      en = en + y * y
-      i += 1
-    }
-    new GenericArrayData(Array(y1, en))
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val Seq(n, x1, x2, y1, y2, en, i, x, y, out) =
-        Seq("n", "x1", "x2", "y1", "y2", "en", "i", "x", "y", "out").map(ctx.freshName)
-      s"""
-         |${KernelGuards.genGuard(ctx, a, prettyName, child.dataType)}
-         |int $n = $a.numElements();
-         |double $x1 = 0.0; double $x2 = 0.0; double $y1 = 0.0; double $y2 = 0.0;
-         |double $en = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  double $x = $a.getDouble($i);
-         |  double $y = ($b0) * $x + ($b1) * $x1 + ($b2) * $x2 - ($a1) * $y1 - ($a2) * $y2;
-         |  $x2 = $x1; $x1 = $x;
-         |  $y2 = $y1; $y1 = $y;
-         |  $en = $en + $y * $y;
-         |}
-         |double[] $out = new double[] { $y1, $en };
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Iir2State =
-    copy(child = newChild)
-}
-
-/** Cascade of second-order IIR sections (SOS) over a series — the
-  * shape of the reference's Butterworth band-pass (`scipy.signal
+/** The second-order IIR (biquad) section shared by the two cascades —
+  * the shape of the reference's Butterworth band-pass (`scipy.signal
   * .butter(..., output="sos")` + `sosfilt`, `data_processing/
   * waveform_manipulation.py:123-180`). Each element flows through the
-  * sections in order (section s's input is section s-1's output
-  * sample); returns array(y_last, sum(y^2)) of the LAST section's
-  * output. Sections are (b0, b1, b2, a1, a2) with the same recurrence
-  * and association order as [[Iir2State]] and the DuckDB
-  * `list_reduce` twin ([[Spectra.cascadeSql]]). Codegen unrolls the
-  * section loop — coefficient literals, no per-row allocation. */
-case class IirCascadeState(child: Expression,
-                           sections: Seq[(Double, Double, Double, Double, Double)])
-  extends UnaryExpression {
+  * sections (b0, b1, b2, a1, a2) in order, section s's input being
+  * section s-1's output sample:
+  * y = b0*x + b1*x1 + b2*x2 - a1*y1 - a2*y2, the association order of
+  * the DuckDB `list_reduce` twin ([[Spectra.cascadeSql]]). */
+private[functions] object Biquads {
+  type Section = (Double, Double, Double, Double, Double)
 
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def prettyName: String = "iir_cascade_state"
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(DoubleType, _) if sections.nonEmpty => TypeCheckResult.TypeCheckSuccess
-    case ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckFailure("iir_cascade_state requires >= 1 section")
-    case t => TypeCheckResult.TypeCheckFailure(s"iir_cascade_state requires array<double>, got $t")
-  }
-
-  override def nullSafeEval(a: Any): Any = {
-    val xs = a.asInstanceOf[ArrayData]
-    if (KernelGuards.mayContainNulls(child.dataType))
-      KernelGuards.requireNoNulls(xs, prettyName)
+  /** Runs the series through the cascade, handing each final-section
+    * output sample to `emit(i, y)`. */
+  def run(xs: ArrayData, sections: Seq[Section])(emit: (Int, Double) => Unit): Unit = {
     val n = xs.numElements()
     val s = sections.length
     val x1 = new Array[Double](s); val x2 = new Array[Double](s)
     val y1 = new Array[Double](s); val y2 = new Array[Double](s)
-    var en = 0.0
     var i = 0
     while (i < n) {
       var v = xs.getDouble(i)
@@ -274,45 +261,77 @@ case class IirCascadeState(child: Expression,
         v = y
         j += 1
       }
-      en = en + v * v
+      emit(i, v)
       i += 1
     }
-    new GenericArrayData(Array(if (n > 0) y1(s - 1) else 0.0, en))
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val Seq(n, en, i, v, out) = Seq("n", "en", "i", "v", "out").map(ctx.freshName)
-      val st = sections.indices.map { j =>
-        (ctx.freshName(s"x1_$j"), ctx.freshName(s"x2_$j"),
-          ctx.freshName(s"y1_$j"), ctx.freshName(s"y2_$j"), ctx.freshName(s"y_$j"))
-      }
-      val decls = st.map { case (x1, x2, y1, y2, _) =>
-        s"double $x1 = 0.0; double $x2 = 0.0; double $y1 = 0.0; double $y2 = 0.0;"
-      }.mkString("\n")
-      val stages = sections.zipWithIndex.map { case ((b0, b1, b2, a1, a2), j) =>
-        val (x1, x2, y1, y2, y) = st(j)
-        val in = if (j == 0) v else st(j - 1)._5
-        s"""double $y = ($b0) * $in + ($b1) * $x1 + ($b2) * $x2 - ($a1) * $y1 - ($a2) * $y2;
-           |$x2 = $x1; $x1 = $in;
+  /** Java twin of [[run]], the section loop unrolled with coefficient
+    * literals: `decls` declares the per-section state, `step` feeds the
+    * Java double `in` through every section, `out` names the final
+    * section's output sample inside the step and `last` its previous
+    * output (the last sample, after the loop). */
+  final case class Gen(decls: String, step: String, out: String, last: String)
+
+  def gen(ctx: CodegenContext, sections: Seq[Section], in: String): Gen = {
+    val st = sections.indices.map { j =>
+      (ctx.freshName(s"x1_$j"), ctx.freshName(s"x2_$j"),
+        ctx.freshName(s"y1_$j"), ctx.freshName(s"y2_$j"), ctx.freshName(s"y_$j"))
+    }
+    val decls = st.map { case (x1, x2, y1, y2, _) =>
+      s"double $x1 = 0.0; double $x2 = 0.0; double $y1 = 0.0; double $y2 = 0.0;"
+    }.mkString("\n")
+    val step = sections.zip(st).zip(in +: st.map(_._5)).map {
+      case (((b0, b1, b2, a1, a2), (x1, x2, y1, y2, y)), x) =>
+        s"""double $y = ($b0) * $x + ($b1) * $x1 + ($b2) * $x2 - ($a1) * $y1 - ($a2) * $y2;
+           |$x2 = $x1; $x1 = $x;
            |$y2 = $y1; $y1 = $y;""".stripMargin
-      }.mkString("\n")
-      val yLast = st.last._3
-      val yOut = st.last._5
-      s"""
-         |${KernelGuards.genGuard(ctx, a, prettyName, child.dataType)}
-         |int $n = $a.numElements();
-         |$decls
-         |double $en = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  double $v = $a.getDouble($i);
-         |  $stages
-         |  $en = $en + $yOut * $yOut;
-         |}
-         |double[] $out = new double[] { $yLast, $en };
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-       """.stripMargin
-    })
+    }.mkString("\n")
+    Gen(decls, step, st.last._5, st.last._3)
+  }
+}
+
+/** A [[Biquads]] cascade kernel; the two differ only in what they do
+  * with each output sample. */
+abstract class BiquadCascade extends SeriesKernel {
+  def sections: Seq[Biquads.Section]
+
+  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
+
+  override def checkInputDataTypes(): TypeCheckResult = super.checkInputDataTypes() match {
+    case TypeCheckResult.TypeCheckSuccess if sections.isEmpty =>
+      TypeCheckResult.TypeCheckFailure(s"$prettyName requires >= 1 section")
+    case r => r
+  }
+}
+
+/** Biquad cascade digest: array(y_last, sum(y^2)) of the final
+  * section's output. */
+case class IirCascadeState(child: Expression, sections: Seq[Biquads.Section])
+  extends BiquadCascade {
+
+  override def prettyName: String = "iir_cascade_state"
+
+  override protected def fold(xs: ArrayData): Any = {
+    var last = 0.0; var en = 0.0
+    Biquads.run(xs, sections) { (_, y) => last = y; en = en + y * y }
+    new GenericArrayData(Array(last, en))
+  }
+
+  override protected def genFold(ctx: CodegenContext, a: String, out: String): String = {
+    val Seq(n, en, i, v, arr) = Seq("n", "en", "i", "v", "out").map(ctx.freshName)
+    val c = Biquads.gen(ctx, sections, v)
+    s"""int $n = $a.numElements();
+       |${c.decls}
+       |double $en = 0.0;
+       |for (int $i = 0; $i < $n; $i++) {
+       |  double $v = $a.getDouble($i);
+       |  ${c.step}
+       |  $en = $en + ${c.out} * ${c.out};
+       |}
+       |double[] $arr = new double[] { ${c.last}, $en };
+       |$out = new org.apache.spark.sql.catalyst.util.GenericArrayData($arr);""".stripMargin
+  }
 
   override protected def withNewChildInternal(newChild: Expression): IirCascadeState =
     copy(child = newChild)
@@ -321,78 +340,32 @@ case class IirCascadeState(child: Expression,
 /** [[IirCascadeState]]'s series-output sibling: returns the full
   * filtered series (scipy `sosfilt` output) instead of the
   * (last, energy) digest — the shape downstream integration /
-  * polynomial-correction stages consume. Same recurrence, same
-  * association order as the DuckDB growing-list fold twin. */
-case class IirCascadeSeries(child: Expression,
-                            sections: Seq[(Double, Double, Double, Double, Double)])
-  extends UnaryExpression {
+  * polynomial-correction stages consume. DuckDB twin: the
+  * growing-list fold [[Spectra.cascadeSeriesSql]]. */
+case class IirCascadeSeries(child: Expression, sections: Seq[Biquads.Section])
+  extends BiquadCascade {
 
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
   override def prettyName: String = "iir_cascade_series"
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(DoubleType, _) if sections.nonEmpty => TypeCheckResult.TypeCheckSuccess
-    case ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckFailure("iir_cascade_series requires >= 1 section")
-    case t => TypeCheckResult.TypeCheckFailure(s"iir_cascade_series requires array<double>, got $t")
-  }
-
-  override def nullSafeEval(a: Any): Any = {
-    val xs = a.asInstanceOf[ArrayData]
-    if (KernelGuards.mayContainNulls(child.dataType))
-      KernelGuards.requireNoNulls(xs, prettyName)
-    val n = xs.numElements()
-    val s = sections.length
-    val x1 = new Array[Double](s); val x2 = new Array[Double](s)
-    val y1 = new Array[Double](s); val y2 = new Array[Double](s)
-    val out = new Array[Double](n)
-    var i = 0
-    while (i < n) {
-      var v = xs.getDouble(i)
-      var j = 0
-      while (j < s) {
-        val (b0, b1, b2, a1, a2) = sections(j)
-        val y = b0 * v + b1 * x1(j) + b2 * x2(j) - a1 * y1(j) - a2 * y2(j)
-        x2(j) = x1(j); x1(j) = v
-        y2(j) = y1(j); y1(j) = y
-        v = y
-        j += 1
-      }
-      out(i) = v
-      i += 1
-    }
+  override protected def fold(xs: ArrayData): Any = {
+    val out = new Array[Double](xs.numElements())
+    Biquads.run(xs, sections)((i, y) => out(i) = y)
     new GenericArrayData(out)
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val Seq(n, i, v, out) = Seq("n", "i", "v", "out").map(ctx.freshName)
-      val st = sections.indices.map { j =>
-        (ctx.freshName(s"x1_$j"), ctx.freshName(s"x2_$j"),
-          ctx.freshName(s"y1_$j"), ctx.freshName(s"y2_$j"), ctx.freshName(s"y_$j"))
-      }
-      val decls = st.map { case (x1, x2, y1, y2, _) =>
-        s"double $x1 = 0.0; double $x2 = 0.0; double $y1 = 0.0; double $y2 = 0.0;"
-      }.mkString("\n")
-      val stages = sections.zipWithIndex.map { case ((b0, b1, b2, a1, a2), j) =>
-        val (x1, x2, y1, y2, y) = st(j)
-        val in = if (j == 0) v else st(j - 1)._5
-        s"""double $y = ($b0) * $in + ($b1) * $x1 + ($b2) * $x2 - ($a1) * $y1 - ($a2) * $y2;
-           |$x2 = $x1; $x1 = $in;
-           |$y2 = $y1; $y1 = $y;""".stripMargin
-      }.mkString("\n")
-      s"""
-         |${KernelGuards.genGuard(ctx, a, prettyName, child.dataType)}
-         |int $n = $a.numElements();
-         |$decls
-         |double[] $out = new double[$n];
-         |for (int $i = 0; $i < $n; $i++) {
-         |  double $v = $a.getDouble($i);
-         |  $stages
-         |  $out[$i] = ${st.last._5};
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-       """.stripMargin
-    })
+  override protected def genFold(ctx: CodegenContext, a: String, out: String): String = {
+    val Seq(n, i, v, arr) = Seq("n", "i", "v", "out").map(ctx.freshName)
+    val c = Biquads.gen(ctx, sections, v)
+    s"""int $n = $a.numElements();
+       |${c.decls}
+       |double[] $arr = new double[$n];
+       |for (int $i = 0; $i < $n; $i++) {
+       |  double $v = $a.getDouble($i);
+       |  ${c.step}
+       |  $arr[$i] = ${c.out};
+       |}
+       |$out = new org.apache.spark.sql.catalyst.util.GenericArrayData($arr);""".stripMargin
+  }
 
   override protected def withNewChildInternal(newChild: Expression): IirCascadeSeries =
     copy(child = newChild)
@@ -407,20 +380,12 @@ case class IirCascadeSeries(child: Expression,
   * itself). mul=div=1 is exact identity. DuckDB twin is the
   * growing-list `list_reduce` fold (+ `list_transform` when scaled). */
 case class CumTrapz(child: Expression, dt: Double, mul: Double = 1.0, div: Double = 1.0)
-  extends UnaryExpression {
+  extends SeriesKernel {
 
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
   override def prettyName: String = "cum_trapz"
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(s"cum_trapz requires array<double>, got $t")
-  }
-
-  override def nullSafeEval(a: Any): Any = {
-    val xs = a.asInstanceOf[ArrayData]
-    if (KernelGuards.mayContainNulls(child.dataType))
-      KernelGuards.requireNoNulls(xs, prettyName)
+  override protected def fold(xs: ArrayData): Any = {
     val n = xs.numElements()
     val out = new Array[Double](n)
     var acc = 0.0
@@ -434,22 +399,18 @@ case class CumTrapz(child: Expression, dt: Double, mul: Double = 1.0, div: Doubl
     new GenericArrayData(out)
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val Seq(n, i, out, acc) = Seq("n", "i", "out", "acc").map(ctx.freshName)
-      s"""
-         |${KernelGuards.genGuard(ctx, a, prettyName, child.dataType)}
-         |int $n = $a.numElements();
-         |double[] $out = new double[$n];
-         |double $acc = 0.0;
-         |if ($n > 0) $out[0] = $acc * ($mul) / ($div);
-         |for (int $i = 1; $i < $n; $i++) {
-         |  $acc = $acc + ($dt) * ($a.getDouble($i - 1) + $a.getDouble($i)) / 2.0;
-         |  $out[$i] = $acc * ($mul) / ($div);
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-       """.stripMargin
-    })
+  override protected def genFold(ctx: CodegenContext, a: String, out: String): String = {
+    val Seq(n, i, arr, acc) = Seq("n", "i", "out", "acc").map(ctx.freshName)
+    s"""int $n = $a.numElements();
+       |double[] $arr = new double[$n];
+       |double $acc = 0.0;
+       |if ($n > 0) $arr[0] = $acc * ($mul) / ($div);
+       |for (int $i = 1; $i < $n; $i++) {
+       |  $acc = $acc + ($dt) * ($a.getDouble($i - 1) + $a.getDouble($i)) / 2.0;
+       |  $arr[$i] = $acc * ($mul) / ($div);
+       |}
+       |$out = new org.apache.spark.sql.catalyst.util.GenericArrayData($arr);""".stripMargin
+  }
 
   override protected def withNewChildInternal(newChild: Expression): CumTrapz =
     copy(child = newChild)
@@ -461,16 +422,15 @@ case class CumTrapz(child: Expression, dt: Double, mul: Double = 1.0, div: Doubl
   * (`nzgmdb/data_processing/merge_flatfiles.py:615-643`,
   * wiki `IM-Calculation.md`). Children are the two negated horizontal
   * ground-acceleration series (000 / 090 axes); for each angle k the
-  * rotated input x = cos_k*x000 + sin_k*x090 drives the same
-  * Newmark-beta recurrence as [[SdofPeak]] (same coefficients, same
-  * association order as the DuckDB `list_reduce` twin), or — when
+  * rotated input x = cos_k*x000 + sin_k*x090 drives the
+  * [[Newmark]] recurrence [[SdofPeak]] runs, or — when
   * `raw` — the peak |x| itself (the PGA RotD variant, oscillator
   * skipped). The median over an even angle count is the numpy
   * convention: mean of the two middle order statistics. */
 case class RotdStats(left: Expression, right: Expression,
     cosA: Array[Double], sinA: Array[Double],
     cu: Double, cv: Double, keff: Double, tdt: Double, raw: Boolean)
-  extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
+  extends BinaryExpression {
 
   override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
   override def prettyName: String = "rotd_stats"
@@ -502,30 +462,19 @@ case class RotdStats(left: Expression, right: Expression,
     var k = 0
     while (k < cosA.length) {
       val c = cosA(k); val s = sinA(k)
-      var peak = 0.0
-      if (raw) {
-        var i = 0
-        while (i < n) {
-          val ax = math.abs(c * p0.getDouble(i) + s * p9.getDouble(i))
-          if (ax > peak) peak = ax
-          i += 1
+      val x = (i: Int) => c * p0.getDouble(i) + s * p9.getDouble(i)
+      peaks(k) =
+        if (!raw) Newmark.peak(n, x, cu, cv, keff, tdt)
+        else {
+          var peak = 0.0
+          var i = 0
+          while (i < n) {
+            val ax = math.abs(x(i))
+            if (ax > peak) peak = ax
+            i += 1
+          }
+          peak
         }
-      } else if (n > 0) {
-        var u = 0.0; var v = 0.0
-        var pn = c * p0.getDouble(0) + s * p9.getDouble(0)
-        var i = 1
-        while (i < n) {
-          val x = c * p0.getDouble(i) + s * p9.getDouble(i)
-          val u1 = (x + pn + cu * u + cv * v) / keff
-          v = tdt * (u1 - u) - v
-          u = u1
-          pn = x
-          val au = math.abs(u1)
-          if (au > peak) peak = au
-          i += 1
-        }
-      }
-      peaks(k) = peak
       k += 1
     }
     new GenericArrayData(stats(peaks))
@@ -535,32 +484,20 @@ case class RotdStats(left: Expression, right: Expression,
     nullSafeCodeGen(ctx, ev, (a, b) => {
       val cosRef = ctx.addReferenceObj("rotdCos", cosA, "double[]")
       val sinRef = ctx.addReferenceObj("rotdSin", sinA, "double[]")
-      val Seq(n, peaks, k, c, s, peak, u, v, pn, i, x, u1, au, nn, med, out) =
-        Seq("n", "peaks", "k", "c", "s", "peak", "u", "v", "pn", "i", "x", "u1", "au",
-          "nn", "med", "out").map(ctx.freshName)
+      val Seq(n, peaks, k, c, s, peak, i, au, nn, med, out) =
+        Seq("n", "peaks", "k", "c", "s", "peak", "i", "au", "nn", "med", "out").map(ctx.freshName)
+      val x = (j: String) => s"$c * $a.getDouble($j) + $s * $b.getDouble($j)"
       val body =
         if (raw)
           s"""
              |for (int $i = 0; $i < $n; $i++) {
-             |  double $au = java.lang.Math.abs($c * $a.getDouble($i) + $s * $b.getDouble($i));
+             |  double $au = java.lang.Math.abs(${x(i)});
              |  if ($au > $peak) $peak = $au;
              |}
            """.stripMargin
         else
           s"""
-             |if ($n > 0) {
-             |  double $u = 0.0; double $v = 0.0;
-             |  double $pn = $c * $a.getDouble(0) + $s * $b.getDouble(0);
-             |  for (int $i = 1; $i < $n; $i++) {
-             |    double $x = $c * $a.getDouble($i) + $s * $b.getDouble($i);
-             |    double $u1 = ($x + $pn + ($cu) * $u + ($cv) * $v) / ($keff);
-             |    $v = ($tdt) * ($u1 - $u) - $v;
-             |    $u = $u1;
-             |    $pn = $x;
-             |    double $au = java.lang.Math.abs($u1);
-             |    if ($au > $peak) $peak = $au;
-             |  }
-             |}
+             |${Newmark.genPeak(ctx, n, x, peak, cu, cv, keff, tdt)}
            """.stripMargin
       s"""
          |${KernelGuards.genGuard(ctx, a, prettyName, left.dataType)}

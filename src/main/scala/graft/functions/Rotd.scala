@@ -1,5 +1,7 @@
 package graft.functions
 
+import org.apache.spark.sql.graftbridge.ColumnBridge
+
 /** RotD component combination — RotD0 / RotD50 / RotD100 (Boore
   * 2010), the orientation-independent horizontal components the
   * reference publishes as separate flatfiles
@@ -73,26 +75,12 @@ object Rotd {
       s" + ${dl(s)} * -CAST(${Portable.acc090Term("pk", "j")} AS DOUBLE)))"
 
   /** The sorted per-angle peak list for one period (DuckDB): NAngles
-    * independent [[Sdof.psaSql]]-shaped folds over the rotated series
-    * — unscaled peaks (max |u|), sorted; min/median/max come off the
+    * independent [[Sdof.peakSql]] folds over the rotated series —
+    * unscaled peaks (max |u|), sorted; min/median/max come off the
     * sorted list. */
   private def peaksSql(t: Double): String = {
-    val folds = angles.map { case (c, s) => rawPeakFoldSql(t, rotSql(c, s)) }
+    val folds = angles.map { case (c, s) => Sdof.peakSql(t, rotSql(c, s)) }
     s"list_sort([${folds.mkString(", ")}])"
-  }
-
-  /** Unscaled Newmark peak fold (the [[Sdof.psaSql]] core without the
-    * omega^2/100 scaling — RotD statistics sort RAW peaks, then scale,
-    * exactly as the kernel does). */
-  private def rawPeakFoldSql(t: Double, ps: String): String = {
-    val C = Sdof.coef(t)
-    def u1(u: String, v: String, pn: String, x: String) =
-      s"($x + $pn + ${dl(C.cu)} * $u + ${dl(C.cv)} * $v) / ${dl(C.keff)}"
-    val (u, v, pn, pk) = ("st[1]", "st[2]", "st[3]", "st[4]")
-    val un = u1(u, v, pn, "el[1]")
-    s"list_reduce(list_prepend([${dl(0.0)}, ${dl(0.0)}, ($ps)[1], ${dl(0.0)}], " +
-      s"list_transform(list_slice($ps, 2, $N), x -> [x])), " +
-      s"(st, el) -> [$un, ${dl(C.tdt)} * ($un - $u) - $v, el[1], greatest($pk, abs($un))])[4]"
   }
 
   /** Sorted per-angle raw-PGA peak list (DuckDB): list_max of |x| per
@@ -138,11 +126,8 @@ object Rotd {
   def statsCol(t: Double, p0: org.apache.spark.sql.Column,
                p9: org.apache.spark.sql.Column,
                grid: Seq[(Double, Double)] = angles): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.graftbridge.ColumnBridge
     val C = Sdof.coef(t)
-    ColumnBridge.column(RotdStats(
-      AssertNoNullElements(ColumnBridge.expression(p0)),
-      AssertNoNullElements(ColumnBridge.expression(p9)),
+    ColumnBridge.column(RotdStats(SeriesKernel.input(p0), SeriesKernel.input(p9),
       grid.map(_._1).toArray, grid.map(_._2).toArray,
       C.cu, C.cv, C.keff, C.tdt, raw = false))
   }
@@ -151,10 +136,7 @@ object Rotd {
   def pgaStatsCol(p0: org.apache.spark.sql.Column,
                   p9: org.apache.spark.sql.Column,
                   grid: Seq[(Double, Double)] = angles): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.graftbridge.ColumnBridge
-    ColumnBridge.column(RotdStats(
-      AssertNoNullElements(ColumnBridge.expression(p0)),
-      AssertNoNullElements(ColumnBridge.expression(p9)),
+    ColumnBridge.column(RotdStats(SeriesKernel.input(p0), SeriesKernel.input(p9),
       grid.map(_._1).toArray, grid.map(_._2).toArray,
       0.0, 0.0, 1.0, 0.0, raw = true))
   }

@@ -1,5 +1,9 @@
 package graft.functions
 
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.functions.lit
+import org.apache.spark.sql.graftbridge.ColumnBridge
+
 /** Portable single-degree-of-freedom oscillator kernel — the pSA
   * (pseudo-spectral acceleration) reduction that dominates the
   * reference's flatfile columns (`nzgmdb/calculation/ims.py:18-97`
@@ -91,26 +95,28 @@ object Sdof {
     * (the equivalent `aggregate` fold is interpreted — measured 5-10x
     * slower); arithmetic order is identical to the DuckDB
     * `list_reduce` twin, so checked outputs are bit-equal. */
-  def psaCol(t: Double, ps: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.graftbridge.{ColumnBridge => ExpressionUtils}
-    import org.apache.spark.sql.functions.lit
+  def psaCol(t: Double, ps: Column): Column = {
     val C = coef(t)
-    lit(C.k) * ExpressionUtils.column(SdofPeak(
-      AssertNoNullElements(ExpressionUtils.expression(ps)), C.cu, C.cv, C.keff, C.tdt)) / lit(100.0)
+    lit(C.k) * ColumnBridge.column(
+      SdofPeak(SeriesKernel.input(ps), C.cu, C.cv, C.keff, C.tdt)) / lit(100.0)
   }
 
-  /** DuckDB twin of [[psaSpark]] — `list_reduce` needs accumulator and
-    * element types equal, so elements are wrapped as 1-lists and the
-    * initial state is prepended; the arithmetic is structurally
-    * identical to the Spark fold (same association order). */
-  def psaSql(t: Double, ps: String): String = {
-    val C  = coef(t)
-    def u1(u: String, v: String, pn: String, x: String) =
-      s"($x + $pn + ${dl(C.cu)} * $u + ${dl(C.cv)} * $v) / ${dl(C.keff)}"
+  /** DuckDB twin of [[psaCol]]: the scaled [[peakSql]]. */
+  def psaSql(t: Double, ps: String): String =
+    s"${dl(coef(t).k)} * ${peakSql(t, ps)} / ${dl(100.0)}"
+
+  /** Unscaled Newmark peak fold (max |u|) over the DuckDB list `ps`:
+    * [[psaSql]] scales it, and the RotD statistics sort raw peaks,
+    * then scale, as the kernel does. `list_reduce` needs accumulator
+    * and element types equal, so elements are wrapped as 1-lists and
+    * the initial state is prepended; the arithmetic is structurally
+    * identical to the [[Newmark]] step (same association order). */
+  private[functions] def peakSql(t: Double, ps: String): String = {
+    val C = coef(t)
     val (u, v, pn, pk) = ("st[1]", "st[2]", "st[3]", "st[4]")
-    val un = u1(u, v, pn, "el[1]")
-    s"${dl(C.k)} * list_reduce(list_prepend([${dl(0.0)}, ${dl(0.0)}, $ps[1], ${dl(0.0)}], " +
+    val un = s"(el[1] + $pn + ${dl(C.cu)} * $u + ${dl(C.cv)} * $v) / ${dl(C.keff)}"
+    s"list_reduce(list_prepend([${dl(0.0)}, ${dl(0.0)}, ($ps)[1], ${dl(0.0)}], " +
       s"list_transform(list_slice($ps, 2, $NFreq), x -> [x])), " +
-      s"(st, el) -> [$un, ${dl(C.tdt)} * ($un - $u) - $v, el[1], greatest($pk, abs($un))])[4] / ${dl(100.0)}"
+      s"(st, el) -> [$un, ${dl(C.tdt)} * ($un - $u) - $v, el[1], greatest($pk, abs($un))])[4]"
   }
 }

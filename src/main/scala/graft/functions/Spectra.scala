@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.ColumnBridge
 
 /** Portable spectral kernels for the frequency-domain stages of the
   * reference pipeline (`nzgmdb/calculation/snr.py:20-139` FFT + SNR,
@@ -30,20 +31,6 @@ object Spectra {
   val KoB = 20.0  // Konno-Ohmachi bandwidth coefficient
 
   def freqHz(k: Int): Double = k / (N * Dt)
-
-  /** The reference's common FAS frequency grid (`data/config.yaml`
-    * common_frequency_*: 389 log-spaced points in [0.01318257, 100]
-    * Hz, built with np.logspace at `calculation/ims.py:143-148`) —
-    * the production fidelity companion to [[Sdof.ProdPeriods]]
-    * (SURVEY §5). The DFT-row + KO-weight generators take the grid as
-    * constants, so a production caller swaps this in with no plan
-    * change; per-row cost stays linear in bins. The checked profile
-    * keeps the 8-bin grid for oracle tractability. */
-  val ProdFreqs: Seq[Double] = {
-    val (lo, hi, n) = (0.01318257, 100.0, 389)
-    (0 until n).map(i =>
-      math.pow(10.0, math.log10(lo) + (math.log10(hi) - math.log10(lo)) * i / (n - 1)))
-  }
 
   private def dl(d: Double): String = Portable.dl(d)
 
@@ -85,10 +72,8 @@ object Spectra {
 
   /** Codegen'd dot against a literal row ([[VecDot]] — bit-equal to
     * the [[Portable.dot]] fold, compiled instead of interpreted). */
-  def vecDot(a: Column, b: Column): Column = {
-    import org.apache.spark.sql.graftbridge.{ColumnBridge => ExpressionUtils}
-    ExpressionUtils.column(VecDot(ExpressionUtils.expression(a), ExpressionUtils.expression(b)))
-  }
+  def vecDot(a: Column, b: Column): Column =
+    ColumnBridge.column(VecDot(ColumnBridge.expression(a), ColumnBridge.expression(b)))
 
   /** Power at bin k of the series held in column `xs`: Re²+Im², each a
     * codegen'd dot against a literal twiddle row. */
@@ -235,35 +220,41 @@ object Spectra {
   /** SOS cascade over the series column `tw`, codegen'd
     * ([[IirCascadeState]]): returns array(y_last, Σy²) of the final
     * section's output. */
-  def cascadeCol(tw: Column, sos: Seq[Sos] = BandSos): Column = {
-    import org.apache.spark.sql.graftbridge.{ColumnBridge => ExpressionUtils}
-    ExpressionUtils.column(IirCascadeState(
-      AssertNoNullElements(ExpressionUtils.expression(tw)),
-      sos.map(s => (s.b0, s.b1, s.b2, s.a1, s.a2))))
-  }
+  def cascadeCol(tw: Column, sos: Seq[Sos] = BandSos): Column =
+    ColumnBridge.column(IirCascadeState(SeriesKernel.input(tw), sections(sos)))
+
+  private def sections(sos: Seq[Sos]): Seq[Biquads.Section] =
+    sos.map(s => (s.b0, s.b1, s.b2, s.a1, s.a2))
 
   /** DuckDB `list_reduce` twin of [[cascadeCol]]. State vector:
     * [x₋₁, x₋₂, y₋₁⁽⁰⁾, y₋₂⁽⁰⁾, …, y₋₁⁽ˢ⁻¹⁾, y₋₂⁽ˢ⁻¹⁾, Σy²]
-    * (1-indexed in SQL); section s's input is section s−1's output,
-    * textually inlined — double arithmetic is deterministic, so the
-    * re-evaluated subexpression equals the Java local. Final output:
-    * y_last = st[2S+1], Σy² = st[2S+2+1]. */
+    * (1-indexed in SQL); final output: y_last = st[2S+1],
+    * Σy² = st[2S+2+1]. */
   def cascadeSql(tw: String, sos: Seq[Sos] = BandSos): String = {
-    val s = sos.size
+    val (filter, y) = cascadeStepSql(sos)
+    val newState = filter :+ s"st[${2 * sos.size + 3}] + $y * $y"
+    val zeros = Seq.fill(2 * sos.size + 3)(dl(0.0)).mkString("[", ", ", "]")
+    s"list_reduce(list_prepend($zeros, list_transform($tw, x -> [x])), " +
+      s"(st, el) -> ${newState.mkString("[", ", ", "]")})"
+  }
+
+  /** One cascade step of the SQL twins, over the fold state `st` and
+    * the element `el[1]`: the 2S+2 new filter-state entries (the
+    * [[cascadeSql]] layout) and the final section's output. Section
+    * s's input is section s−1's output, textually inlined — double
+    * arithmetic is deterministic, so the re-evaluated subexpression
+    * equals the Java local ([[Biquads]]). */
+  private def cascadeStepSql(sos: Seq[Sos]): (Seq[String], String) = {
     def yExpr(j: Int): String = {
       val in = if (j == 0) "el[1]" else yExpr(j - 1)
       val Sos(b0, b1, b2, a1, a2) = sos(j)
       s"(${dl(b0)} * $in + ${dl(b1)} * st[${2 * j + 1}] + ${dl(b2)} * st[${2 * j + 2}]" +
         s" - ${dl(a1)} * st[${2 * j + 3}] - ${dl(a2)} * st[${2 * j + 4}])"
     }
-    val newState =
-      Seq("el[1]", "st[1]") ++
-        (0 until s).flatMap(j => Seq(yExpr(j), s"st[${2 * j + 3}]")) ++
-        Seq(s"st[${2 * s + 3}] + ${yExpr(s - 1)} * ${yExpr(s - 1)}")
-    val zeros = Seq.fill(2 * s + 3)(dl(0.0)).mkString("[", ", ", "]")
-    s"list_reduce(list_prepend($zeros, list_transform($tw, x -> [x])), " +
-      s"(st, el) -> ${newState.mkString("[", ", ", "]")})"
+    (Seq("el[1]", "st[1]") ++ sos.indices.flatMap(j => Seq(yExpr(j), s"st[${2 * j + 3}]")),
+      yExpr(sos.size - 1))
   }
+
   /** 1-based SQL index of y_last / Σy² in [[cascadeSql]]'s state. */
   def cascadeLastIdx(sos: Seq[Sos] = BandSos): Int = 2 * sos.size + 1
   def cascadeEnergyIdx(sos: Seq[Sos] = BandSos): Int = 2 * sos.size + 3
@@ -271,41 +262,26 @@ object Spectra {
   // ---- series-output cascade + integration + polyfit --------------
 
   /** Full filtered series ([[IirCascadeSeries]]). */
-  def cascadeSeriesCol(tw: Column, sos: Seq[Sos] = BandSos): Column = {
-    import org.apache.spark.sql.graftbridge.{ColumnBridge => ExpressionUtils}
-    ExpressionUtils.column(IirCascadeSeries(
-      AssertNoNullElements(ExpressionUtils.expression(tw)),
-      sos.map(s => (s.b0, s.b1, s.b2, s.a1, s.a2))))
-  }
+  def cascadeSeriesCol(tw: Column, sos: Seq[Sos] = BandSos): Column =
+    ColumnBridge.column(IirCascadeSeries(SeriesKernel.input(tw), sections(sos)))
 
   /** DuckDB twin of [[cascadeSeriesCol]]: the [[cascadeSql]] state
     * grows a tail — each step appends the final section's output —
     * and the series is the fold result sliced past the fixed
     * 2S+2-entry filter-state prefix. */
   def cascadeSeriesSql(tw: String, sos: Seq[Sos] = BandSos): String = {
-    val s = sos.size
-    def yExpr(j: Int): String = {
-      val in = if (j == 0) "el[1]" else yExpr(j - 1)
-      val Sos(b0, b1, b2, a1, a2) = sos(j)
-      s"(${dl(b0)} * $in + ${dl(b1)} * st[${2 * j + 1}] + ${dl(b2)} * st[${2 * j + 2}]" +
-        s" - ${dl(a1)} * st[${2 * j + 3}] - ${dl(a2)} * st[${2 * j + 4}])"
-    }
-    val fixed = Seq("el[1]", "st[1]") ++
-      (0 until s).flatMap(j => Seq(yExpr(j), s"st[${2 * j + 3}]"))
-    val pre = 2 * s + 2
+    val (filter, y) = cascadeStepSql(sos)
+    val pre = 2 * sos.size + 2
     val zeros = Seq.fill(pre)(dl(0.0)).mkString("[", ", ", "]")
     s"(list_reduce(list_prepend($zeros, list_transform($tw, x -> [x])), " +
-      s"(st, el) -> ${fixed.mkString("[", ", ", "]")} || st[${pre + 1}:] || [${yExpr(s - 1)}]))" +
+      s"(st, el) -> ${filter.mkString("[", ", ", "]")} || st[${pre + 1}:] || [$y]))" +
       s"[${pre + 1}:]"
   }
 
   /** Cumulative trapezoid ([[CumTrapz]]), `initial=0`, with the fused
     * elementwise `·mul/div` post-factor (identity by default). */
-  def cumTrapzCol(xs: Column, mul: Double = 1.0, div: Double = 1.0): Column = {
-    import org.apache.spark.sql.graftbridge.{ColumnBridge => ExpressionUtils}
-    ExpressionUtils.column(CumTrapz(
-      AssertNoNullElements(ExpressionUtils.expression(xs)), Dt, mul, div))
-  }
+  def cumTrapzCol(xs: Column, mul: Double = 1.0, div: Double = 1.0): Column =
+    ColumnBridge.column(CumTrapz(SeriesKernel.input(xs), Dt, mul, div))
 
   /** DuckDB twin of [[cumTrapzCol]]: seed the fold with
     * (first element, 0) and walk the rest — state [x₋₁] ++ outputs,

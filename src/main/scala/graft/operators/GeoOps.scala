@@ -899,7 +899,6 @@ object GeoOps {
       : (Seq[Long], Seq[(Long, Option[Long], Boolean)], Column => Column) = {
     if (uCount == 0) return (Nil, Nil, _ => lit(false))
     val sp = pairs.sparkSession
-    import sp.implicits._
     def beforeL(aMag: Double, aEvid: Long, bMag: Double, bEvid: Long): Boolean =
       aMag > bMag || (aMag == bMag && aEvid < bEvid)
     val u = undecided.select("evid", "mag").queryExecution.toRdd

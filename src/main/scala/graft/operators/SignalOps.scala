@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 import graft.QueryFn
 import graft.model.Catalog
 
@@ -285,7 +284,7 @@ object SignalOps {
     * change. Publishes the fitted trend and the filtered series'
     * final sample and energy. */
   def waveformPreproc(s: SparkSession, d: String): DataFrame = {
-    import graft.functions.{Portable, Spectra}
+    import graft.functions.Spectra
     val ones = Seq.fill(Spectra.N)(1.0)
     val narr = (0 until Spectra.N).map(_.toDouble)
     Catalog.records(s, d)
@@ -366,7 +365,7 @@ object SignalOps {
     * Zero shuffles; publishes the corrected series' digest plus the
     * five curvature coefficients. */
   def waveformPolyCorrect(s: SparkSession, d: String): DataFrame = {
-    import graft.functions.{Portable, Spectra}
+    import graft.functions.Spectra
     val ones = Seq.fill(Spectra.N)(1.0)
     val narr = (0 until Spectra.N).map(_.toDouble)
     var df = Catalog.records(s, d)

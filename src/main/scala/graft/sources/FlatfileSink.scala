@@ -6,23 +6,11 @@ import org.apache.spark.sql.functions.col
 /** Publication sinks — the write side of the reference's flatfile
   * stage (`data_processing/merge_flatfiles.py:647-694`: per-component
   * ground-motion IM files plus the event / site / propagation /
-  * station-magnitude tables, all CSV).
-  *
-  * Two write paths:
-  *  - [[writeCsv]]: partitioned CSV with headers — the 100 TB path
-  *    (every executor writes its partition; no driver funnel).
-  *  - [[writeSingleCsv]]: `coalesce(1)` single-file CSV for the
-  *    dimension-sized published tables (event table, site table —
-  *    at most millions of rows); matches the reference's one-file
-  *    products. NEVER use on fact tables: one task writes everything.
+  * station-magnitude tables, all CSV). Every file goes through
+  * [[Io.writeCsv]]: partitioned CSV with headers, every executor
+  * writing its partition (no driver funnel).
   */
 object FlatfileSink {
-
-  def writeCsv(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite").option("header", "true").csv(path)
-
-  def writeSingleCsv(df: DataFrame, path: String): Unit =
-    df.coalesce(1).write.mode("overwrite").option("header", "true").csv(path)
 
   /** The reference's component split (`merge_flatfiles.py:615-644`):
     * one published file per component value, each DROPPING the
@@ -49,7 +37,7 @@ object FlatfileSink {
       val sub = df.filter(col(componentCol) === c)
         .drop(dropCols.getOrElse(c, Nil): _*)
       val path = s"$outDir/${c}_flat"
-      writeCsv(sub, path)
+      Io.writeCsv(sub, path)
       c -> path
     }.toMap
   }

@@ -36,7 +36,23 @@ object Io {
 
   /** Partitioned (and optionally sorted-within-partition) parquet sink:
     * the layout that makes 100 TB outputs re-readable with partition
-    * pruning + row-group skipping rather than full scans. */
+    * pruning + row-group skipping rather than full scans. A layout
+    * `path/source=X/lang=Y/...parquet` read back with
+    * `spark.read.parquet(path)` lets any predicate on the partition
+    * columns skip whole directories at PLANNING time: the files are
+    * never listed into the scan, visible as `PartitionFilters` in the
+    * plan (row-group pushdown, by contrast, still reads footers).
+    *
+    * Choosing the partition columns follows two hard rules:
+    * (1) partition ONLY on low-cardinality columns every consumer
+    * filters on (source, language, date) — a high-cardinality key
+    * creates millions of small files and kills the driver's listing;
+    * (2) expect skew — a `source=common_crawl` directory will dwarf
+    * `source=wikipedia`, which is fine for pruning (split planning
+    * within the directory, `maxPartitionBytes`, handles it) but means
+    * partition directories are NOT units of parallelism. The files are
+    * plain parquet readable by any engine; the layout is the
+    * interface. */
   def writePartitionedParquet(df: DataFrame, path: String,
                               partitionCols: Seq[String],
                               sortCols: Seq[String] = Nil): Unit = {

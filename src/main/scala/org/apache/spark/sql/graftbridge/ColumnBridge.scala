@@ -6,7 +6,7 @@ import org.apache.spark.sql.classic.ExpressionUtils
 
 /** Bridge to Spark's `private[sql]` Column <-> catalyst Expression
   * converters, for wrapping graft's custom codegen'd expressions
-  * ([[graft.functions.SdofPeak]], [[graft.functions.Iir2State]],
+  * ([[graft.functions.SdofPeak]], [[graft.functions.IirCascadeState]],
   * [[graft.functions.VecDot]]) into `Column`s directly from Scala —
   * the constructor-parameter coefficients can't travel through the SQL
   * function-registration route, which only sees child expressions. */

@@ -5,14 +5,16 @@ import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types.{ArrayType, DoubleType}
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.{CumTrapz, Iir2State, IirCascadeSeries, IirCascadeState, RotdStats, SdofPeak, Spectra, VecDot}
+import graft.functions.{CumTrapz, IirCascadeSeries, IirCascadeState, RotdStats, SdofPeak, Spectra, VecDot}
 
 /** Property-style tests for the codegen'd recurrence kernels: on
   * ARBITRARY double series (seeded random, not just the driver
   * testdata), the interpreted eval path must bit-match an
-  * independently written Scala fold with the DuckDB twin's semantics.
-  * The generated-Java path is exercised by the oracle gate
-  * (whole-stage codegen at sf0.01); these pin the arithmetic itself.
+  * independently written Scala fold with the DuckDB twin's semantics,
+  * and the generated-Java path, run inside whole-stage codegen with
+  * interpreted fallback switched off, must bit-match the eval path.
+  * The oracle gate (dev/verify.sh) checks both against DuckDB on the
+  * sf0.01 testdata.
   */
 class KernelsSpec extends AnyFunSuite {
 
@@ -50,7 +52,6 @@ class KernelsSpec extends AnyFunSuite {
     val sec = Seq((1.0, 0.5, 0.25, 0.1, 0.05))
     val kernels = Seq(
       SdofPeak(withNull, 1586.09, 86.28, 5799.2, 40.0),
-      Iir2State(withNull, 1.0, 0.5, 0.25, 0.1, 0.05),
       IirCascadeState(withNull, sec),
       IirCascadeSeries(withNull, sec),
       CumTrapz(withNull, 0.01),
@@ -62,24 +63,10 @@ class KernelsSpec extends AnyFunSuite {
     }
   }
 
-  test("Iir2State matches the reference biquad fold on arbitrary series") {
-    val (b0, b1, b2, a1, a2) = (0.2, 0.4, 0.2, -0.18, 0.05)
-    for (_ <- 1 to 300) {
-      val xs = randSeries()
-      val got = Iir2State(lit(xs), b0, b1, b2, a1, a2)
-        .eval(null).asInstanceOf[GenericArrayData].toDoubleArray()
-      val (y1, _, _, _, en) = xs.foldLeft((0.0, 0.0, 0.0, 0.0, 0.0)) {
-        case ((py1, py2, px1, px2, pen), x) =>
-          val y = b0 * x + b1 * px1 + b2 * px2 - a1 * py1 - a2 * py2
-          (y, py1, x, px1, pen + y * y)
-      }
-      assert(got(0) == y1 && got(1) == en, s"series $xs")
-    }
-  }
-
   test("IirCascadeState equals sequential per-section biquad filtering") {
     // the cascade kernel must equal independently filtering the series
-    // through each section in order (scipy sosfilt semantics)
+    // through each section in order (scipy sosfilt semantics); the
+    // one-section case is a single biquad fold
     def filterOne(xs: Seq[Double], s: Spectra.Sos): Seq[Double] = {
       var x1 = 0.0; var x2 = 0.0; var y1 = 0.0; var y2 = 0.0
       xs.map { x =>
@@ -88,7 +75,8 @@ class KernelsSpec extends AnyFunSuite {
         y
       }
     }
-    for (sos <- Seq(Spectra.BandSos, Spectra.ProdBandSos); _ <- 1 to 150) {
+    val oneSection = Seq(Spectra.Sos(0.2, 0.4, 0.2, -0.18, 0.05))
+    for (sos <- Seq(oneSection, Spectra.BandSos, Spectra.ProdBandSos); _ <- 1 to 150) {
       val xs = randSeries()
       val got = IirCascadeState(lit(xs), sos.map(s => (s.b0, s.b1, s.b2, s.a1, s.a2)))
         .eval(null).asInstanceOf[GenericArrayData].toDoubleArray()
@@ -138,6 +126,86 @@ class KernelsSpec extends AnyFunSuite {
       for (k <- c.indices)
         assert(math.abs(fit(k) - c(k)) < 1e-5, s"coeff $k: ${fit(k)} vs ${c(k)}")
     }
+  }
+
+  test("generated series kernels bit-equal their eval path and guard NULL elements") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.catalyst.expressions.Expression
+    import org.apache.spark.sql.execution.{ProjectExec, WholeStageCodegenExec}
+    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.graftbridge.ColumnBridge
+    import org.apache.spark.sql.types.{StructField, StructType}
+    import graft.functions.AssertNoNullElements
+    val (cu, cv, keff, tdt) = (1586.09, 86.28, 5799.2, 40.0)
+    val cosA = graft.functions.Rotd.angles.map(_._1).toArray
+    val sinA = graft.functions.Rotd.angles.map(_._2).toArray
+    def secs(sos: Seq[Spectra.Sos]) = sos.map(s => (s.b0, s.b1, s.b2, s.a1, s.a2))
+    val kernels: Seq[(Expression, Expression) => Expression] = Seq(
+      (a, _) => SdofPeak(a, cu, cv, keff, tdt),
+      (a, _) => IirCascadeState(a, Seq((0.2, 0.4, 0.2, -0.18, 0.05))),
+      (a, _) => IirCascadeState(a, secs(Spectra.BandSos)),
+      (a, _) => IirCascadeState(a, secs(Spectra.ProdBandSos)),
+      (a, _) => IirCascadeSeries(a, secs(Spectra.BandSos)),
+      (a, _) => IirCascadeSeries(a, secs(Spectra.ProdBandSos)),
+      (a, _) => CumTrapz(a, 0.05),
+      (a, _) => CumTrapz(a, 0.05, 9.81, 10.0),
+      (a, b) => RotdStats(a, b, cosA, sinA, cu, cv, keff, tdt, raw = false),
+      (a, b) => RotdStats(a, b, cosA, sinA, 0, 0, 1, 0, raw = true))
+    def bits(v: Any): Seq[Long] = v match {
+      case d: Double => Seq(java.lang.Double.doubleToRawLongBits(d))
+      case a: GenericArrayData => a.toDoubleArray().toSeq.map(java.lang.Double.doubleToRawLongBits)
+      case xs: scala.collection.Seq[_] => xs.toSeq.map(x => java.lang.Double.doubleToRawLongBits(x.asInstanceOf[Double]))
+    }
+    def causes(t: Throwable): Seq[Throwable] =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null).toSeq
+
+    // no interpreted fallback: a kernel whose Java fails to compile
+    // fails the query instead of silently running eval
+    val spark = Sessions.builder("local[2]", 2)
+      .config("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
+      .config("spark.sql.codegen.fallback", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
+    try {
+      // series come from an RDD-backed column: a literal (or a local
+      // relation) would be constant-folded through eval
+      val schema = StructType(Seq("p0", "p9").map(StructField(_, ArrayType(DoubleType))))
+      def frame(rows: Seq[Row]) =
+        spark.createDataFrame(spark.sparkContext.parallelize(rows, 2), schema)
+      val p0 = ColumnBridge.expression(col("p0"))
+      val p9 = ColumnBridge.expression(col("p9"))
+      val series = Seq(Nil, Seq(rnd.nextDouble() * 2e6 - 1e6)) ++ Seq.fill(60)(randSeries())
+      val data = frame(series.map(s => Row(s, randSeries())) :+ Row(randSeries(), Nil))
+      // declared containsNull = true: the guard is emitted and passes;
+      // behind AssertNoNullElements it compiles to nothing
+      for (wrap <- Seq[Expression => Expression](identity, AssertNoNullElements(_))) {
+        val out = data.select(col("p0") +: col("p9") +:
+          kernels.map(k => ColumnBridge.column(k(wrap(p0), wrap(p9)))): _*)
+        val rows = out.collect()
+        val plan = out.queryExecution.executedPlan
+        assert(plan.collect { case w: WholeStageCodegenExec => w.child }
+          .exists(_.isInstanceOf[ProjectExec]), s"projection not whole-stage codegen'd:\n$plan")
+        assert(rows.length == series.size + 1)
+        for (r <- rows; (k, j) <- kernels.zipWithIndex) {
+          val (a, b) = (r.getSeq[Double](0), r.getSeq[Double](1))
+          val want = k(lit(a), lit(b)).eval(null)
+          assert(bits(r.get(j + 2)) == bits(want), s"${out.columns(j + 2)} on $a / $b")
+        }
+      }
+      // an actual NULL element fails the generated kernel loudly (the
+      // failing tasks' stack traces are expected; keep them out of the log)
+      spark.sparkContext.setLogLevel("OFF")
+      val nulled = Seq[Any](1.0, null, 3.0)
+      for ((row, side) <- Seq(Row(nulled, Seq(1.0, 2.0, 3.0)) -> "p0",
+                              Row(Seq(1.0, 2.0, 3.0), nulled) -> "p9")) {
+        val df = frame(Seq(row))
+        for (k <- kernels; e = k(p0, p9) if side == "p0" || e.isInstanceOf[RotdStats]) {
+          val ex = intercept[Exception](df.select(ColumnBridge.column(e)).collect())
+          assert(causes(ex).exists(c => c.isInstanceOf[IllegalArgumentException] &&
+            c.getMessage.contains("NULL element")), s"${e.prettyName} over $side: $ex")
+        }
+      }
+    } finally spark.stop()
   }
 
   test("Butterworth band-pass SOS cascade has the closed-form Butterworth response") {

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 import graft.operators._
@@ -257,7 +257,6 @@ class OperatorSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("token_budget_mix never over-allocates the global token budget") {
-    import org.apache.spark.sql.functions._
     val mix = MixOps.tokenBudgetMix(spark, Sf).collect()
     val totalTokens = mix.map(r => r.getLong(r.fieldIndex("tokens"))).sum
     val expected = mix.map(r => r.getLong(r.fieldIndex("expected_tokens"))).sum
@@ -354,7 +353,6 @@ class OperatorSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("pack_sequences composes over the sampled mix (production profile)") {
-    import org.apache.spark.sql.functions._
     val mixRows = MixOps.corpusMixSample(spark, Sf).count()
     val packedMix = MixOps.packMixSequences(spark, Sf).collect()
     val packedCorpus = MixOps.packSequences(spark, Sf).collect()
@@ -383,7 +381,6 @@ class OperatorSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("quality_all equals the composition of the individual quality filters") {
-    import org.apache.spark.sql.functions._
     // intersect the per-filter survivor sets, then channel-dedup them —
     // must equal the one-pass quality_all output record set
     val ids = Seq("quality_has_score", "quality_score_min", "quality_multi_max",
@@ -1541,7 +1538,6 @@ class OperatorSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("dedup_savings reconciles with dedup_exact and dedup_keep_best exactly") {
-    import org.apache.spark.sql.functions.col
     val docsDf = spark.read.parquet(s"$Sf/documents.parquet")
       .select("doc_id", "source", "text").collect()
     val bySource = docsDf.groupBy(_.getString(1))
@@ -2467,7 +2463,6 @@ class OperatorSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("corpus_rollup levels are mutually consistent and match the detail rows") {
-    import org.apache.spark.sql.functions._
     val rows = TextOps.corpusRollup(spark, Sf).collect().map { r =>
       (Option(r.getString(0)), Option(r.getString(1)), r.getLong(2),
         r.getLong(3), r.getLong(4), if (r.isNullAt(5)) 0L else r.getLong(5))
@@ -3046,7 +3041,6 @@ class OperatorSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("epoch_plan allocation is an exact integer recompute") {
-    import org.apache.spark.sql.functions._
     val rows = MixOps.epochPlan(spark, Sf).collect()
     val tokens = rows.map(r => r.getString(0) -> r.getLong(2)).toMap
     val weights = rows.map(r => r.getString(0) -> r.getLong(3)).toMap
@@ -3183,7 +3177,6 @@ class OperatorSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("im_melt round-trips the pivot losslessly on defined cells") {
-    import org.apache.spark.sql.functions._
     val melted = MergeOps.imMelt(spark, Sf).collect()
       .map(r => ((r.getLong(0), r.get(1), r.getString(2)), r.getDouble(3))).toMap
     val wide = MergeOps.imPivot(spark, Sf).collect()
@@ -3283,7 +3276,6 @@ class OperatorSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("token_histogram buckets partition the corpus") {
-    import org.apache.spark.sql.functions._
     val rows = TextOps.tokenHistogram(spark, Sf).collect()
     val nDocs = graft.sources.Tables.documents(spark, Sf).count()
     assert(rows.map(_.getLong(rows.head.fieldIndex("n_docs"))).sum == nDocs,
@@ -3370,7 +3362,6 @@ class OperatorSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("streaming funnel transitions equal the batch funnel unpivot") {
-    import org.apache.spark.sql.functions._
     val batch = EventOps.eventFunnel(spark, Sf).collect().flatMap { r =>
       val u = r.getLong(r.fieldIndex("user_id"))
       def at(c: String): Option[Long] =
@@ -4447,7 +4438,6 @@ class OperatorSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("ivf_balance_report and knn_degree_stats tie out against their index tables") {
-    import org.apache.spark.sql.functions.col
     val bal = AnnOps.ivfBalanceReport(spark, Sf).collect()
       .map(r => (r.getInt(0), r.getLong(1), r.getLong(2), r.getLong(3)))
     val nVec = graft.sources.Tables.embeddings(spark, Sf).count()
@@ -4572,12 +4562,12 @@ class OperatorSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(matchedSome, "no purchase matched any click — nothing exercised")
   }
 
-  test("PartitionedSink: partition filters prune directories at planning time") {
+  test("Io.writePartitionedParquet: partition filters prune directories at planning time") {
     import org.apache.spark.sql.functions._
     val dir = java.nio.file.Files.createTempDirectory("graft_part").toString
     val docs = graft.sources.Tables.documents(spark, Sf)
-    graft.sources.PartitionedSink.writePartitioned(docs, s"$dir/docs", "source")
-    val back = graft.sources.PartitionedSink.readPartitioned(spark, s"$dir/docs")
+    graft.sources.Io.writePartitionedParquet(docs, s"$dir/docs", Seq("source"))
+    val back = spark.read.parquet(s"$dir/docs")
     val sources = docs.select("source").distinct().collect().map(_.getString(0))
     assert(sources.length > 1, "fixture needs multiple partitions")
     val one = sources.min
@@ -4819,7 +4809,6 @@ class OperatorSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("pack_efficiency is consistent with pack_sequences' window consumption") {
-    import org.apache.spark.sql.functions.col
     val packed = graft.operators.MixOps.packSequences(spark, Sf).collect()
       .map(r => (r.getString(1), r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(6)))
     // windows a (source, shard) consumes = max(seq_id + n_seqs) over its docs
