@@ -6,7 +6,7 @@
 set -e
 SF=${1:-/root/testdata/sf0.01}
 OUT=${2:-/tmp/verify_out}
-cd /root/repo
+cd "$(dirname "$0")/.."
 sbt -batch compile -warn 2>&1 | grep -v '^\[' || true
 CP="target/scala-2.13/classes:/opt/spark/jars/*"
 OPENS=""

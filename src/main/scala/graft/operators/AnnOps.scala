@@ -177,41 +177,40 @@ object AnnOps {
     * scale: (1) multi-table banded LSH — DedupTables independent
     * DedupPlanes-bit hash tables, so recall compounds across tables
     * ((1-p^k)^L miss rate) instead of relying on one table, and the
-    * table count / plane count tune with corpus size; (2) a MaxBucket
-    * window-count cap BEFORE collect_list — a bucket shared by
-    * hundreds of vectors is a degenerate direction, not a near-dup
-    * signal, and dropping it bounds per-bucket memory and pair count
-    * at any scale. */
+    * table count / plane count tune with corpus size; (2) the
+    * [[Lsh.MaxBucket]] window-count cap BEFORE collect_list — a bucket
+    * shared by hundreds of vectors is a degenerate direction, not a
+    * near-dup signal, and dropping it bounds per-bucket memory and
+    * pair count at any scale. */
   val DupCosT     = 0.95
   val DedupTables = 4  // L independent hash tables (bands)
   val DedupPlanes = 8  // k sign bits per table
-  val MaxBucket   = 64 // buckets above this size carry no dedup signal
 
   def dedupEmbedding(s: SparkSession, d: String): DataFrame =
     dedupEmbeddingWith(s, d, DedupTables, DedupPlanes)
 
   def dedupEmbeddingWith(s: SparkSession, d: String, tables: Int, planes: Int): DataFrame = {
-    val v = vectors(s, d)
-    val banded = v.select(col("vec_id"), col("embedding"), col("nrm"),
-      explode(array((0 until tables).map { t =>
-        struct(lit(t).as("band"), bucketColFor("embedding", t * planes, planes).as("bkey"))
-      }: _*)).as("bk"))
-      .select(col("vec_id"), col("embedding"), col("nrm"),
-        col("bk.band").as("band"), col("bk.bkey").as("bkey"))
-    val capped = banded
-      .withColumn("bn", count(lit(1)).over(Window.partitionBy(col("band"), col("bkey"))))
-      .filter(col("bn") <= MaxBucket).drop("bn")
-    val dup = capped
-      .groupBy(col("band"), col("bkey"))
-      .agg(sort_array(collect_list(struct(col("vec_id"), col("embedding"), col("nrm")))).as("xs"))
-      .select(explode(expr(
-        "flatten(transform(xs, (a, i) -> transform(slice(xs, i + 2, size(xs)), " +
-          "b -> struct(a.embedding AS ea, a.nrm AS na, b.embedding AS eb, b.nrm AS nb, b.vec_id AS idb))))"
-      )).as("p"))
-      .filter(expr("vec_dot(cast(p.ea as array<double>), cast(p.eb as array<double>))") /
-        (col("p.na") * col("p.nb")) >= DupCosT)
-      .select(col("p.idb").as("vec_id")).distinct()
-    v.join(dup, Seq("vec_id"), "left_anti").select("vec_id")
+    val dup = lshCosinePairs(s, d, tables, planes).filter(col("cosine") >= DupCosT)
+      .select(col("idb").as("vec_id")).distinct()
+    vectors(s, d).join(dup, Seq("vec_id"), "left_anti").select("vec_id")
+  }
+
+  /** A vector as an in-bucket pair member: ordered by id, carrying the
+    * embedding and norm the pair's cosine reads. */
+  private def vecMember: Column = struct(col("vec_id"), col("embedding"), col("nrm"))
+
+  /** Cosine of an [[Lsh.pairs]] pair of [[vecMember]]s. */
+  private def pairCosine: Column =
+    vecDot("a.embedding", "b.embedding") / (col("a.nrm") * col("b.nrm"))
+
+  /** (ida < idb, cosine) for every pair sharing a capped bucket of
+    * `tables` LSH tables of `planes` sign bits each — the candidate
+    * kernel of `dedup_embedding` and the kNN graph build. */
+  private def lshCosinePairs(s: SparkSession, d: String, tables: Int, planes: Int): DataFrame = {
+    val banded = Lsh.bands(vectors(s, d), Seq("vec_id", "embedding", "nrm"),
+      (0 until tables).map(t => bucketColFor("embedding", t * planes, planes)))
+    Lsh.pairs(Lsh.capped(banded), Lsh.Bucket, vecMember)
+      .select(col("a.vec_id").as("ida"), col("b.vec_id").as("idb"), pairCosine.as("cosine"))
   }
 
   // ---- IVF (coarse-quantizer) variant ----------------------------
@@ -352,12 +351,13 @@ object AnnOps {
     * all-vectors-are-queries sibling of `ann_lsh_topk`, and the input
     * of graph-based semantic clustering / agglomerative dedup.
     * Candidates come from the same banded structure as
-    * `dedup_embedding` (DedupTables independent hash tables, MaxBucket
-    * skew cap), so the pair count is bounded per bucket at any corpus
-    * size; each undirected candidate pair is scored once and emitted
-    * in both directions before the per-source top-K window. Vectors
-    * whose every bucket was capped (or that collide with nothing)
-    * simply have no rows — a kNN graph over LSH is sparse by design. */
+    * `dedup_embedding` ([[lshCosinePairs]]: DedupTables independent
+    * hash tables, [[Lsh.MaxBucket]] skew cap), so the pair count is
+    * bounded per bucket at any corpus size; each undirected candidate
+    * pair is scored once and emitted in both directions before the
+    * per-source top-K window. Vectors whose every bucket was capped
+    * (or that collide with nothing) simply have no rows — a kNN graph
+    * over LSH is sparse by design. */
   def annKnnGraph(s: SparkSession, d: String): DataFrame =
     knnCache.get(d)(buildKnnGraph(s, d)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
@@ -400,28 +400,7 @@ object AnnOps {
   }
 
   private def buildKnnGraph(s: SparkSession, d: String): DataFrame = {
-    val v = vectors(s, d)
-    val banded = v.select(col("vec_id"), col("embedding"), col("nrm"),
-      explode(array((0 until DedupTables).map { t =>
-        struct(lit(t).as("band"), bucketColFor("embedding", t * DedupPlanes, DedupPlanes).as("bkey"))
-      }: _*)).as("bk"))
-      .select(col("vec_id"), col("embedding"), col("nrm"),
-        col("bk.band").as("band"), col("bk.bkey").as("bkey"))
-    val capped = banded
-      .withColumn("bn", count(lit(1)).over(Window.partitionBy(col("band"), col("bkey"))))
-      .filter(col("bn") <= MaxBucket).drop("bn")
-    val scored = capped
-      .groupBy(col("band"), col("bkey"))
-      .agg(sort_array(collect_list(struct(col("vec_id"), col("embedding"), col("nrm")))).as("xs"))
-      .select(explode(expr(
-        "flatten(transform(xs, (a, i) -> transform(slice(xs, i + 2, size(xs)), " +
-          "b -> struct(a.vec_id AS ida, a.embedding AS ea, a.nrm AS na, " +
-          "b.vec_id AS idb, b.embedding AS eb, b.nrm AS nb))))"
-      )).as("p"))
-      .select(col("p.ida").as("ida"), col("p.idb").as("idb"),
-        (expr("vec_dot(cast(p.ea as array<double>), cast(p.eb as array<double>))") /
-          (col("p.na") * col("p.nb"))).as("cosine"))
-      .distinct()
+    val scored = lshCosinePairs(s, d, DedupTables, DedupPlanes).distinct()
     val sym = scored.select(col("ida").as("src"), col("idb").as("dst"), col("cosine"))
       .unionByName(scored.select(col("idb").as("src"), col("ida").as("dst"), col("cosine")))
     val w = Window.partitionBy(col("src")).orderBy(col("cosine").desc, col("dst"))
@@ -833,23 +812,16 @@ object AnnOps {
     * traded for the guarantee that cluster size, and hence the
     * quadratic in-cell pair work, is bounded by the cell sizing
     * (`cellsFor`: ~targetCell vectors/cell at any corpus size). Same
-    * sorted-collect pair kernel as `dedupEmbedding`; one groupBy on the
-    * cell id is the only shuffle past assignment. */
+    * [[Lsh.pairs]] kernel as `dedupEmbedding`, uncapped and keyed by
+    * the cell; one groupBy on the cell id is the only shuffle past
+    * assignment. */
   def semDedup(s: SparkSession, d: String): DataFrame =
     semDedupWith(s, d, SemCells)
 
   def semDedupWith(s: SparkSession, d: String, nCells: Int): DataFrame = {
     val v = assignCells(vectors(s, d), centroidTable(s, nCells))
-    val dup = v
-      .groupBy(col("cell"))
-      .agg(sort_array(collect_list(struct(col("vec_id"), col("embedding"), col("nrm")))).as("xs"))
-      .select(explode(expr(
-        "flatten(transform(xs, (a, i) -> transform(slice(xs, i + 2, size(xs)), " +
-          "b -> struct(a.embedding AS ea, a.nrm AS na, b.embedding AS eb, b.nrm AS nb, b.vec_id AS idb))))"
-      )).as("p"))
-      .filter(expr("vec_dot(cast(p.ea as array<double>), cast(p.eb as array<double>))") /
-        (col("p.na") * col("p.nb")) >= SemCosT)
-      .select(col("p.idb").as("vec_id")).distinct()
+    val dup = Lsh.pairs(v, Seq("cell"), vecMember).filter(pairCosine >= SemCosT)
+      .select(col("b.vec_id").as("vec_id")).distinct()
     v.join(dup, Seq("vec_id"), "left_anti").select(col("vec_id"), col("cell"))
   }
 
@@ -1484,7 +1456,7 @@ object AnnOps {
        |vb AS MATERIALIZED (
        |  SELECT vec_id, embedding, nrm, band, bkey FROM (
        |    SELECT *, count(*) OVER (PARTITION BY band, bkey) AS bn FROM vb0)
-       |  WHERE bn <= $MaxBucket),
+       |  WHERE bn <= ${Lsh.MaxBucket}),
        |prs AS MATERIALIZED (
        |  SELECT DISTINCT a.vec_id AS ida, b.vec_id AS idb,
        |         ${Portable.dotSql("a.embedding", "b.embedding")} / (a.nrm * b.nrm) AS cosine
@@ -2101,7 +2073,7 @@ object AnnOps {
          |vb AS (
          |  SELECT vec_id, embedding, nrm, band, bkey FROM (
          |    SELECT *, count(*) OVER (PARTITION BY band, bkey) AS bn FROM vb0)
-         |  WHERE bn <= $MaxBucket),
+         |  WHERE bn <= ${Lsh.MaxBucket}),
          |dup AS (
          |  SELECT DISTINCT b.vec_id
          |  FROM vb a JOIN vb b ON a.band = b.band AND a.bkey = b.bkey AND a.vec_id < b.vec_id

@@ -15,7 +15,7 @@ import graft.sources.Tables
   * their semantic neighborhood).
   *
   * Scale shape: the edge list is the ALREADY-BOUNDED kNN output
-  * (≤ KnnK rows per vector, LSH-bucketed, MaxBucket-capped — never
+  * (≤ KnnK rows per vector, LSH-bucketed, Lsh.MaxBucket-capped — never
   * all-pairs), so every operator here is equi-joins and partial-agg
   * groupBys over an O(N·K) table. PageRank runs in FIXED-POINT
   * integers (the `label_centroids` rule: float sums are

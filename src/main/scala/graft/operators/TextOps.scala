@@ -28,7 +28,6 @@ object TextOps {
   val SimBandBits = 8 // 4 bands of 8 bits for the hamming-band join
   val HamT     = 3   // max hamming distance for simhash near-dup
   val WinnowW  = 4   // winnowing window (doc_fingerprint)
-  val MaxBucket = 64 // LSH buckets above this size carry no dedup signal
   val Stopwords = Seq("a", "the")
   val P        = Portable.P
 
@@ -106,70 +105,54 @@ object TextOps {
       .withColumn("hs", transform(col("sh"), x => Portable.hmod(x)))
       .select(col("doc_id"), array_distinct(col("sh")).as("shset"), sigCol.as("sig"))
 
-  /** [[signatureFrame]] + the LSH band explode (same bkey arithmetic
-    * as [[bands]]) — the streaming ingest-dedup input shape. */
+  /** The MinHash band keys: band b packs signature rows R·b and R·b+1
+    * base [[P]]. */
+  private def minhashKeys: Seq[Column] = (0 until nBands).map { b =>
+    col("sig").getItem(MinhashR * b) * P + col("sig").getItem(MinhashR * b + 1)
+  }
+
+  /** [[signatureFrame]] + the LSH band explode — the streaming
+    * ingest-dedup input shape. */
   private[graft] def bandedSignatures(df: DataFrame): DataFrame =
-    signatureFrame(df)
-      .select(col("doc_id"), col("shset"),
-        explode(array((0 until nBands).map { b =>
-          struct(lit(b).as("band"),
-            (col("sig").getItem(MinhashR * b) * P + col("sig").getItem(MinhashR * b + 1)).as("bkey"))
-        }: _*)).as("bk"))
-      .select(col("doc_id"), col("shset"),
-        col("bk.band").as("band"), col("bk.bkey").as("bkey"))
+    Lsh.bands(signatureFrame(df), Seq("doc_id", "shset"), minhashKeys)
 
   /** (doc_id, band, bkey): one row per LSH band; the join key that
     * replaces the all-pairs product. */
   private def bands(s: SparkSession, d: String): DataFrame =
-    hashed(s, d).withColumn("sig", sigCol)
-      .select(col("doc_id"), explode(array((0 until nBands).map { b =>
-        struct(lit(b).as("band"),
-          (col("sig").getItem(MinhashR * b) * P + col("sig").getItem(MinhashR * b + 1)).as("bkey"))
-      }: _*)).as("bk"))
-      .select(col("doc_id"), col("bk.band").as("band"), col("bk.bkey").as("bkey"))
+    Lsh.bands(hashed(s, d).withColumn("sig", sigCol), Seq("doc_id"), minhashKeys)
 
-  /** Distinct candidate pairs (ida < idb) from band-bucket collisions.
-    * Buckets larger than MaxBucket are dropped before pairing: a band
-    * value shared by hundreds of documents is boilerplate, not a
-    * near-dup signal, and it is what turns LSH quadratic — the cap
-    * bounds per-bucket work at any scale (the skew guard promised in
-    * SURVEY §5). */
-  private def cappedBands(df: DataFrame): DataFrame =
-    df.withColumn("bn", count(lit(1)).over(Window.partitionBy(col("band"), col("bkey"))))
-      .filter(col("bn") <= MaxBucket).drop("bn")
+  /** Distinct candidate pairs (ida < idb) from the capped buckets of
+    * `bands` ([[Lsh]]). */
+  private def candidatePairs(bands: DataFrame): DataFrame =
+    Lsh.pairs(Lsh.capped(bands), Lsh.Bucket, col("doc_id"))
+      .select(col("a").as("ida"), col("b").as("idb")).distinct()
 
-  /** Pair generation happens inside the bucket (collect the ≤MaxBucket
-    * members, emit ordered pairs) rather than as a bucket self-join:
-    * the signature pipeline is evaluated once, one shuffle, and the
-    * per-bucket work is bounded by the cap — the shape web-scale dedup
-    * uses. */
   private def candidates(s: SparkSession, d: String): DataFrame =
-    cappedBands(bands(s, d))
-      .groupBy(col("band"), col("bkey"))
-      .agg(sort_array(collect_list(col("doc_id"))).as("ids"))
-      .select(explode(expr(
-        "flatten(transform(ids, (a, i) -> transform(slice(ids, i + 2, size(ids)), b -> struct(a AS ida, b AS idb))))"
-      )).as("p"))
-      .select(col("p.ida"), col("p.idb")).distinct()
+    candidatePairs(bands(s, d))
+
+  /** Exact Jaccard of two shingle sets, NULL for an empty union (two
+    * no-shingle docs colliding in the all-P buckets). Spark runs with
+    * ANSI on, so an unguarded 0.0/0.0 raises DIVIDE_BY_ZERO; the guard
+    * gives "no verdict", as the DuckDB twins' NULL does, and a NULL
+    * never passes `jacc >= T`. */
+  private def jaccard(a: Column, b: Column): Column =
+    when(size(array_union(a, b)) > 0,
+      size(array_intersect(a, b)).cast("double") / size(array_union(a, b)).cast("double"))
+
+  /** `cand` pairs (ida, idb) with both sides' shingle sets (sha, shb)
+    * from the persisted signature table. */
+  private def withShingles(s: SparkSession, d: String, cand: DataFrame): DataFrame = {
+    val sh = hashed(s, d).select(col("doc_id"), col("shset"))
+    cand
+      .join(sh.withColumnRenamed("doc_id", "ida").withColumnRenamed("shset", "sha"), Seq("ida"))
+      .join(sh.withColumnRenamed("doc_id", "idb").withColumnRenamed("shset", "shb"), Seq("idb"))
+  }
 
   /** Candidate pairs with exact n-gram Jaccard (the in-bucket verify
     * kernel — int/int division is bit-exact cross-engine). */
-  private def pairJaccard(s: SparkSession, d: String): DataFrame = {
-    val sh = hashed(s, d).select(col("doc_id"), col("shset"))
-    candidates(s, d)
-      .join(sh.withColumnRenamed("doc_id", "ida").withColumnRenamed("shset", "sha"), Seq("ida"))
-      .join(sh.withColumnRenamed("doc_id", "idb").withColumnRenamed("shset", "shb"), Seq("idb"))
-      .select(col("ida"), col("idb"),
-        // explicit NULL for an empty union (two no-shingle docs
-        // colliding in the all-P buckets): Spark's 0.0/0.0 is NaN and
-        // NaN orders GREATEST in Spark SQL, so an unguarded jacc >= T
-        // would call two empty docs near-dups while the DuckDB twin's
-        // NULL would not — the guard pins both engines to "no verdict"
-        when(size(array_union(col("sha"), col("shb"))) > 0,
-          size(array_intersect(col("sha"), col("shb"))).cast("double") /
-            size(array_union(col("sha"), col("shb"))).cast("double"))
-          .as("jacc"))
-  }
+  private def pairJaccard(s: SparkSession, d: String): DataFrame =
+    withShingles(s, d, candidates(s, d))
+      .select(col("ida"), col("idb"), jaccard(col("sha"), col("shb")).as("jacc"))
 
   // ---- SimHash ---------------------------------------------------
 
@@ -189,11 +172,9 @@ object TextOps {
   }
 
   private def simBands(s: SparkSession, d: String): DataFrame =
-    simFingerprints(s, d)
-      .select(col("doc_id"), col("fp"), explode(array((0 until SimBits / SimBandBits).map { b =>
-        struct(lit(b).as("band"), (shiftright(col("fp"), b * SimBandBits) % (1 << SimBandBits)).as("bkey"))
-      }: _*)).as("bk"))
-      .select(col("doc_id"), col("fp"), col("bk.band").as("band"), col("bk.bkey").as("bkey"))
+    Lsh.bands(simFingerprints(s, d), Seq("doc_id", "fp"), (0 until SimBits / SimBandBits).map { b =>
+      shiftright(col("fp"), b * SimBandBits) % (1 << SimBandBits)
+    })
 
   // ---- operators -------------------------------------------------
 
@@ -215,16 +196,9 @@ object TextOps {
     pairJaccard(s, d)
 
   def dedupSimhash(s: SparkSession, d: String): DataFrame = {
-    // in-bucket pair generation (see candidates()): one evaluation of
-    // the fingerprint pipeline for banding instead of a self-join
-    val dup = cappedBands(simBands(s, d))
-      .groupBy(col("band"), col("bkey"))
-      .agg(sort_array(collect_list(struct(col("doc_id"), col("fp")))).as("xs"))
-      .select(explode(expr(
-        "flatten(transform(xs, (a, i) -> transform(slice(xs, i + 2, size(xs)), b -> struct(a.fp AS fpa, b.fp AS fpb, b.doc_id AS idb))))"
-      )).as("p"))
-      .filter(bit_count(expr("p.fpa ^ p.fpb")) <= HamT)
-      .select(col("p.idb").as("doc_id")).distinct()
+    val dup = Lsh.pairs(Lsh.capped(simBands(s, d)), Lsh.Bucket, struct(col("doc_id"), col("fp")))
+      .filter(bit_count(col("a.fp").bitwiseXOR(col("b.fp"))) <= HamT)
+      .select(col("b.doc_id").as("doc_id")).distinct()
     simFingerprints(s, d).join(dup, Seq("doc_id"), "left_anti")
       .select("doc_id", "fp")
   }
@@ -1100,11 +1074,8 @@ object TextOps {
     * table, and the per-pair kernel is int/int division (bit-exact
     * cross-engine). Short docs with no shingles yield NULL containment
     * on that side rather than a 0/0. */
-  def minhashContainment(s: SparkSession, d: String): DataFrame = {
-    val sh = hashed(s, d).select(col("doc_id"), col("shset"))
-    candidates(s, d)
-      .join(sh.withColumnRenamed("doc_id", "ida").withColumnRenamed("shset", "sha"), Seq("ida"))
-      .join(sh.withColumnRenamed("doc_id", "idb").withColumnRenamed("shset", "shb"), Seq("idb"))
+  def minhashContainment(s: SparkSession, d: String): DataFrame =
+    withShingles(s, d, candidates(s, d))
       .withColumn("inter", size(array_intersect(col("sha"), col("shb"))).cast("long"))
       .select(col("ida"), col("idb"),
         when(size(col("sha")) > 0,
@@ -1114,7 +1085,6 @@ object TextOps {
       .withColumn("is_contained",
         (coalesce(col("contain_a"), lit(0.0)) >= ContainT) ||
           (coalesce(col("contain_b"), lit(0.0)) >= ContainT))
-  }
 
   val IncMod = 5 // docs with doc_id % IncMod == 0 form the "incoming batch"
 
@@ -1129,14 +1099,14 @@ object TextOps {
     * maintains between ingests — both probes are equi-joins into it
     * (hash, and capped band buckets), so per-ingest cost is
     * O(batch + matched buckets), independent of index size beyond the
-    * join fan-in the MaxBucket cap bounds. */
+    * join fan-in the [[Lsh.MaxBucket]] cap bounds. */
   def dedupIncremental(s: SparkSession, d: String): DataFrame = {
     val isInc = col("doc_id") % IncMod === 0
     val h = Tables.documents(s, d).select(col("doc_id"), sha2(col("text"), 256).as("chash"))
     val exactDup = h.filter(isInc)
       .join(h.filter(!isInc).select(col("chash")).distinct(), Seq("chash"), "left_semi")
       .select("doc_id")
-    val b = cappedBands(bands(s, d))
+    val b = Lsh.capped(bands(s, d))
     val cand = b.filter(isInc)
       .join(b.filter(!isInc).withColumnRenamed("doc_id", "idx_id"), Seq("band", "bkey"))
       .select(col("doc_id"), col("idx_id")).distinct()
@@ -1144,13 +1114,7 @@ object TextOps {
     val nearDup = cand
       .join(sh, Seq("doc_id"))
       .join(sh.withColumnRenamed("doc_id", "idx_id").withColumnRenamed("shset", "shb"), Seq("idx_id"))
-      // same empty-union guard as pairJaccard: two shingle-less docs
-      // colliding in the all-P buckets divide 0/0 = NaN, and NaN >= T
-      // is TRUE in Spark — the when() makes the verdict NULL (filters
-      // false here and in the DuckDB twin alike)
-      .filter(when(size(array_union(col("shset"), col("shb"))) > 0,
-        size(array_intersect(col("shset"), col("shb"))).cast("double") /
-          size(array_union(col("shset"), col("shb"))).cast("double")) >= JaccT)
+      .filter(jaccard(col("shset"), col("shb")) >= JaccT)
       .select("doc_id").distinct()
     Tables.documents(s, d).filter(isInc).select("doc_id")
       .join(exactDup.withColumn("de", lit(true)), Seq("doc_id"), "left")
@@ -2096,29 +2060,13 @@ object TextOps {
     * Output is |configs| rows of exact integer counts + a ppm
     * precision. */
   def lshBandSweep(s: SparkSession, d: String): DataFrame = {
-    val sh = hashed(s, d).select(col("doc_id"), col("shset"))
     val perConfig = LshSweepRs.map { r =>
       val b = MinhashK / r
-      val bandStructs = (0 until b).map { bi =>
-        struct(lit(bi).as("band"),
-          Portable.h60(concat_ws(",",
-            (0 until r).map(j => col("sig").getItem(bi * r + j).cast("string")): _*)).as("bkey"))
+      val keys = (0 until b).map { bi =>
+        Portable.h60(concat_ws(",", (0 until r).map(j => col("sig").getItem(bi * r + j).cast("string")): _*))
       }
-      val bands = hashed(s, d).withColumn("sig", sigCol)
-        .select(col("doc_id"), explode(array(bandStructs: _*)).as("bk"))
-        .select(col("doc_id"), col("bk.band").as("band"), col("bk.bkey").as("bkey"))
-      val cand = cappedBands(bands)
-        .groupBy(col("band"), col("bkey"))
-        .agg(sort_array(collect_list(col("doc_id"))).as("ids"))
-        .select(explode(expr(
-          "flatten(transform(ids, (a, i) -> transform(slice(ids, i + 2, size(ids)), b -> struct(a AS ida, b AS idb))))"
-        )).as("p"))
-        .select(col("p.ida"), col("p.idb")).distinct()
-      cand
-        .join(sh.withColumnRenamed("doc_id", "ida").withColumnRenamed("shset", "sha"), Seq("ida"))
-        .join(sh.withColumnRenamed("doc_id", "idb").withColumnRenamed("shset", "shb"), Seq("idb"))
-        .select((size(array_intersect(col("sha"), col("shb"))).cast("double") /
-          size(array_union(col("sha"), col("shb"))).cast("double")).as("jacc"))
+      val cand = candidatePairs(Lsh.bands(hashed(s, d).withColumn("sig", sigCol), Seq("doc_id"), keys))
+      withShingles(s, d, cand).select(jaccard(col("sha"), col("shb")).as("jacc"))
         .agg(count(lit(1)).as("n_candidates"),
           coalesce(sum(when(col("jacc") >= JaccT, 1L).otherwise(0L)), lit(0L)).as("n_verified"))
         .select(lit(r.toLong).as("rows_per_band"), lit(b.toLong).as("n_bands"),
@@ -2161,12 +2109,7 @@ object TextOps {
     val a = sample.select(col("doc_id").as("ida"), col("shset").as("sha"))
     val b = sample.select(col("doc_id").as("idb"), col("shset").as("shb"))
     val truePairs = a.crossJoin(broadcast(b)).filter(col("ida") < col("idb"))
-      // empty-union guard (see pairJaccard): 0/0 = NaN and NaN >= T is
-      // true in Spark, so an unguarded cross would call two empty docs
-      // a true near-dup pair
-      .filter(when(size(array_union(col("sha"), col("shb"))) > 0,
-        size(array_intersect(col("sha"), col("shb"))).cast("double") /
-          size(array_union(col("sha"), col("shb"))).cast("double")) >= JaccT)
+      .filter(jaccard(col("sha"), col("shb")) >= JaccT)
       .select(col("ida"), col("idb"))
     val foundPairs = pairJaccard(s, d).filter(col("jacc") >= JaccT)
       .join(sample.select(col("doc_id").as("ida")), Seq("ida"))
@@ -2531,7 +2474,6 @@ object TextOps {
     * (the clamp fires before Spark-div-vs-DuckDB-floor-division could
     * diverge on a negative numerator — both sides stay negative). */
   def bbitMinhashEst(s: SparkSession, d: String): DataFrame = {
-    val mask = (1 << BbitB) - 1
     val w = 1 << BbitB
     val sigs = hashed(s, d).withColumn("sig", sigCol)
       .select(col("doc_id"), col("sig"), col("shset"))
@@ -2545,8 +2487,11 @@ object TextOps {
           .cast("long").as("n_match"),
         expr(s"size(filter(zip_with(siga, sigb, (x, y) -> x % $w = y % $w), b -> b))")
           .cast("long").as("n_match_bbit"),
-        expr("(cast(size(array_intersect(sha, shb)) as bigint) * 1000000) div " +
-          "cast(size(array_union(sha, shb)) as bigint)").as("jacc_ppm"))
+        // NULL for an empty union, as the DuckDB twin's `//` by zero
+        // gives (ANSI Spark's `div` by zero raises instead)
+        when(size(array_union(col("sha"), col("shb"))) > 0,
+          expr("(cast(size(array_intersect(sha, shb)) as bigint) * 1000000) div " +
+            "cast(size(array_union(sha, shb)) as bigint)")).as("jacc_ppm"))
       .withColumn("est_full_ppm", expr(s"(n_match * 1000000) div $MinhashK"))
       .withColumn("est_bbit_ppm",
         greatest(lit(0L),
@@ -2831,7 +2776,7 @@ object TextOps {
        |bands AS (
        |  SELECT doc_id, band, bkey FROM (
        |    SELECT *, count(*) OVER (PARTITION BY band, bkey) AS bn FROM bands0)
-       |  WHERE bn <= $MaxBucket),
+       |  WHERE bn <= ${Lsh.MaxBucket}),
        |cand AS (SELECT DISTINCT a.doc_id AS ida, b.doc_id AS idb
        |  FROM bands a JOIN bands b ON a.band = b.band AND a.bkey = b.bkey AND a.doc_id < b.doc_id),
        |pj AS (SELECT c.ida, c.idb,
@@ -2861,7 +2806,7 @@ object TextOps {
        |sbands AS (
        |  SELECT doc_id, fp, band, bkey FROM (
        |    SELECT *, count(*) OVER (PARTITION BY band, bkey) AS bn FROM sbands0)
-       |  WHERE bn <= $MaxBucket),
+       |  WHERE bn <= ${Lsh.MaxBucket}),
        |sdup AS (SELECT DISTINCT b.doc_id
        |  FROM sbands a JOIN sbands b ON a.band = b.band AND a.bkey = b.bkey AND a.doc_id < b.doc_id
        |  WHERE bit_count(xor(a.fp, b.fp)) <= $HamT)""".stripMargin
@@ -3343,7 +3288,7 @@ object TextOps {
            |b_$r AS (
            |  SELECT doc_id, band, bkey FROM (
            |    SELECT *, count(*) OVER (PARTITION BY band, bkey) AS bn FROM b0_$r)
-           |  WHERE bn <= $MaxBucket),
+           |  WHERE bn <= ${Lsh.MaxBucket}),
            |c_$r AS (SELECT DISTINCT a.doc_id AS ida, b.doc_id AS idb
            |  FROM b_$r a JOIN b_$r b ON a.band = b.band AND a.bkey = b.bkey AND a.doc_id < b.doc_id),
            |s_$r AS (

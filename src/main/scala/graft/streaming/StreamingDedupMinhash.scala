@@ -3,7 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import graft.operators.TextOps
+import graft.operators.{Lsh, TextOps}
 
 /** Streaming INGEST-TIME near-dup detection — the MinHash-LSH dedup
   * run as documents arrive (the shape a production corpus pipeline
@@ -17,7 +17,7 @@ import graft.operators.TextOps
   * buckets and emits a (doc_id, earlier dup) pair on a hit.
   *
   * Bucket-cap semantics are the streaming-native ARRIVAL-ORDER rule:
-  * a bucket accepts its first [[TextOps.MaxBucket]] members (each
+  * a bucket accepts its first [[Lsh.MaxBucket]] members (each
   * pairing against those before it) and then goes dead — later
   * arrivals in a hot (boilerplate) bucket are skipped. This is the
   * same skew guard as the batch `MaxBucket` cap but causal: a stream
@@ -62,7 +62,7 @@ object StreamingDedupMinhash {
     var members = state.getOption.map(_.members).getOrElse(List.empty[Member])
     val out = Seq.newBuilder[Pair]
     for (d <- arr) {
-      if (members.size < TextOps.MaxBucket) {
+      if (members.size < Lsh.MaxBucket) {
         val ds = Option(d.shset).getOrElse(Seq.empty).toSet
         for (m <- members) {
           val ms = Option(m.sh).getOrElse(Seq.empty).toSet
@@ -125,7 +125,7 @@ object StreamingDedupMinhash {
        |  SELECT doc_id, shset, band, bkey,
        |         row_number() OVER (PARTITION BY band, bkey ORDER BY doc_id) AS rn
        |  FROM b0),
-       |bc AS (SELECT * FROM bm WHERE rn <= ${TextOps.MaxBucket}),
+       |bc AS (SELECT * FROM bm WHERE rn <= ${Lsh.MaxBucket}),
        |vf AS (
        |  SELECT DISTINCT b.doc_id, a.doc_id AS ida
        |  FROM bc a JOIN bc b

@@ -114,6 +114,33 @@ class OperatorSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(rows.contains(1000001L), "empty-text doc must survive")
   }
 
+  test("TextOps and MixOps run on shingle-less documents; the LSH verdicts stay NULL") {
+    import org.apache.spark.sql.functions._
+    // a NULL-text and an empty-text doc have empty shingle sets and the
+    // all-P signature, so they collide in every MinHash band: their
+    // Jaccard is 0/0, which ANSI Spark raises on unless it is guarded
+    val dir = java.nio.file.Files.createTempDirectory("graft_shingleless").toString
+    val extra = spark.range(2).select(
+      (col("id") + 1000000L).as("doc_id"),
+      when(col("id") === 0, lit(null).cast("string")).otherwise(lit("")).as("text"),
+      lit("en").as("lang"), lit("synthetic").as("source"),
+      lit(0L).as("n_chars"))
+    graft.sources.Tables.documents(spark, Sf).unionByName(extra)
+      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    for (n <- (TextOps.queries.keys ++ MixOps.queries.keys).toSeq.sorted)
+      try SparkEntry.queries(n)(spark, dir).collect()
+      catch { case e: Throwable => fail(s"$n threw on shingle-less documents: $e") }
+    val verified = SparkEntry.queries("ngram_jaccard")(spark, dir).collect()
+      .count(r => !r.isNullAt(2) && r.getDouble(2) >= TextOps.JaccT).toLong
+    val sweep = TextOps.lshBandSweep(spark, dir).collect().map(r => r.getLong(0) -> r.getLong(3)).toMap
+    assert(sweep(2L) == verified, s"r=2 n_verified ${sweep(2L)} != ngram_jaccard's $verified")
+    val empty = TextOps.bbitMinhashEst(spark, dir).collect()
+      .find(r => r.getLong(r.fieldIndex("ida")) == 1000000L && r.getLong(r.fieldIndex("idb")) == 1000001L)
+    assert(empty.nonEmpty, "the two shingle-less docs must be a candidate pair")
+    assert(empty.get.isNullAt(empty.get.fieldIndex("jacc_ppm")),
+      "an empty shingle union has no Jaccard: jacc_ppm must be NULL")
+  }
+
   test("typed Graft API matches the untyped catalogue plans") {
     import org.apache.spark.sql.functions._
     val g = graft.api.Graft(spark, Sf)
@@ -939,15 +966,19 @@ class OperatorSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   /** (path under `root`, source with comments stripped) of every Scala
     * file below `root` — the text the source scans below read, so a
-    * doc that names a banned construct does not trip them. */
-  private def scalaCode(root: String): Seq[(String, String)] = {
+    * doc that names a banned construct does not trip them. With
+    * `dropSql`, triple-quoted strings (the DuckDB oracle text) go
+    * first, so a SQL `//` does not hide the rest of its line. */
+  private def scalaCode(root: String, dropSql: Boolean = false): Seq[(String, String)] = {
     import scala.jdk.CollectionConverters._
     val r = java.nio.file.Paths.get(root)
     java.nio.file.Files.walk(r).iterator().asScala
       .filter(_.toString.endsWith(".scala")).toSeq
-      .map(p => r.relativize(p).toString ->
-        "(?s)/\\*.*?\\*/|//[^\n]*".r.replaceAllIn(
-          new String(java.nio.file.Files.readAllBytes(p), "UTF-8"), ""))
+      .map { p =>
+        val raw = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
+        val code = if (dropSql) "(?s)\"\"\".*?\"\"\"".r.replaceAllIn(raw, "\"\"") else raw
+        r.relativize(p).toString -> "(?s)/\\*.*?\\*/|//[^\n]*".r.replaceAllIn(code, "")
+      }
       .sortBy(_._1)
   }
 
@@ -961,6 +992,23 @@ class OperatorSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(writers == Seq("scala/graft/streaming/MemorySinks.scala"),
       s"streams started outside MemorySinks in ${writers.mkString(", ")} — " +
         "run them through MemorySinks.runAvailableNow or MemorySinks.runFileSink")
+  }
+
+  /** Every LSH operator takes its bucket cap and in-bucket pairs from
+    * Lsh; a second copy of either, or of the cap constant, is a
+    * candidate mechanism that can drift from the one the property spec
+    * checks. The oracle SQL keeps its own spelling and is not scanned. */
+  test("the LSH bucket cap and in-bucket pairs live only in Lsh.scala") {
+    val code = scalaCode("src/main", dropSql = true)
+    def holders(pattern: String) = code.collect { case (p, c) if pattern.r.findFirstIn(c).nonEmpty => p }
+    val lsh = Seq("scala/graft/operators/Lsh.scala")
+    assert(holders("""slice\(\s*\w+\s*,\s*i\s*\+\s*2\b""") == lsh,
+      "an in-bucket pair lambda outside Lsh.scala — call Lsh.pairs")
+    assert(holders("""partitionBy\(col\("band"\), col\("bkey"\)\)""") == lsh,
+      "a bucket-count window outside Lsh.scala — call Lsh.capped")
+    val defs = code.map { case (p, c) => p -> """\bval MaxBucket\b""".r.findAllIn(c).size }.filter(_._2 > 0)
+    assert(defs == Seq("scala/graft/operators/Lsh.scala" -> 1),
+      s"MaxBucket defined in ${defs.mkString(", ")} — use Lsh.MaxBucket")
   }
 
   /** Stream schemas come only from the parquet footer
@@ -1685,8 +1733,8 @@ class OperatorSpec extends AnyFunSuite with BeforeAndAfterAll {
     val maxBucket = TextOps.bandedSignatures(docsDf)
       .groupBy(col("band"), col("bkey")).count()
       .agg(max(col("count"))).head().getLong(0)
-    assert(maxBucket <= TextOps.MaxBucket,
-      s"bucket overflow at test sf ($maxBucket > ${TextOps.MaxBucket}): cap semantics diverge by design")
+    assert(maxBucket <= Lsh.MaxBucket,
+      s"bucket overflow at test sf ($maxBucket > ${Lsh.MaxBucket}): cap semantics diverge by design")
     val expected = SparkEntry.queries("ngram_jaccard")(spark, Sf).collect()
       .filter(r => !r.isNullAt(2) && r.getDouble(2) >= TextOps.JaccT)
       .groupBy(_.getLong(1))
@@ -2445,7 +2493,7 @@ class OperatorSpec extends AnyFunSuite with BeforeAndAfterAll {
       (id, e) <- vecs; t <- 0 until AnnOps.DedupTables
     } yield ((t, bucket(e, t * AnnOps.DedupPlanes, AnnOps.DedupPlanes)), id)
     val buckets = banded.groupBy(_._1).values
-      .filter(_.size <= AnnOps.MaxBucket).map(_.map(_._2).sorted)
+      .filter(_.size <= Lsh.MaxBucket).map(_.map(_._2).sorted)
     val pairs = buckets.flatMap(ids =>
       for (i <- ids.indices; j <- i + 1 until ids.length) yield (ids(i), ids(j))).toSet
     val em = vecs.toMap
@@ -2966,6 +3014,64 @@ class OperatorSpec extends AnyFunSuite with BeforeAndAfterAll {
     val res = Check.check(Check.Parameters.default.withMinSuccessfulTests(30).withWorkers(1)
       .withInitialSeed(org.scalacheck.rng.Seed(20261018L)), prop)
     assert(res.passed, org.scalacheck.util.Pretty.pretty(res))
+  }
+
+  test("Lsh.pairs over Lsh.capped equals the brute-force in-bucket pairs") {
+    import org.apache.spark.sql.functions._
+    import org.scalacheck.{Gen, Prop, Test => Check}
+    import org.scalacheck.Prop.propBoolean
+    val sp = spark; import sp.implicits._
+    // buckets of 1-4 members and at the cap's edge; keys 0-2 in bands
+    // 0-2, so one bucket key recurs across bands; a member id recurs
+    // across buckets as a doc's id does across its bands
+    val bucket = for {
+      band <- Gen.choose(0, 2)
+      bkey <- Gen.choose(0L, 2L)
+      n <- Gen.frequency(4 -> Gen.choose(1, 4), 1 -> Gen.oneOf(Lsh.MaxBucket, Lsh.MaxBucket + 1))
+      ids <- Gen.pick(n, 0L until 100L)
+    } yield ((band, bkey), ids.toSeq)
+    val cases = for {
+      nb <- Gen.frequency(1 -> Gen.const(0), 4 -> Gen.choose(1, 5))
+      bs <- Gen.listOfN(nb, bucket)
+      asStruct <- Gen.oneOf(true, false)
+    } yield (bs.toMap, asStruct)
+    val seen = scala.collection.mutable.Set[String]()
+    val prop = Prop.forAllNoShrink(cases) { case (buckets, asStruct) =>
+      val sizes = buckets.values.map(_.size).toSet
+      if (buckets.isEmpty) seen += "empty"
+      if (sizes(1)) seen += "single"
+      if (sizes(Lsh.MaxBucket)) seen += "at cap"
+      if (sizes(Lsh.MaxBucket + 1)) seen += "over cap"
+      if (buckets.keys.groupBy(_._2).exists(_._2.size > 1)) seen += "key across bands"
+      if (asStruct) seen += "struct"
+      val rows = buckets.toSeq.flatMap { case ((band, bkey), ids) => ids.map(id => (band, bkey, id, s"p$id")) }
+        .toDF("band", "bkey", "id", "payload")
+      val member = if (asStruct) struct(col("id"), col("payload")) else col("id")
+      def got(df: DataFrame): Seq[(Long, Long)] = {
+        val ab = Lsh.pairs(df, Lsh.Bucket, member)
+        val flat = if (asStruct) ab.select(col("a.id"), col("b.id"), col("a.payload"), col("b.payload"))
+                   else ab.select(col("a"), col("b"), lit("").as("pa"), lit("").as("pb"))
+        flat.collect().toSeq.map { r =>
+          assert(!asStruct || (r.getString(2) == s"p${r.getLong(0)}" && r.getString(3) == s"p${r.getLong(1)}"),
+            s"payload detached from its id in $r")
+          (r.getLong(0), r.getLong(1))
+        }.sorted
+      }
+      def want(kept: Iterable[Seq[Long]]): Seq[(Long, Long)] =
+        kept.toSeq.flatMap { ids =>
+          val xs = ids.sorted
+          for (i <- xs.indices; j <- i + 1 until xs.length) yield (xs(i), xs(j))
+        }.sorted
+      val capped = got(Lsh.capped(rows))
+      val all = got(rows)
+      (capped == want(buckets.values.filter(_.size <= Lsh.MaxBucket))) :| s"capped: $capped" &&
+        (all == want(buckets.values)) :| s"uncapped: $all"
+    }
+    val res = Check.check(Check.Parameters.default.withMinSuccessfulTests(40).withWorkers(1)
+      .withInitialSeed(org.scalacheck.rng.Seed(20261020L)), prop)
+    assert(res.passed, org.scalacheck.util.Pretty.pretty(res))
+    assert(seen == Set("empty", "single", "at cap", "over cap", "key across bands", "struct"),
+      s"generated cases covered only ${seen.toSeq.sorted.mkString(", ")}")
   }
 
   test("semantic_clusters equals a union-find over the thresholded kNN graph") {
@@ -4083,6 +4189,12 @@ class OperatorSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(rows(1L)._2 >= rows(2L)._2 && rows(2L)._2 >= rows(4L)._2,
       "candidate volume must shrink as rows-per-band grows")
     assert(rows(4L)._4 >= rows(1L)._4, "precision must not drop from r=1 to r=4")
+    // r=2 is the production banding (h60 band keys instead of the
+    // base-P pack: the same buckets up to a hash collision)
+    val jacc = SparkEntry.queries("ngram_jaccard")(spark, Sf).collect()
+    assert(rows(2L)._2 == jacc.length.toLong, "r=2 candidates differ from ngram_jaccard's pairs")
+    assert(rows(2L)._3 == jacc.count(r => !r.isNullAt(2) && r.getDouble(2) >= TextOps.JaccT).toLong,
+      "r=2 verified differs from ngram_jaccard's pairs at JaccT")
   }
 
   test("quantile_hist_sketch brackets the exact quantiles from below within 2x") {
