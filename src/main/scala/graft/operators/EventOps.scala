@@ -66,13 +66,18 @@ object EventOps {
 
   /** Session assignment: a new session starts when the gap from the
     * previous event of the same user exceeds GapUs. lag + cumulative
-    * boundary-sum — one window shuffle, no self-join. */
-  def sessionize(s: SparkSession, d: String): DataFrame =
-    events(s, d)
-      .withColumn("prev_us", lag(col("ts_us"), 1).over(userW))
+    * boundary-sum — one window shuffle, no self-join. Adds
+    * `session_idx` (with its `prev_us` and `boundary` steps) to an
+    * [[events]] frame; every session operator assigns through it. */
+  private def sessions(ev: DataFrame): DataFrame =
+    ev.withColumn("prev_us", lag(col("ts_us"), 1).over(userW))
       .withColumn("boundary",
         when(col("prev_us").isNull || col("ts_us") - col("prev_us") > GapUs, 1L).otherwise(0L))
       .withColumn("session_idx", sum(col("boundary")).over(userRunW))
+
+  /** Each event with its [[sessions]] index. */
+  def sessionize(s: SparkSession, d: String): DataFrame =
+    events(s, d).transform(sessions)
       .select("event_id", "user_id", "ts_us", "session_idx")
 
   /** Per-user running aggregates: event count, cumulative spend
@@ -186,11 +191,7 @@ object EventOps {
     * groupBy on the same key prefix (no extra repartitioning: the
     * session assignment already clustered rows by user). */
   def sessionStats(s: SparkSession, d: String): DataFrame =
-    events(s, d)
-      .withColumn("prev_us", lag(col("ts_us"), 1).over(userW))
-      .withColumn("boundary",
-        when(col("prev_us").isNull || col("ts_us") - col("prev_us") > GapUs, 1L).otherwise(0L))
-      .withColumn("session_idx", sum(col("boundary")).over(userRunW))
+    events(s, d).transform(sessions)
       .groupBy(col("user_id"), col("session_idx"))
       .agg(
         count(lit(1)).as("n_events"),
@@ -445,11 +446,7 @@ object EventOps {
     * (same user key prefix, no extra repartition), one final count
     * shuffle on the path string. */
   def sessionPaths(s: SparkSession, d: String): DataFrame =
-    events(s, d)
-      .withColumn("prev_us", lag(col("ts_us"), 1).over(userW))
-      .withColumn("boundary",
-        when(col("prev_us").isNull || col("ts_us") - col("prev_us") > GapUs, 1L).otherwise(0L))
-      .withColumn("session_idx", sum(col("boundary")).over(userRunW))
+    events(s, d).transform(sessions)
       .groupBy(col("user_id"), col("session_idx"))
       .agg(sort_array(collect_list(struct(col("ts_us"), col("event_id"), col("event_type")))).as("evs"))
       .select(concat_ws(">", expr("transform(evs, x -> x.event_type)")).as("path"))
@@ -820,11 +817,7 @@ object EventOps {
     * squared per session, never by events; counts partial-aggregate
     * and the one-row session total broadcasts. */
   def sessionCooccurrence(s: SparkSession, d: String): DataFrame = {
-    val st = events(s, d)
-      .withColumn("prev_us", lag(col("ts_us"), 1).over(userW))
-      .withColumn("boundary",
-        when(col("prev_us").isNull || col("ts_us") - col("prev_us") > GapUs, 1L).otherwise(0L))
-      .withColumn("session_idx", sum(col("boundary")).over(userRunW))
+    val st = events(s, d).transform(sessions)
       .select(col("user_id"), col("session_idx"), col("event_type")).distinct()
       // materialized once: both self-join sides, the per-type counts
       // and the session total otherwise each re-run the sessionize

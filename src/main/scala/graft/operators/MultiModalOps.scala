@@ -22,9 +22,10 @@ object MultiModalOps {
   /** Typed rows entering the decode kernel. */
   final case class MediaIn(doc_id: Long, blob: Array[Byte])
 
-  /** Typed decode output: byte stats + (stubbed) media dimensions. */
-  final case class MediaMeta(doc_id: Long, n_bytes: Long, header0: Int, header1: Int,
-                             width: Int, height: Int, n_frames: Int)
+  /** Typed decode output: byte stats + (stubbed) media dimensions. A
+    * NULL payload has no size or dimensions and 0-valued headers. */
+  final case class MediaMeta(doc_id: Long, n_bytes: Option[Long], header0: Int, header1: Int,
+                             width: Option[Int], height: Option[Int], n_frames: Option[Int])
 
   /** STUB decoder — a real implementation would hand `blob` to an
     * image/audio codec; the container has none, so dimensions are a
@@ -43,11 +44,12 @@ object MultiModalOps {
     in.mapPartitions { it =>
       // Per-partition decoder lifecycle: init once, decode batch-wise.
       it.map { m =>
-        val (w, h, f) = decodeStub(m.blob)
+        val blob = Option(m.blob) // a NULL text is a NULL blob
+        val dims = blob.map(decodeStub)
         // short payloads yield 0-valued header bytes, not an exception
-        val h0 = if (m.blob.length >= 1) m.blob(0) & 0xff else 0
-        val h1 = if (m.blob.length >= 2) m.blob(1) & 0xff else 0
-        MediaMeta(m.doc_id, m.blob.length.toLong, h0, h1, w, h, f)
+        def header(i: Int): Int = blob.filter(_.length > i).fold(0)(_(i) & 0xff)
+        MediaMeta(m.doc_id, blob.map(_.length.toLong), header(0), header(1),
+          dims.map(_._1), dims.map(_._2), dims.map(_._3))
       }
     }.toDF()
   }
@@ -57,7 +59,8 @@ object MultiModalOps {
     * explode-shaped plumbing a video/audio pipeline needs between
     * decode and per-frame featurization. Frame count and the (stub)
     * frame feature are deterministic functions of the payload so the
-    * oracle verifies the fan-out exactly. */
+    * oracle verifies the fan-out exactly. A NULL payload has NULL
+    * frames and gives no rows. */
   def multimodalFrameSample(s: SparkSession, d: String): DataFrame =
     multimodalMeta(s, d)
       .select(col("doc_id"), col("n_bytes"), col("n_frames"),

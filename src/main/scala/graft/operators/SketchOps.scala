@@ -52,39 +52,51 @@ object SketchOps {
     * twin ([[graft.streaming.StreamingDistinctKmv]]) applies per
     * micro-batch, so batch and streaming now share one merge
     * semantics (the spec's multi-batch split pins them equal). */
-  def distinctKmv(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.graftbridge.ColumnBridge
-    val h = Tables.events(s, d)
-      .select(col("event_type"),
-        Portable.h60(concat(lit("kmv:"), col("user_id").cast("string"))).as("h"))
-    val sketch = ColumnBridge.column(
-      graft.functions.KmvKSmallest(ColumnBridge.expression(col("h")), KmvK)
-        .toAggregateExpression())
-    h.groupBy(col("event_type"))
-      .agg(sketch.as("sk"))
+  def distinctKmv(s: SparkSession, d: String): DataFrame =
+    kmvSketches(s, d)
       .select(col("event_type"),
         size(col("sk")).cast("long").as("n_kept"),
         element_at(col("sk"), -1).as("kth_min"))
       .select(col("event_type"), col("n_kept"), col("kth_min"),
-        when(col("n_kept") < KmvK, col("n_kept").cast("double"))
-          .otherwise(lit((KmvK - 1).toDouble * KmvDomain) / col("kth_min").cast("double"))
-          .as("est_distinct"))
+        kmvEstimate(col("n_kept"), col("kth_min")).as("est_distinct"))
+
+  /** A user's KMV hash — the one salt the batch sketches and the
+    * streaming twin ([[graft.streaming.StreamingDistinctKmv]]) share. */
+  private[graft] def kmvHash: Column =
+    Portable.h60(concat(lit("kmv:"), col("user_id").cast("string")))
+
+  /** Per-type sketch `sk`: the K smallest distinct [[kmvHash]]es,
+    * ascending. */
+  private def kmvSketches(s: SparkSession, d: String): DataFrame = {
+    import org.apache.spark.sql.graftbridge.ColumnBridge
+    val sketch = ColumnBridge.column(
+      graft.functions.KmvKSmallest(ColumnBridge.expression(col("h")), KmvK)
+        .toAggregateExpression())
+    Tables.events(s, d).select(col("event_type"), kmvHash.as("h"))
+      .groupBy(col("event_type")).agg(sketch.as("sk"))
   }
+
+  /** The KMV estimate from a sketch's size `n` and its largest kept
+    * hash `kth`: exact below K, (K-1)·2^60 / kth at K. */
+  private def kmvEstimate(n: Column, kth: Column): Column =
+    when(n < KmvK, n.cast("double"))
+      .otherwise(lit((KmvK - 1).toDouble * KmvDomain) / kth.cast("double"))
 
   /** Per-type KMV sketch state as ROWS (event_type, h): the bounded
     * (≤K per type) exploded form the sketch-ALGEBRA operators merge
     * relationally — the same rows a production pipeline would persist
     * as its per-segment sketch table. */
-  private def sketchRows(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.graftbridge.ColumnBridge
-    val h = Tables.events(s, d)
-      .select(col("event_type"),
-        Portable.h60(concat(lit("kmv:"), col("user_id").cast("string"))).as("h"))
-    val sketch = ColumnBridge.column(
-      graft.functions.KmvKSmallest(ColumnBridge.expression(col("h")), KmvK)
-        .toAggregateExpression())
-    h.groupBy(col("event_type")).agg(sketch.as("sk"))
-      .select(col("event_type"), explode(col("sk")).as("h"))
+  private def sketchRows(s: SparkSession, d: String): DataFrame =
+    kmvSketches(s, d).select(col("event_type"), explode(col("sk")).as("h"))
+
+  /** Every unordered pair (type_a < type_b) of the event types in
+    * `df`, both sides broadcast — the pair dimension of the
+    * set-algebra operators, bounded by type cardinality². */
+  private def typePairs(df: DataFrame): DataFrame = {
+    val types = df.select(col("event_type")).distinct()
+    broadcast(types.select(col("event_type").as("type_a")))
+      .join(broadcast(types.select(col("event_type").as("type_b"))),
+        col("type_a") < col("type_b"))
   }
 
   /** Pair frame + merged UNION sketch shared by the KMV set-algebra
@@ -101,10 +113,7 @@ object SketchOps {
     // every unmaterialized reference re-ran the corpus scan + KMV
     // aggregate behind it
     val rows = sketchRows(s, d).localCheckpoint(false)
-    val types = rows.select(col("event_type")).distinct()
-    val tp = broadcast(types.select(col("event_type").as("type_a")))
-      .join(broadcast(types.select(col("event_type").as("type_b"))),
-        col("type_a") < col("type_b"))
+    val tp = typePairs(rows)
     val aRows = rows.select(col("event_type").as("type_a"), col("h"))
     val bRows = rows.select(col("event_type").as("type_b"), col("h"))
     val unioned = tp.join(aRows, Seq("type_a")).select(col("type_a"), col("type_b"), col("h"))
@@ -142,9 +151,7 @@ object SketchOps {
       .select(col("type_a"), col("type_b"), col("k_union"), col("theta"),
         coalesce(col("n_common"), lit(0L)).as("n_common"))
       .withColumn("jacc_ppm", expr("(n_common * 1000000) div k_union"))
-      .withColumn("est_union",
-        when(col("k_union") < KmvK, col("k_union").cast("double"))
-          .otherwise(lit((KmvK - 1).toDouble * KmvDomain) / col("theta").cast("double")))
+      .withColumn("est_union", kmvEstimate(col("k_union"), col("theta")))
       .withColumn("est_intersection",
         col("jacc_ppm").cast("double") * col("est_union") / lit(1000000.0))
   }
@@ -170,9 +177,7 @@ object SketchOps {
       .agg(count(lit(1)).as("k_union"), max(col("h")).as("theta"),
         sum(when(col("in_a") === 1L && col("in_b").isNull, 1L).otherwise(0L)).as("n_a_only"),
         sum(when(col("in_b") === 1L && col("in_a").isNull, 1L).otherwise(0L)).as("n_b_only"))
-      .withColumn("est_union",
-        when(col("k_union") < KmvK, col("k_union").cast("double"))
-          .otherwise(lit((KmvK - 1).toDouble * KmvDomain) / col("theta").cast("double")))
+      .withColumn("est_union", kmvEstimate(col("k_union"), col("theta")))
       .select(col("type_a"), col("type_b"), col("k_union"), col("theta"),
         col("n_a_only"), col("n_b_only"), col("est_union"),
         ((col("n_a_only").cast("double") / col("k_union").cast("double")) * col("est_union"))
@@ -184,12 +189,16 @@ object SketchOps {
   val HistQs = Seq(50, 90, 99)
   val HistMaxPow = 62
 
-  /** The Spark-SQL log₂-bucket CASE chain over a `cents` column —
-    * shared with the streaming twin
+  /** An event's value in integer cents — what the histogram sketches
+    * bucket. */
+  private[graft] def histCents: Column = expr("cast(round(value * 100) as bigint)")
+
+  /** The log₂ bucket of a `cents` column as a CASE chain (−1 for
+    * non-positive cents) — shared with the streaming twin
     * ([[graft.streaming.StreamingQuantileHist]]) so batch and stream
     * bucket identically. */
-  private[graft] def histBucketChain: String = (HistMaxPow to 0 by -1)
-    .map(b => s"WHEN cents >= ${1L << b}L THEN ${b}L").mkString("CASE ", " ", " ELSE -1L END")
+  private[graft] def histBucket: Column = expr((HistMaxPow to 0 by -1)
+    .map(b => s"WHEN cents >= ${1L << b}L THEN ${b}L").mkString("CASE ", " ", " ELSE -1L END"))
 
   /** cum-window + exact integer nearest-rank quantile pick + p_lo
     * rendering over a (key, bucket, cnt) histogram — ONE source of
@@ -222,9 +231,8 @@ object SketchOps {
     * everything is integer. Non-positive cents land in bucket −1
     * (lower bound 0). */
   def quantileHistSketch(s: SparkSession, d: String): DataFrame = {
-    val ev = Tables.events(s, d).select(col("event_type"),
-      expr("cast(round(value * 100) as bigint)").as("cents"))
-    val hist = ev.withColumn("bucket", expr(histBucketChain))
+    val ev = Tables.events(s, d).select(col("event_type"), histCents.as("cents"))
+    val hist = ev.withColumn("bucket", histBucket)
       .groupBy(col("event_type"), col("bucket")).agg(count(lit(1)).as("cnt"))
     histQuantilePick(hist, "event_type", "n")
   }
@@ -244,9 +252,8 @@ object SketchOps {
   def rollingQuantileHist(s: SparkSession, d: String): DataFrame = {
     val ev = Tables.events(s, d)
     val daily = ev.select(
-        EventOps.tsUs(ev.schema("ts").dataType).as("ts_us"),
-        expr("cast(round(value * 100) as bigint)").as("cents"))
-      .select(expr(s"ts_us div $DayUs").as("day"), expr(histBucketChain).as("bucket"))
+        EventOps.tsUs(ev.schema("ts").dataType).as("ts_us"), histCents.as("cents"))
+      .select(expr(s"ts_us div $DayUs").as("day"), histBucket.as("bucket"))
       .groupBy(col("day"), col("bucket")).agg(count(lit(1)).as("cnt"))
       .localCheckpoint(false) // D×buckets rows: one events pass feeds both legs
     val days = daily.select(col("day")).distinct()
@@ -273,11 +280,9 @@ object SketchOps {
 
   /** rho(w) = position of the highest set bit counted from the top of
     * the 54-bit window (1 = top bit set, 54 = only bit 0 set, 55 =
-    * w = 0) as a portable integer CASE chain — the [[histBucketChain]]
-    * idiom; `sqlLong` spells int64 literals per engine. Shared with
-    * the streaming twin ([[graft.streaming.StreamingHll]]) so batch
-    * and stream rank identically. */
-  private[graft] def hllRhoChain(sqlLong: Long => String): String =
+    * w = 0) as a portable integer CASE chain — the [[histBucket]]
+    * idiom; `sqlLong` spells int64 literals per engine. */
+  private def hllRhoChain(sqlLong: Long => String): String =
     (HllWBits - 1 to 0 by -1)
       .map(b => s"WHEN w >= ${sqlLong(1L << b)} THEN ${sqlLong(HllWBits - b)}")
       .mkString("CASE ", " ", s" ELSE ${sqlLong(HllWBits + 1)} END")
@@ -289,18 +294,25 @@ object SketchOps {
     * memory at any corpus size. Released by [[Caches.clearAll]]. */
   private val hllRegCache = new Caches.PerDir[DataFrame]("SketchOps.hllReg", Seq(_))
 
+  /** The HLL register rows of `df`: one (key, reg, rho) per user_id,
+    * with register index = low 6 bits of the user's salted `h60` and
+    * rho = [[hllRhoChain]] over the other 54. `pre` is carried beside
+    * the hash and `key` is computed from it. Shared with the streaming
+    * twin ([[graft.streaming.StreamingHll]]) so batch and stream
+    * register identically. */
+  private[graft] def hllRegRho(df: DataFrame, pre: Column, key: Column): DataFrame =
+    df.select(pre, Portable.h60(concat(lit("hll:"), col("user_id").cast("string"))).as("h"))
+      .select(key, (col("h") % HllM).as("reg"), expr(s"h div $HllM").as("w"))
+      .withColumn("rho", expr(hllRhoChain(v => s"${v}L")))
+      .drop("w")
+
   /** Per-(event_type, register) max rho — the exploded HLL state rows
     * the estimate aggregates and the set-algebra operator
     * ([[hllIntersect]]) merges relationally (≤ [[HllM]] rows per type
     * regardless of corpus size). */
   private def hllRegs(s: SparkSession, d: String): DataFrame =
     hllRegCache.get(d)(
-      Tables.events(s, d)
-        .select(col("event_type"),
-          Portable.h60(concat(lit("hll:"), col("user_id").cast("string"))).as("h"))
-        .select(col("event_type"), (col("h") % HllM).as("reg"),
-          expr(s"h div $HllM").as("w"))
-        .withColumn("rho", expr(hllRhoChain(v => s"${v}L")))
+      hllRegRho(Tables.events(s, d), col("event_type"), col("event_type"))
         .groupBy(col("event_type"), col("reg")).agg(max(col("rho")).as("mrho"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 
@@ -358,12 +370,8 @@ object SketchOps {
     * the identical division chain). */
   def rollingHllDistinct(s: SparkSession, d: String): DataFrame = {
     val ev = Tables.events(s, d)
-    val daily = ev.select(
-        EventOps.tsUs(ev.schema("ts").dataType).as("ts_us"),
-        Portable.h60(concat(lit("hll:"), col("user_id").cast("string"))).as("h"))
-      .select(expr(s"ts_us div $DayUs").as("day"),
-        (col("h") % HllM).as("reg"), expr(s"h div $HllM").as("w"))
-      .withColumn("rho", expr(hllRhoChain(v => s"${v}L")))
+    val daily = hllRegRho(ev, EventOps.tsUs(ev.schema("ts").dataType).as("ts_us"),
+        expr(s"ts_us div $DayUs").as("day"))
       .groupBy(col("day"), col("reg")).agg(max(col("rho")).as("mrho"))
       .localCheckpoint(false) // D×m rows: one events pass feeds both legs
     val days = daily.select(col("day")).distinct()
@@ -399,10 +407,7 @@ object SketchOps {
     val regs = hllRegs(s, d)
     val est = hllEstimate(regs.groupBy(col("event_type")))
       .select(col("event_type"), col("est_hll"))
-    val types = regs.select(col("event_type")).distinct()
-    val tp = broadcast(types.select(col("event_type").as("type_a")))
-      .join(broadcast(types.select(col("event_type").as("type_b"))),
-        col("type_a") < col("type_b"))
+    val tp = typePairs(regs)
     val aRegs = regs.select(col("event_type").as("type_a"), col("reg"), col("mrho"))
     val bRegs = regs.select(col("event_type").as("type_b"), col("reg"), col("mrho"))
     val unionRegs = tp.join(aRegs, Seq("type_a"))
@@ -441,7 +446,12 @@ object SketchOps {
       .select(explode(Portable.tokens(col("text"))).as("term"))
       .groupBy(col("term")).agg(count(lit(1)).as("cnt"))
 
-  private def cmsPos(i: Column, term: Column): Column =
+  /** One row per hash row `i` of the d counter rows. */
+  private[graft] def cmsRows: Column = explode(array((0 until CmsD).map(lit): _*)).as("i")
+
+  /** The counter a `term` hits in hash row `i` — shared with the
+    * streaming twin ([[graft.streaming.StreamingCms]]). */
+  private[graft] def cmsPos(i: Column, term: Column): Column =
     Portable.h60(concat(lit("cm"), i.cast("string"), lit(":"), term)) % CmsW
 
   /** The d×w counter table (CmsD · CmsW rows — broadcast-sized at ANY
@@ -449,8 +459,7 @@ object SketchOps {
     * pre-aggregated term counts — identical, by the sketch's own
     * additivity, to streaming every token through the counters. */
   private def cmsCounters(tc: DataFrame): DataFrame =
-    tc.select(col("term"), col("cnt"),
-        explode(array((0 until CmsD).map(lit): _*)).as("i"))
+    tc.select(col("term"), col("cnt"), cmsRows)
       .select(col("i"), cmsPos(col("i"), col("term")).as("pos"), col("cnt"))
       .groupBy(col("i"), col("pos")).agg(sum(col("cnt")).as("cw"))
 
@@ -459,8 +468,7 @@ object SketchOps {
     * fixed-size counter table; no shuffle beyond the final per-term
     * min, whose input is exactly d rows per term. */
   private def cmsEstimate(probe: DataFrame, counters: DataFrame): DataFrame =
-    probe.select(col("term"),
-        explode(array((0 until CmsD).map(lit): _*)).as("i"))
+    probe.select(col("term"), cmsRows)
       .withColumn("pos", cmsPos(col("i"), col("term")))
       .join(broadcast(counters), Seq("i", "pos"))
       .groupBy(col("term")).agg(min(col("cw")).as("est"))
@@ -535,9 +543,7 @@ object SketchOps {
       .groupBy(col("event_type"), col("user_id")).agg(count(lit(1)).as("cnt"))
       .localCheckpoint(false)
     val counters = uc
-      .select(col("event_type"), col("cnt"),
-        explode(array((0 until CmsD).map(lit): _*)).as("i"),
-        col("user_id"))
+      .select(col("event_type"), col("cnt"), cmsRows, col("user_id"))
       .select(col("event_type"), col("i"),
         (Portable.h60(concat(lit("cj"), col("i").cast("string"), lit(":"),
           col("user_id").cast("string"))) % CmsW).as("pos"),
@@ -560,12 +566,7 @@ object SketchOps {
     // footprints are fully disjoint (possible for a type with one or
     // two users) contributes inner-product 0 — the estimator is then
     // exactly 0 for the pair, not the min over the overlapping rows
-    val types = uc.select(col("event_type")).distinct()
-    val tp = broadcast(types.select(col("event_type").as("type_a")))
-      .join(broadcast(types.select(col("event_type").as("type_b"))),
-        col("type_a") < col("type_b"))
-    val est = tp.select(col("type_a"), col("type_b"),
-        explode(array((0 until CmsD).map(lit): _*)).as("i"))
+    val est = typePairs(uc).select(col("type_a"), col("type_b"), cmsRows)
       .join(ipd, Seq("type_a", "type_b", "i"), "left")
       .groupBy(col("type_a"), col("type_b"))
       .agg(min(coalesce(col("ipd"), lit(0).cast("decimal(38,0)"))).cast("long").as("est_join"))
@@ -604,18 +605,10 @@ object SketchOps {
     // materialized once (user-dimension-bounded)
     val purchasers = ev.filter(col("event_type") === "purchase")
       .select(col("user_id")).distinct().localCheckpoint(false)
-    val js = explode(array((0 until BloomK).map(lit): _*)).as("j")
-    def positions(df: DataFrame): DataFrame =
-      df.select(col("user_id"), js)
-        .select(col("user_id"), col("j"),
-          (Portable.h60(concat(lit("bf"), col("j").cast("string"), lit(":"),
-            col("user_id").cast("string"))) % BloomBits).as("pos"))
-    val bloom = positions(purchasers)
-      .select((col("pos") / BloomWords).cast("long").as("w"),
-        expr(s"shiftleft(1L, cast(pos % $BloomWords as int))").as("mask"))
+    val bloom = bloomBits(purchasers)
       .groupBy(col("w")).agg(expr("bit_or(mask)").as("bw"))
-    val probe = positions(users)
-      .withColumn("w", (col("pos") / BloomWords).cast("long"))
+    val probe = bloomPositions(users)
+      .withColumn("w", bloomWord(col("pos")))
       .join(broadcast(bloom), Seq("w"), "left")
       .select(col("user_id"),
         (expr(s"coalesce(bw, 0L) & shiftleft(1L, cast(pos % $BloomWords as int))") =!= 0L)
@@ -625,6 +618,24 @@ object SketchOps {
       .select(col("user_id"), col("might_purchaser"),
         coalesce(col("isp"), lit(false)).as("is_purchaser"))
   }
+
+  /** The BloomK bit positions (user_id, j, pos) of every user_id in
+    * `df`. */
+  private def bloomPositions(df: DataFrame): DataFrame =
+    df.select(col("user_id"), explode(array((0 until BloomK).map(lit): _*)).as("j"))
+      .select(col("user_id"), col("j"),
+        (Portable.h60(concat(lit("bf"), col("j").cast("string"), lit(":"),
+          col("user_id").cast("string"))) % BloomBits).as("pos"))
+
+  private def bloomWord(pos: Column): Column = (pos / BloomWords).cast("long")
+
+  /** The filter's bits for the user_ids in `df`, as (w, mask) rows:
+    * word index and the one-bit mask inside it — the build side of
+    * [[bloomSemiFilter]] and the rows the streaming twin
+    * ([[graft.streaming.StreamingBloom]]) ORs together. */
+  private[graft] def bloomBits(df: DataFrame): DataFrame =
+    bloomPositions(df).select(bloomWord(col("pos")).as("w"),
+      expr(s"shiftleft(1L, cast(pos % $BloomWords as int))").as("mask"))
 
   val queries: Map[String, QueryFn] = Map(
     "distinct_kmv" -> (distinctKmv _),

@@ -63,9 +63,7 @@ object StreamingDistinctKmv {
                    srcOptions: Map[String, String] = Map.empty): DataFrame = {
     import s.implicits._
     s.readStream.schema(schema).options(srcOptions).parquet(srcGlob)
-      .select(col("event_type"),
-        graft.functions.Portable.h60(
-          concat(lit("kmv:"), col("user_id").cast("string"))).as("h"))
+      .select(col("event_type"), SketchOps.kmvHash.as("h"))
       .as[Hashed]
       .mapPartitions(combine)
       .groupByKey(_.event_type)

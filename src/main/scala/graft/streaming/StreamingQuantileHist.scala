@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import graft.operators.SketchOps
 
 /** Streaming log₂-histogram quantile sketch — the continuously-
@@ -11,8 +10,9 @@ import graft.operators.SketchOps
   * power-of-two cent histogram survives across micro-batches, and each
   * batch emits the group's refreshed p50/p90/p99 lower bounds. A second
   * instance of the BOUNDED MERGEABLE SKETCH stateful pattern
-  * ([[StreamingDistinctKmv]] is the first): the state is a (bucket →
-  * count) map whose merge is plain per-bucket addition — associative
+  * ([[StreamingDistinctKmv]] is the first): the state is one count
+  * per bucket ([[Registers]] with addition, slot = bucket + 1, over
+  * the batch operator's own [[SketchOps.histBucket]]) — associative
   * and commutative, so the final emission is deterministic under ANY
   * micro-batch split of the input, and under `Trigger.AvailableNow`
   * on bounded input it equals the batch sketch verbatim (the batch
@@ -22,49 +22,24 @@ import graft.operators.SketchOps
   */
 object StreamingQuantileHist {
 
-  final case class Bucketed(event_type: String, bucket: Long)
-  /** Pre-combined (type, bucket) count — what actually crosses the
-    * state shuffle since the r17 map-side combine. */
-  final case class BucketCnt(event_type: String, bucket: Long, n: Long)
-  final case class HistState(buckets: Map[Long, Long])
   final case class Out(event_type: String, n: Long,
                        p50_lo: Long, p90_lo: Long, p99_lo: Long)
 
   /** Exact ceil-rank selection over the bucket CDF — the same
-    * integer arithmetic as the batch operator's windowed form. */
-  private def quantileLo(sorted: Seq[(Long, Long)], n: Long, q: Int): Long = {
+    * integer arithmetic as the batch operator's windowed form. Slot
+    * `b + 1` counts bucket `b`. */
+  private def quantileLo(counts: Array[Long], n: Long, q: Int): Long = {
     val target = (n * q + 99) / 100
-    var cum = 0L
-    for ((b, c) <- sorted) {
-      cum += c
-      if (cum >= target) return if (b < 0) 0L else 1L << b
-    }
-    0L // unreachable for n ≥ 1
+    val cum = counts.iterator.scanLeft(0L)(_ + _).drop(1)
+    val b = cum.indexWhere(_ >= target) - 1
+    if (b < 0) 0L else 1L << b
   }
 
-  /** Map-side combine (r17 optimization round, guide §2.3): bucket
-    * counts ADD, so each scan partition collapses its rows to
-    * ≤ types·buckets partial counts before the state shuffle. */
-  def combine(rows: Iterator[Bucketed]): Iterator[BucketCnt] = {
-    val acc = scala.collection.mutable.HashMap.empty[(String, Long), Long]
-    rows.foreach { r =>
-      val k = (r.event_type, r.bucket)
-      acc(k) = acc.getOrElse(k, 0L) + 1L
-    }
-    acc.iterator.map { case ((t, b), n) => BucketCnt(t, b, n) }
-  }
-
-  def fold(key: String, rows: Iterator[BucketCnt],
-           state: GroupState[HistState]): Iterator[Out] = {
-    val prev = state.getOption.map(_.buckets).getOrElse(Map.empty[Long, Long])
-    val merged = rows.foldLeft(prev) { (m, r) =>
-      m.updated(r.bucket, m.getOrElse(r.bucket, 0L) + r.n)
-    }
-    state.update(HistState(merged))
-    val n = merged.valuesIterator.sum
-    val sorted = merged.toSeq.sortBy(_._1)
+  /** A type's refreshed p50/p90/p99 lower bounds. */
+  private def emit(key: String, counts: Array[Long]): Iterator[Out] = {
+    val n = counts.sum
     Iterator.single(Out(key, n,
-      quantileLo(sorted, n, 50), quantileLo(sorted, n, 90), quantileLo(sorted, n, 99)))
+      quantileLo(counts, n, 50), quantileLo(counts, n, 90), quantileLo(counts, n, 99)))
   }
 
   /** `srcOptions` go to the file SOURCE (e.g. maxFilesPerTrigger to
@@ -74,15 +49,10 @@ object StreamingQuantileHist {
                  schema: org.apache.spark.sql.types.StructType,
                  srcOptions: Map[String, String] = Map.empty): DataFrame = {
     import s.implicits._
-    s.readStream.schema(schema).options(srcOptions).parquet(srcGlob)
-      .select(col("event_type"),
-        expr("cast(round(value * 100) as bigint)").as("cents"))
-      .select(col("event_type"), expr(SketchOps.histBucketChain).as("bucket"))
-      .as[Bucketed]
-      .mapPartitions(combine)
-      .groupByKey(_.event_type)
-      .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(fold)
-      .toDF()
+    val buckets = s.readStream.schema(schema).options(srcOptions).parquet(srcGlob)
+      .select(col("event_type"), SketchOps.histCents.as("cents"))
+      .select(col("event_type").as("key"), (SketchOps.histBucket + 1L).as("slot"), lit(1L).as("v"))
+    Registers.fold(buckets, SketchOps.HistMaxPow + 2, Registers.Sum)(emit)
   }
 
   def run(s: SparkSession, dir: String): DataFrame = {

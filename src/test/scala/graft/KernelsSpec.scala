@@ -372,43 +372,37 @@ class KernelsSpec extends AnyFunSuite {
   }
 
   test("streaming map-side combiners preserve the sketch folds exactly") {
-    // r17 optimization: the six sketch-family streams pre-combine each
-    // scan partition's rows before the state shuffle (guide §2.3
-    // map-side aggregation). For each, on arbitrary inputs split into
-    // arbitrary partitions: folding the COMBINED partials must produce
-    // the identical final state/emission as folding the raw rows —
-    // the algebraic property (assoc/comm[/idem]) the combine relies on.
+    // r17 optimization: the sketch-family streams pre-combine each
+    // scan partition's rows before the state shuffle (map-side
+    // aggregation): the register sketches (HLL max, CMS and histogram
+    // +, Bloom |) through Registers.combine, KMV through its own set
+    // combine. For each, on arbitrary inputs split into arbitrary
+    // partitions: folding the COMBINED partials must produce the
+    // identical final state as folding the raw rows — the algebraic
+    // property (assoc/comm[/idem]) the combine relies on.
     import graft.streaming._
     def splits[A](xs: Seq[A]): Seq[Seq[A]] = {
       val k = 1 + rnd.nextInt(4)
       xs.grouped(math.max(1, (xs.size + k - 1) / k)).toSeq
     }
+    val slots = 16
+    val merges = Seq[(String, (Long, Long) => Long, (Long, Long) => Long, () => Long)](
+      ("max", Registers.Max, (a, b) => if (a > b) a else b, () => 1L + rnd.nextInt(55)),
+      ("+", Registers.Sum, (a, b) => a + b, () => 1L + rnd.nextInt(5)),
+      ("|", Registers.Or, (a, b) => a | b, () => 1L << rnd.nextInt(60)))
     for (_ <- 1 to 100) {
-      // HLL: per-register max
-      val regs = Seq.fill(rnd.nextInt(200))(
-        StreamingHll.RegRow(s"t${rnd.nextInt(3)}", rnd.nextInt(16).toLong,
-          1L + rnd.nextInt(8)))
-      val hllRaw = regs.groupBy(r => (r.event_type, r.reg))
-        .map { case (k, xs) => k -> xs.map(_.rho).max }
-      val hllComb = splits(regs).flatMap(p => StreamingHll.combine(p.iterator))
-        .groupBy(r => (r.event_type, r.reg))
-        .map { case (k, xs) => k -> xs.map(_.rho).max }
-      assert(hllComb == hllRaw)
-      // CMS: additive counters
-      val pos = Seq.fill(rnd.nextInt(200))(
-        StreamingCms.PosRow(rnd.nextInt(3).toLong, rnd.nextInt(8).toLong))
-      val cmsRaw = pos.groupBy(r => (r.i, r.pos)).map { case (k, xs) => k -> xs.size.toLong }
-      val cmsComb = splits(pos).flatMap(p => StreamingCms.combine(p.iterator))
-        .groupBy(r => (r.i, r.pos))
-        .map { case (k, xs) => k -> xs.map(_.n).sum }
-      assert(cmsComb == cmsRaw)
-      // Bloom: bitwise OR
-      val bits = Seq.fill(rnd.nextInt(200))(
-        StreamingBloom.WordBit(rnd.nextInt(4).toLong, 1L << rnd.nextInt(60)))
-      val bloomRaw = bits.groupBy(_.w).map { case (w, xs) => w -> xs.map(_.mask).reduce(_ | _) }
-      val bloomComb = splits(bits).flatMap(p => StreamingBloom.combine(p.iterator))
-        .groupBy(_.w).map { case (w, xs) => w -> xs.map(_.mask).reduce(_ | _) }
-      assert(bloomComb == bloomRaw)
+      for ((name, merge, plain, value) <- merges) {
+        val rows = Seq.fill(rnd.nextInt(200))(
+          (s"t${rnd.nextInt(3)}", rnd.nextInt(slots).toLong, value()))
+        val raw = rows.groupBy(_._1).map { case (k, xs) =>
+          k -> (0 until slots).map(i => xs.filter(_._2 == i).map(_._3).foldLeft(0L)(plain))
+        }
+        val comb = splits(rows).flatMap(p => Registers.combine(merge)(p.iterator))
+          .groupBy(_._1).map { case (k, xs) =>
+            k -> Registers.absorb(merge)(new Array[Long](slots), xs.iterator).toSeq
+          }
+        assert(comb == raw, s"combine-then-fold differs from the raw fold under $name")
+      }
       // KMV: distinct-sorted take-K
       val hs = Seq.fill(rnd.nextInt(200))(
         StreamingDistinctKmv.Hashed(s"t${rnd.nextInt(3)}", rnd.nextInt(50).toLong))
@@ -418,14 +412,6 @@ class KernelsSpec extends AnyFunSuite {
         }
       assert(kmvOf(splits(hs).flatMap(p =>
         StreamingDistinctKmv.combine(p.iterator))) == kmvOf(hs))
-      // quantile hist: additive bucket counts
-      val bk = Seq.fill(rnd.nextInt(200))(
-        StreamingQuantileHist.Bucketed(s"t${rnd.nextInt(3)}", rnd.nextInt(10).toLong - 1L))
-      val qRaw = bk.groupBy(r => (r.event_type, r.bucket)).map { case (k, xs) => k -> xs.size.toLong }
-      val qComb = splits(bk).flatMap(p => StreamingQuantileHist.combine(p.iterator))
-        .groupBy(r => (r.event_type, r.bucket))
-        .map { case (k, xs) => k -> xs.map(_.n).sum }
-      assert(qComb == qRaw)
     }
   }
 }

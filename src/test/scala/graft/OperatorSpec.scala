@@ -127,9 +127,25 @@ class OperatorSpec extends AnyFunSuite with BeforeAndAfterAll {
       lit(0L).as("n_chars"))
     graft.sources.Tables.documents(spark, Sf).unionByName(extra)
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    for (n <- (TextOps.queries.keys ++ MixOps.queries.keys).toSeq.sorted)
+    // MultiModalOps' document-only keys too (clip_prob reads the catalogue)
+    val mediaKeys = MultiModalOps.queries.keys.filterNot(_ == "clip_prob")
+    for (n <- (TextOps.queries.keys ++ MixOps.queries.keys ++ mediaKeys).toSeq.sorted)
       try SparkEntry.queries(n)(spark, dir).collect()
       catch { case e: Throwable => fail(s"$n threw on shingle-less documents: $e") }
+    // the NULL-text doc's media row is the oracle's: no size or
+    // dimensions, 0-valued headers, and no sampled frames
+    val meta = MultiModalOps.multimodalMeta(spark, dir).collect()
+      .map(r => r.getLong(0) -> r).toMap
+    val nullMeta = meta(1000000L)
+    for (c <- Seq("n_bytes", "width", "height", "n_frames"))
+      assert(nullMeta.isNullAt(nullMeta.fieldIndex(c)), s"NULL-text doc must carry NULL $c")
+    assert(nullMeta.getAs[Int]("header0") == 0 && nullMeta.getAs[Int]("header1") == 0,
+      "NULL-text doc's headers must be 0")
+    assert(meta(1000001L).getAs[Long]("n_bytes") == 0L, "empty-text doc has 0 bytes")
+    val frames = MultiModalOps.multimodalFrameSample(spark, dir)
+      .filter(col("doc_id") >= 1000000L).collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+    assert(frames.toSeq == Seq((1000001L, 0L, 0L)),
+      s"only the empty-text doc samples a frame, got ${frames.mkString(", ")}")
     val verified = SparkEntry.queries("ngram_jaccard")(spark, dir).collect()
       .count(r => !r.isNullAt(2) && r.getDouble(2) >= TextOps.JaccT).toLong
     val sweep = TextOps.lshBandSweep(spark, dir).collect().map(r => r.getLong(0) -> r.getLong(3)).toMap
@@ -1009,6 +1025,25 @@ class OperatorSpec extends AnyFunSuite with BeforeAndAfterAll {
     val defs = code.map { case (p, c) => p -> """\bval MaxBucket\b""".r.findAllIn(c).size }.filter(_._2 > 0)
     assert(defs == Seq("scala/graft/operators/Lsh.scala" -> 1),
       s"MaxBucket defined in ${defs.mkString(", ")} — use Lsh.MaxBucket")
+  }
+
+  /** Each mergeable sketch's hash salt is spelled once, in SketchOps,
+    * and its streaming twin calls the batch projection: a second copy
+    * can drift and break the batch/stream equality the oracle checks.
+    * Under graft/streaming only the register fold and the KMV twin
+    * pre-combine partitions; another `mapPartitions` is a hand-written
+    * sketch fold beside [[graft.streaming.Registers]]. */
+  test("sketch salts are spelled once and stream folds go through Registers") {
+    val code = scalaCode("src/main", dropSql = true)
+    for (salt <- Seq("hll:", "kmv:", "cm", "bf")) {
+      val spelled = s"""lit("$salt")"""
+      val n = code.map { case (_, c) => java.util.regex.Pattern.quote(spelled).r.findAllIn(c).size }.sum
+      assert(n == 1, s"$spelled appears $n times in src/main — call the SketchOps projection")
+    }
+    val folds = scalaCode("src/main/scala/graft/streaming")
+      .collect { case (p, c) if c.contains("mapPartitions(") => p }
+    assert(folds == Seq("Registers.scala", "StreamingDistinctKmv.scala"),
+      s"mapPartitions in ${folds.mkString(", ")} — fold a fixed-slot sketch through Registers")
   }
 
   /** Stream schemas come only from the parquet footer
